@@ -56,8 +56,7 @@ object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Cheap dataset-version stamp for per-session memos (GraphOps
-    * edgeMemo, DedupOps verdictMemo): a hash of the table's file set
+  /** Cheap dataset-version stamp for the per-session [[Memo]]s: a hash of the table's file set
     * (name, length, mtime). Keying a memo on it means a REWRITTEN
     * dataset at the same path gets a fresh build instead of a silently
     * stale checkpoint — the staleness hole a path-only key leaves
@@ -109,67 +108,6 @@ object Tables {
     * invocation; one line per path is signal, N lines is noise). */
   private val stampWarned =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Memo accessor for the version-stamped per-session caches
-    * (GraphOps edgeMemo, DedupOps pairMemo/sigMemo/verdictMemo):
-    * getOrElseUpdate PLUS eviction of superseded stamps (ADVICE r10)
-    * — when a dataset is rewritten in-session, the entry under the
-    * old stamp is dropped so its eagerly-checkpointed blocks become
-    * unreachable and Spark's ContextCleaner unpersists them with the
-    * GC'd RDD, instead of accumulating one dead checkpoint per
-    * rewrite in a long-lived driver.
-    *
-    * Eviction runs BOTH before and after the getOrElseUpdate: a
-    * concurrent caller still building under a superseded stamp can
-    * re-insert its stale entry between our pre-sweep and insert
-    * (ADVICE r11); the post-sweep catches that re-insertion. Lookups
-    * are always correct regardless (the stamp is in the key) — the
-    * race only concerns reclaiming the dead entry's checkpoint.
-    *
-    * `stamp` is BY-NAME and re-evaluated at each sweep (ADVICE r12):
-    * stamps are hashes, not ordered, so "differs from MY stamp" could
-    * not tell a superseded entry from a SUCCESSOR's — a laggard
-    * caller whose stamp predates a concurrent rewrite would evict the
-    * fresh entry a successor just built. Each sweep instead re-reads
-    * the AUTHORITATIVE stamp from the filesystem (one metadata
-    * round-trip) and protects both it and the caller's own entry; a
-    * laggard's mislabeled entry is then reclaimed by the next
-    * current-stamped caller's sweep, never the other way round. */
-  private[graft] def memoGetOrBuild[V](
-      memo: scala.collection.concurrent.TrieMap[(SparkSession, String, Long), V],
-      s: SparkSession, d: String, stamp: => Long)(build: => V): V = {
-    val mine = stamp
-    def sweep(): Unit = {
-      val live = stamp // versionStamp never throws (degrades to 0)
-      memo.keysIterator
-        .filter(k => k._1 == s && k._2 == d && k._3 != live && k._3 != mine)
-        .foreach { k =>
-          // r18 (ADVICE r17 #3): an evicted DataFrame entry's eager
-          // localCheckpoint holds executor-pinned blocks that only
-          // ContextCleaner GC would otherwise reclaim — a long-lived
-          // session that rewrites the corpus would accumulate one
-          // dead artifact per rewrite. Unpersist the checkpointed
-          // leaf RDDs explicitly on eviction. (A laggard thread still
-          // holding the evicted frame would recompute-fail rather
-          // than read stale data — the truncated lineage cannot
-          // rebuild — which is the correct failure for a reader of a
-          // superseded corpus version.) Non-DataFrame memo values
-          // (GraphOps' artifact bundle) keep the documented GC
-          // reliance; their blocks are edge-sized.
-          memo.remove(k).foreach {
-            case ds: org.apache.spark.sql.Dataset[_] =>
-              ds.queryExecution.optimizedPlan.collect {
-                case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-              }.foreach(_.unpersist(false))
-            case _ => ()
-          }
-        }
-    }
-    sweep()
-    val v = memo.getOrElseUpdate((s, d, mine), build)
-    sweep()
-    v
-  }
 
   /** Conditional ingest spread — the pipe5 rule, shared by every scan
     * kernel (pipe5/pipe6/x8/x13/voc*): kernel stages DECLARE their

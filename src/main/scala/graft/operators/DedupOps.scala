@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.functions.Fns._
 
 /** Deduplication operators for a large-scale training-data pipeline:
@@ -55,15 +55,9 @@ object DedupOps {
     * live in executor storage (never the driver), and they're freed
     * when the entry is dropped or the session ends. Bench/Verify
     * implications are recorded in SCALE.md (warm vs cold numbers).
-    * Keyed on (session, path, [[Tables.versionStamp]]) so an in-
-    * session rewrite of the dataset invalidates the entry (the
-    * verdictMemo/edgeMemo staleness discipline). */
-  private val pairMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Long), DataFrame]
-
-  /** Test/bench hook: drop memoized pair tables (e.g. between cold
-    * timing runs). */
-  private[graft] def clearPairMemo(): Unit = pairMemo.clear()
+    * Version-stamped: an in-session rewrite of the dataset
+    * invalidates the entry. */
+  private val pairMemo = Memo[DataFrame]("documents")
 
   /** d2 — MinHash + LSH near-dup: bigram shingles → 8 minhashes → 4
     * bands of 2 → equi-join on (band, band-key) → exact Jaccard ≥ 0.5
@@ -74,9 +68,7 @@ object DedupOps {
 
   /** Memoized face of [[computeD2Pairs]] — see [[pairMemo]]. */
   private[graft] def d2Pairs(s: SparkSession, d: String): DataFrame =
-    Tables.memoGetOrBuild(pairMemo, s, d,
-      Tables.versionStamp(d, "documents"))(
-      computeD2Pairs(s, d, D2_BROADCAST_MAX_DOCS))
+    pairMemo.get(s, d)(computeD2Pairs(s, d, D2_BROADCAST_MAX_DOCS))
 
   /** The O(N) MinHash signature table (doc_id, sh, mh) — the distinct
     * bigram shingle set as 8-byte md5-long KEYS (never the strings;
@@ -97,22 +89,10 @@ object DedupOps {
     * a checkpoint of signatures, never of the corpus. Version-stamp
     * keyed like [[pairMemo]] — an in-session dataset rewrite gets
     * fresh signatures. */
-  private val sigMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Long), DataFrame]
+  private val sigMemo = Memo[DataFrame]("documents")
 
-  /** Test/bench hook: drop memoized signature tables (e.g. between
-    * cold timing runs). */
-  private[graft] def clearSigMemo(): Unit = sigMemo.clear()
-
-  /** Probe/bench hook: build just the signature memo. */
-  private[graft] def primeSigOnly(s: SparkSession, d: String): Unit = {
-    signatures(s, d); ()
-  }
-
-  private def signatures(s: SparkSession, d: String): DataFrame =
-    Tables.memoGetOrBuild(sigMemo, s, d,
-      Tables.versionStamp(d, "documents"))(
-      buildSignatures(s, d))
+  private[graft] def signatures(s: SparkSession, d: String): DataFrame =
+    sigMemo.get(s, d)(buildSignatures(s, d))
 
   private def buildSignatures(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -204,16 +184,11 @@ object DedupOps {
     * plan branches + a distinct over band collisions). Memoized as
     * its own eager checkpoint of int-pair rows (VERDICT r12 #7:
     * d12's isolated 1.5 s was mostly this rebuild). */
-  private val candMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Long), DataFrame]
-
-  /** Test/bench hook: drop memoized candidate tables. */
-  private[graft] def clearCandMemo(): Unit = candMemo.clear()
+  private val candMemo = Memo[DataFrame]("documents")
 
   /** The distinct banded candidate pairs (i < j) — see [[candMemo]]. */
   private[graft] def bandedCandidates(s: SparkSession, d: String): DataFrame =
-    Tables.memoGetOrBuild(candMemo, s, d,
-      Tables.versionStamp(d, "documents")) {
+    candMemo.get(s, d) {
       val bands = bandKeys(signatures(s, d))
       bands.as("x")
         .join(bands.as("y"),
@@ -809,45 +784,16 @@ object DedupOps {
     * leak1 aggregates them, and a pipeline running both must pay the
     * band-join + verification exactly once per corpus version. The
     * stored relation is (doc_id, 7-char verdict) — signature-class
-    * narrow. Keyed on (session, path, [[Tables.versionStamp]]) so a
-    * dataset REWRITTEN at the same path within a session gets fresh
-    * verdicts, never stale ones (the ADVICE r9 staleness hole);
-    * entries persist for the session (verdict-sized), with
-    * [[clearVerdictMemo]] for long-lived drivers. */
-  private val verdictMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Long), DataFrame]
+    * narrow and version-stamped, so a dataset REWRITTEN at the same
+    * path within a session gets fresh verdicts, never stale ones.
+    * Bench primes signatures, candidates, pairs and verdicts as the
+    * `memo_dedup_sigs` line so the one-time cost never lands on
+    * whichever of d2/d7/d10/d12/d13/d14/d15/d17/leak1 runs first. */
+  private val verdictMemo = Memo[DataFrame]("documents")
 
-  /** Test/bench hook: drop memoized verdict tables. */
-  private[graft] def clearVerdictMemo(): Unit = verdictMemo.clear()
-
-  /** Bench hook: eagerly build the three shared dedup memos —
-    * signatures, the d2 pair table, the d10 verdict table — so their
-    * one-time cost is a bench line of its own (`memo_dedup_sigs`)
-    * instead of landing on whichever of d2/d7/d10/d12/d13/d14/d15/
-    * d17/leak1 runs first (the primeEdgeMemo discipline, VERDICT r12
-    * #7: d12's isolated 1.55 s was mostly this build). */
-  private[graft] def primeDedupMemos(s: SparkSession, d: String): Unit = {
-    // per-step stderr timings: the memo line is the single largest
-    // bench entry, so its internal split must stay measurable
-    // (VERDICT r13 #6) — these lines ride stderr like the partial-run
-    // report and never touch the stdout JSON contract
-    def step(name: String)(f: => Unit): Unit = {
-      val t0 = System.nanoTime()
-      f
-      System.err.println(
-        f"[graft]   memo_dedup_sigs/$name%-16s ${(System.nanoTime() - t0) / 1e9}%.3f s")
-    }
-    step("signatures") { signatures(s, d); () }
-    step("candidates") { bandedCandidates(s, d); () }
-    step("d2_pairs") { d2Pairs(s, d); () }
-    step("d10_verdicts") { d10(s, d); () }
-  }
-
-  private def d10(s: SparkSession, d: String): DataFrame =
+  private[graft] def d10(s: SparkSession, d: String): DataFrame =
     // eager checkpoint: verdicts are consumed repeatedly downstream
-    Tables.memoGetOrBuild(verdictMemo, s, d,
-      Tables.versionStamp(d, "documents"))(
-      d10Plan(s, d).localCheckpoint(true))
+    verdictMemo.get(s, d)(d10Plan(s, d).localCheckpoint(true))
 
   /** The lazy d10 plan — split out so PlanShapeSpec can assert the
     * PRE-checkpoint physical plan (after localCheckpoint the plan is
@@ -867,8 +813,7 @@ object DedupOps {
     * (NewOpsSpec: "directional banding loses no cross-split pair and
     * invents none"). */
   private[graft] def d10Plan(s: SparkSession, d: String): DataFrame =
-    d10Plan(s, d, reusePairs =
-      pairMemo.contains((s, d, Tables.versionStamp(d, "documents"))))
+    d10Plan(s, d, reusePairs = pairMemo.contains(s, d))
 
   private[graft] def d10Plan(s: SparkSession, d: String,
       reusePairs: Boolean): DataFrame = {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** Link-analysis over the graph implicit in the relational data: the
   * customer↔supplier bipartite graph, where an edge means "this
@@ -45,8 +45,7 @@ object GraphOps {
     * catalog.clearCache() between bench queries. The ×10 probe
     * motivated it: four co-purchase queries paid four identical
     * edge-build exchanges per run. */
-  private val edgeMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Long), EdgeArtifacts]
+  private val edgeMemo = Memo[EdgeArtifacts]("lineitem")
 
   /** The once-per-corpus-version graph artifacts every co-purchase
     * query shares (VERDICT r13 #1: gr2 paid a `count()` + a bloom
@@ -64,11 +63,8 @@ object GraphOps {
     * All four are corpus-version state a production pipeline
     * materializes once per graph build — the d2 signature-memo
     * discipline — and all are edge-/node-sized, never corpus-sized. */
-  private case class EdgeArtifacts(edges: DataFrame, nEdges: Long,
+  private[graft] case class EdgeArtifacts(edges: DataFrame, nEdges: Long,
       degrees: DataFrame, bloom: Array[Byte], symEdges: DataFrame)
-
-  /** Test/bench hook: drop memoized edge lists (cold-run timing). */
-  private[graft] def clearEdgeMemo(): Unit = edgeMemo.clear()
 
   /** Per-query scratch-cache registry (VERDICT r15 #3/#4). Several
     * graph queries persist transient edge-/node-sized frames that the
@@ -116,38 +112,14 @@ object GraphOps {
       : (SparkSession, String) => DataFrame =
     (s, d) => { releaseScratch(); f(s, d) }
 
-  /** Bench hook: eagerly build + checkpoint the shared co-purchase
-    * edge memo so its one-time cost is a BENCH LINE OF ITS OWN
-    * (`memo_copurchase_edges` in BENCH_FULL.json) instead of landing
-    * on whichever of gr2–gr5 happens to run first — which made those
-    * per-query timings order-dependent and a past "gr2 regressed"
-    * reading re-litigate the memo (VERDICT r9 watchlist). */
-  private[graft] def primeEdgeMemo(s: SparkSession, d: String): Unit = {
-    artifacts(s, d); ()
-  }
-
-  /** The shared co-purchase artifacts — memoized per (session, path,
-    * [[Tables.versionStamp]]): rewriting the dataset at the same path
-    * within a session invalidates the entry instead of serving stale
-    * edges (the ADVICE r9 staleness hole), and superseded stamps are
-    * evicted by [[Tables.memoGetOrBuild]] (ADVICE r10 — no dead
-    * checkpoint per rewrite). Entries live for the session —
-    * acceptable because they're edge-/node-sized, and
-    * [[clearEdgeMemo]] exists for long-lived drivers. */
-  private def artifacts(s: SparkSession, d: String): EdgeArtifacts =
-    Tables.memoGetOrBuild(edgeMemo, s, d,
-      Tables.versionStamp(d, "lineitem")) {
-      // per-step stderr timings, the primeDedupMemos discipline
-      // (VERDICT r14 #1): the memo line is the graph family's largest
-      // bench entry and the ×100 probe's one over-ceiling number rode
-      // an unattributed internal step — keep the split measurable
-      def step[A](name: String)(f: => A): A = {
-        val t0 = System.nanoTime()
-        val r = f
-        System.err.println(
-          f"[graft]   memo_copurchase/$name%-12s ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
+  /** The shared co-purchase artifacts — see [[edgeMemo]]. Bench primes
+    * them as the `memo_copurchase_edges` line so their one-time cost
+    * never lands on whichever of gr2–gr8 runs first. */
+  private[graft] def artifacts(s: SparkSession, d: String): EdgeArtifacts =
+    edgeMemo.get(s, d) {
+      // each step is timed to stderr: the memo line is the graph
+      // family's largest bench entry and the ×100 probe's one
+      // over-ceiling number rode an unattributed internal step.
       // JOIN form, kept after a measured bucket-collect NO-GO (r15,
       // SCALE.md): a per-order collect_set + kernel pair enumeration
       // cut the build (one lineitem exchange instead of two + SMJ,
@@ -183,7 +155,7 @@ object GraphOps {
       // same as SMJ (order fanout ≤7 anyway). The checkpoint's
       // partitioning is unchanged (the final pair distinct owns it),
       // so the r15 consumer-provenance lesson is not in play.
-      val e = step("edges") {
+      val e = Memo.timed("memo_copurchase", "edges") {
         val ip = Tables.lineitem(s, d)
           .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
         ip.select(col("o"), col("p").as("pa")).hint("shuffle_hash")
@@ -196,9 +168,9 @@ object GraphOps {
       // the census count is one in-memory pass over the fresh
       // checkpoint; it then sizes the bloom, so neither consumers nor
       // the sketch ever re-count the relation (VERDICT r13 #1)
-      val n = step("count")(e.count())
+      val n = Memo.timed("memo_copurchase", "count")(e.count())
       System.err.println(
-        s"[graft]   memo_copurchase/edges.n      $n " +
+        s"[graft]   memo_copurchase/edges.n          $n " +
           s"(parts ${e.rdd.getNumPartitions})")
       // NO-GO (r18, measured): running degrees and bloom as two
       // concurrent jobs (guide §2.6 — they are independent consumers
@@ -210,7 +182,7 @@ object GraphOps {
       // a 240M-row shuffle agg, so "idle cores" was the wrong model).
       // The ×100 regime is the one this memo line is judged in
       // (family dec2), so the steps stay serial.
-      val deg = step("degrees") {
+      val deg = Memo.timed("memo_copurchase", "degrees") {
         e.select(explode(array(col("pa"), col("pb"))).as("p"))
           .groupBy(col("p")).agg(count(lit(1)).as("deg"))
           .localCheckpoint(true)
@@ -227,7 +199,7 @@ object GraphOps {
       // raised cap a bloom degrades gracefully (less pruning, never
       // wrong answers — the exact join decides), which is the
       // documented 10¹²-edge posture in SCALE.md.
-      val bf = step("bloom") {
+      val bf = Memo.timed("memo_copurchase", "bloom") {
         // cap the PARTIAL-sketch count (r15, measured by the per-step
         // profile at ×100): every scan task materializes its own
         // full-size partial sketch — optimalNumOfBits(n, 0.03)/8
@@ -511,9 +483,14 @@ object GraphOps {
     // through the exchange (31-bit id gate) was plan-identical in
     // shape but flat in three same-window pairs at sf0.1/x10 — and
     // the gate is false at true 10¹²-edge ids anyway; reverted.
-    gr3TopK(s, d, bcastAnti = art.nEdges * 16L <=
+    gr3TopK(s, d, bcastAnti = art.nEdges * GR3_BCAST_BYTES_PER_EDGE <=
       s.sessionState.conf.autoBroadcastJoinThreshold)
   }
+
+  /** gr3's broadcast-gate size per edge: a broadcast hash relation of
+    * 2-long UnsafeRows costs 3-5× the 16 raw bytes (row header + hash
+    * map), so 48 B keeps the forced broadcast within the threshold. */
+  private[graft] val GR3_BCAST_BYTES_PER_EDGE = 48L
 
   /** [[gr3]] with the anti-join gate explicit, so the law spec can
     * force both shapes and pin them row-identical (r18). */

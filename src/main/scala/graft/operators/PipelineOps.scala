@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.functions.Fns.{md5Long, roundFp, toks}
 
 /** Composed end-to-end curation pipeline — the proof that the
@@ -378,10 +378,8 @@ object PipelineOps {
     * definition consumed by the pipe5 census and pipe9's funnel (the
     * pipe8 anti-drift rule: the funnel's quality stage IS the
     * registered gate, not a re-typed copy of its thresholds). */
-  private def pipe5PerDoc(s: SparkSession, d: String): DataFrame =
-    Tables.memoGetOrBuild(perDocMemo, s, d,
-      Tables.versionStamp(d, "documents"))(
-      computePipe5PerDoc(s, d).localCheckpoint(true))
+  private[graft] def pipe5PerDoc(s: SparkSession, d: String): DataFrame =
+    perDocMemo.get(s, d)(computePipe5PerDoc(s, d).localCheckpoint(true))
 
   /** Per-session memos of the two per-train-doc verdict relations the
     * composed pipelines share: [[pipe5PerDoc]] (quality flags) feeds
@@ -393,44 +391,10 @@ object PipelineOps {
     * one narrow row per doc (id + flags / id + count), never corpus
     * text — so the blocks are doc-count-sized, survive
     * `catalog.clearCache()` between bench queries, and free when the
-    * entry drops or the session ends. Version-stamp keyed like
-    * DedupOps.pairMemo: an in-session dataset rewrite invalidates. */
-  private val perDocMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Long), DataFrame]
-  private val hitsMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Long), DataFrame]
-
-  /** Test/bench hook: drop the shared pipeline memos (cold runs). */
-  private[graft] def clearPipeMemos(): Unit = {
-    perDocMemo.clear(); hitsMemo.clear()
-  }
-
-  /** Bench hook: build the shared per-doc relations up front so the
-    * one-time cost is its own attributed line instead of landing on
-    * whichever of pipe5/pipe6/pipe9 runs first (the
-    * memo_copurchase_edges convention in [[graft.Bench]]). */
-  private[graft] def primePipeMemos(s: SparkSession, d: String): Unit = {
-    // per-step stderr timings — the memo_copurchase/memo_dedup_sigs
-    // discipline: a memo line's internal split must stay measurable
-    def step(name: String)(f: => Unit): Unit = {
-      val t0 = System.nanoTime()
-      f
-      System.err.println(
-        f"[graft]   memo_pipeline/$name%-12s ${(System.nanoTime() - t0) / 1e9}%.3f s")
-    }
-    // the two verdict relations are independent (different source
-    // tables, no shared subtree), so they build as two concurrent
-    // jobs (guide §2.6 — overlap independent jobs; the r18
-    // copurchase degrees∥bloom discipline): pipe5's per-doc stats
-    // pass back-fills the cores pipe6's decontam join leaves idle
-    // between its stages. Await rethrows a scratch-thread failure.
-    val p5 = scala.concurrent.Future(
-      step("pipe5_perdoc") { pipe5PerDoc(s, d); () })(
-      scala.concurrent.ExecutionContext.global)
-    step("pipe6_hits") { pipe6Hits(s, d); () }
-    scala.concurrent.Await.result(
-      p5, scala.concurrent.duration.Duration.Inf)
-  }
+    * entry drops or the session ends. Bench primes both as the
+    * `memo_pipeline_perdoc` line. */
+  private[graft] val perDocMemo = Memo[DataFrame]("documents")
+  private[graft] val hitsMemo = Memo[DataFrame]("documents")
 
   /** The per-doc Gopher statistics IN the scan kernel (r15; the r12
     * in-row HOF form before it, the exploded (doc_id, tok) exchange
@@ -564,10 +528,8 @@ object PipelineOps {
     * n_shared distinct test shingles) — ONE definition consumed by
     * the pipe6 census and pipe9's funnel (the anti-drift rule).
     * Memoized + checkpointed — see [[perDocMemo]]. */
-  private def pipe6Hits(s: SparkSession, d: String): DataFrame =
-    Tables.memoGetOrBuild(hitsMemo, s, d,
-      Tables.versionStamp(d, "documents"))(
-      computePipe6Hits(s, d))
+  private[graft] def pipe6Hits(s: SparkSession, d: String): DataFrame =
+    hitsMemo.get(s, d)(computePipe6Hits(s, d))
 
   /** Returns the per-doc hit relation ALREADY eagerly checkpointed:
     * the gate scratch (the persisted test-shingle set, the broadcast

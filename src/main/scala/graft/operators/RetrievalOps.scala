@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.functions.Fns.{roundFp, strJoin, toks}
 
 /** Retrieval and vocabulary operators — the eval-set / tokenizer side
@@ -303,21 +303,10 @@ object RetrievalOps {
     * docs×candidate-langs rows of (long, string, string, long) —
     * the d10-verdict posture, narrow and docs-sized, never
     * token-sized. */
-  private val nbMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Long), DataFrame]
-
-  /** Test hook (the clearPairMemo convention). */
-  private[graft] def clearNbMemo(): Unit = nbMemo.clear()
-
-  /** Bench hook: build just the NB doc-score memo. */
-  private[graft] def primeNbMemo(s: SparkSession, d: String): Unit = {
-    nbDocScores(s, d); ()
-  }
+  private[graft] val nbMemo = Memo[DataFrame]("documents")
 
   private[graft] def nbDocScores(s: SparkSession, d: String): DataFrame =
-    Tables.memoGetOrBuild(nbMemo, s, d,
-      Tables.versionStamp(d, "documents"))(
-      buildNbDocScores(s, d).localCheckpoint(true))
+    nbMemo.get(s, d)(buildNbDocScores(s, d).localCheckpoint(true))
 
   /** The per-document NB candidate scores (doc_id, lang, m_lang,
     * score) under the cls2 restricted-vocab integer-log2 model —

@@ -22,9 +22,17 @@ import graft.operators.GraphOps
 class GraphLawSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
+  // the oracle's own gate SF: a non-trivial wedge stream for gr3
+  private val gateSf = "/root/testdata/sf0.01"
 
   private def labelSet(df: DataFrame): Set[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  private def under[A](confs: (String, String)*)(body: => A): A = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.get(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
 
   test("gr5 labels are invariant under forced join strategies " +
     "(broadcast vs shuffle-hash vs sort-merge)") {
@@ -32,11 +40,6 @@ class GraphLawSpec extends SparkSpec {
     // (a) broadcast wherever size allows (generous threshold),
     // (b) no broadcast, shuffled-hash preferred,
     // (c) no broadcast, sort-merge forced.
-    def under(confs: (String, String)*)(body: => Set[(Long, Long)]) = {
-      val saved = confs.map { case (k, _) => k -> spark.conf.get(k) }
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
-    }
     val bcast = under(
       "spark.sql.autoBroadcastJoinThreshold" -> (64L << 20).toString) {
       labelSet(GraphOps.gr5Labels(spark, sf))
@@ -119,10 +122,9 @@ class GraphLawSpec extends SparkSpec {
 
   test("gr3's broadcast anti join equals the bloom-split form " +
     "(r18 — definite U settled = anti-join-all, ORDER included)") {
-    // the gate-scale corpus (sf0.01 — the oracle's own gate SF) so the
-    // wedge stream is non-trivial; collect ordered rows, not sets: the
-    // top-K ORDER is part of the contract
-    val gateSf = "/root/testdata/sf0.01"
+    // the gate-scale corpus so the wedge stream is non-trivial;
+    // collect ordered rows, not sets: the top-K ORDER is part of the
+    // contract
     def rows(bcast: Boolean): Seq[(Long, Long, Long)] =
       GraphOps.gr3TopK(spark, gateSf, bcastAnti = bcast)
         .collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -130,7 +132,27 @@ class GraphLawSpec extends SparkSpec {
     assert(split.nonEmpty)
     assert(rows(bcast = true) == split,
       "gr3 broadcast-anti diverges from the bloom-split form")
+    GraphOps.releaseScratch() // the split path registered its cn persist
     spark.catalog.clearCache()
+  }
+
+  test("gr3's broadcast gate prices an edge at the hash-relation cost, " +
+    "not its 16 raw bytes: a threshold between 16 and 48 B/edge takes " +
+    "the bloom-split path") {
+    val nEdges = GraphOps.artifacts(spark, sf).nEdges
+    assert(nEdges > 0 && GraphOps.GR3_BCAST_BYTES_PER_EDGE > 32L)
+    GraphOps.releaseScratch()
+    val persisted = () => spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val base = persisted()
+    // only the split path persists (and registers) its pair counts
+    val split = under(
+      "spark.sql.autoBroadcastJoinThreshold" -> (32L * nEdges).toString) {
+      SparkEntry.queries("gr3_link_predict")(spark, sf)
+        .queryExecution.toRdd.count()
+      (persisted() -- base).nonEmpty
+    }
+    GraphOps.releaseScratch()
+    assert(split, "gr3 broadcast an edge list priced over the threshold")
   }
 
   test("gr5's round-0→1 frontier is the FULL node set (r18 — the " +

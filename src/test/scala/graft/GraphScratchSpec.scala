@@ -32,7 +32,7 @@ class GraphScratchSpec extends SparkSpec {
 
   test("lazy graph queries register their scratch persists and " +
     "releaseScratch returns the storage catalog to baseline") {
-    GraphOps.primeEdgeMemo(spark, sf)
+    primeMemo("memo_copurchase_edges", sf)
     GraphOps.releaseScratch()
     val base = persistedIds
     // every lazy-plan query that persists scratch: after a standalone
@@ -64,7 +64,7 @@ class GraphScratchSpec extends SparkSpec {
 
   test("the next graph query's entry releases its predecessor's " +
     "scratch (the owned-entry handshake)") {
-    GraphOps.primeEdgeMemo(spark, sf)
+    primeMemo("memo_copurchase_edges", sf)
     GraphOps.releaseScratch()
     val base = persistedIds
     run("gr2_triangles")
@@ -79,7 +79,7 @@ class GraphScratchSpec extends SparkSpec {
 
   test("self-releasing queries (gr5/gr7/gr8) leave the catalog clean " +
     "modulo gr5's own materialized result") {
-    GraphOps.primeEdgeMemo(spark, sf)
+    primeMemo("memo_copurchase_edges", sf)
     GraphOps.releaseScratch()
     val base = persistedIds
     for (q <- Seq("gr7_kcore", "gr8_hop_histogram")) {

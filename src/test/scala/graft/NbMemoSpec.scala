@@ -17,10 +17,10 @@ class NbMemoSpec extends SparkSpec {
     "hook), and the memoized relation survives catalog.clearCache()") {
     val names = Seq("cls2_nb_confusion", "cls4_calibrated_filter",
       "cal1_margin_calibration", "al1_uncertain_topk")
-    operators.RetrievalOps.clearNbMemo()
+    operators.RetrievalOps.nbMemo.clear()
     val cold = names.map(n => n -> q(n).collect().map(_.toString).sorted)
-    operators.RetrievalOps.clearNbMemo()
-    operators.RetrievalOps.primeNbMemo(spark, sf)
+    operators.RetrievalOps.nbMemo.clear()
+    primeMemo("memo_nb_scores", sf)
     spark.catalog.clearCache() // what Bench does between queries
     for ((n, c) <- cold) {
       val warm = q(n).collect().map(_.toString).sorted
@@ -44,7 +44,7 @@ class NbMemoSpec extends SparkSpec {
   test("the memoized nb relation row-equals the direct unmemoized " +
     "build (ADVICE r17 #2 — memo-vs-build equivalence pinned " +
     "directly, not just transitively through consumers)") {
-    operators.RetrievalOps.clearNbMemo()
+    operators.RetrievalOps.nbMemo.clear()
     val memoized = operators.RetrievalOps.nbDocScores(spark, sf)
       .collect().map(_.toString).sorted
     val direct = operators.RetrievalOps.buildNbDocScores(spark, sf)

@@ -2,9 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Round-11 additions: the memo-eviction discipline
-  * ([[Tables.memoGetOrBuild]]), the Hadoop-FS version stamp, and the
-  * g12 CMS width-vs-error curve laws.
+/** Round-11 additions: the memo-eviction discipline ([[Memo]]), the
+  * Hadoop-FS version stamp, and the g12 CMS width-vs-error curve laws.
   */
 class Round11OpsSpec extends SparkSpec {
 
@@ -35,25 +34,24 @@ class Round11OpsSpec extends SparkSpec {
     assert(Tables.versionStamp("bogus-scheme://x/y", "t") == 0L)
   }
 
-  // ---- memoGetOrBuild ---------------------------------------------
+  // ---- Memo eviction ----------------------------------------------
 
   test("memoGetOrBuild: superseded stamps for the same (session, " +
     "path) are evicted on insert, other paths are untouched, and a " +
     "repeated call under the same stamp does not rebuild") {
-    val memo = scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, String, Long), String]
+    val memo = Memo[String]("documents")
     var builds = 0
     def build(v: String): String = { builds += 1; v }
-    assert(Tables.memoGetOrBuild(memo, spark, "/a", 1L)(build("a1")) == "a1")
-    assert(Tables.memoGetOrBuild(memo, spark, "/b", 7L)(build("b7")) == "b7")
+    assert(memo.getStamped(spark, "/a", 1L)(build("a1")) == "a1")
+    assert(memo.getStamped(spark, "/b", 7L)(build("b7")) == "b7")
     // same stamp → memo hit, no rebuild
-    assert(Tables.memoGetOrBuild(memo, spark, "/a", 1L)(build("a1x")) == "a1")
+    assert(memo.getStamped(spark, "/a", 1L)(build("a1x")) == "a1")
     assert(builds == 2)
     // new stamp for /a → rebuild AND the stale stamp-1 entry is gone
-    assert(Tables.memoGetOrBuild(memo, spark, "/a", 2L)(build("a2")) == "a2")
+    assert(memo.getStamped(spark, "/a", 2L)(build("a2")) == "a2")
     assert(builds == 3)
-    assert(memo.keySet == Set((spark, "/a", 2L), (spark, "/b", 7L)),
-      s"stale stamp survived: ${memo.keySet}")
+    assert(memo.entries.keySet == Set((spark, "/a", 2L), (spark, "/b", 7L)),
+      s"stale stamp survived: ${memo.entries.keySet}")
   }
 
   // ---- g12 ----------------------------------------------------------

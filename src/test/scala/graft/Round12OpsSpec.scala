@@ -275,10 +275,12 @@ class Round12OpsSpec extends SparkSpec {
     "(memos just cleared) and warm (memos primed via the Bench hook), " +
     "and the memoized relations survive catalog.clearCache() — the " +
     "property that makes the sharing real across bench queries") {
-    operators.PipelineOps.clearPipeMemos()
+    operators.PipelineOps.perDocMemo.clear()
+    operators.PipelineOps.hitsMemo.clear()
     val cold = q("pipe9_funnel").collect().map(_.toString).sorted
-    operators.PipelineOps.clearPipeMemos()
-    operators.PipelineOps.primePipeMemos(spark, sf)
+    operators.PipelineOps.perDocMemo.clear()
+    operators.PipelineOps.hitsMemo.clear()
+    primeMemo("memo_pipeline_perdoc", sf)
     spark.catalog.clearCache() // what Bench does between queries
     val warm = q("pipe9_funnel").collect().map(_.toString).sorted
     assert(cold.sameElements(warm), "cold/warm pipe9 outputs differ")

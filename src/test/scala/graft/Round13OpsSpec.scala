@@ -4,7 +4,7 @@ package graft
   * wedge-budget gr3 cap, and bench/ETL fidelity fixes. */
 class Round13OpsSpec extends SparkSpec {
 
-  // ---- memoGetOrBuild laggard safety (ADVICE r12) -------------------
+  // ---- Memo laggard safety (ADVICE r12) -----------------------------
   // The by-name stamp is evaluated once for the caller's own key
   // ("mine") and once per sweep ("live", the authoritative re-read) —
   // these tests model a laggard whose first evaluation predates a
@@ -13,40 +13,38 @@ class Round13OpsSpec extends SparkSpec {
   test("memoGetOrBuild: a laggard caller whose stamp predates a " +
     "rewrite can no longer evict the successor's fresh entry, and " +
     "the next current-stamp caller reclaims the laggard's own entry") {
-    val memo = scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, String, Long), String]
+    val memo = Memo[String]("documents")
     // successor already built under the current on-disk stamp 2
-    assert(Tables.memoGetOrBuild(memo, spark, "/a", 2L)("v2") == "v2")
+    assert(memo.getStamped(spark, "/a", 2L)("v2") == "v2")
     // laggard: its own stamp read (first evaluation) returned 1; by
     // the time its sweeps re-read the filesystem, the stamp is 2
     var evals = 0
     def laggardStamp: Long = { evals += 1; if (evals == 1) 1L else 2L }
-    assert(Tables.memoGetOrBuild(memo, spark, "/a", laggardStamp)("v1") == "v1")
+    assert(memo.getStamped(spark, "/a", laggardStamp)("v1") == "v1")
     assert(evals >= 2, "stamp was not re-evaluated at sweep time")
-    assert(memo.contains((spark, "/a", 2L)),
-      s"successor entry evicted by laggard: ${memo.keySet}")
+    assert(memo.entries.contains((spark, "/a", 2L)),
+      s"successor entry evicted by laggard: ${memo.entries.keySet}")
     // the laggard's mislabeled entry survives its OWN call (evicting
     // a relation mid-use would unpersist blocks under the caller)...
-    assert(memo.contains((spark, "/a", 1L)))
+    assert(memo.entries.contains((spark, "/a", 1L)))
     // ...and is reclaimed by the next caller whose stamp is current
-    assert(Tables.memoGetOrBuild(memo, spark, "/a", 2L)("v2x") == "v2")
-    assert(memo.keySet == Set((spark, "/a", 2L)),
-      s"laggard entry not reclaimed: ${memo.keySet}")
+    assert(memo.getStamped(spark, "/a", 2L)("v2x") == "v2")
+    assert(memo.entries.keySet == Set((spark, "/a", 2L)),
+      s"laggard entry not reclaimed: ${memo.entries.keySet}")
   }
 
   test("memoGetOrBuild: the sweep reclaims entries matching neither " +
     "the caller's stamp nor the live stamp, across two rewrites") {
-    val memo = scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, String, Long), String]
-    memo.put((spark, "/a", 1L), "dead")  // two rewrites ago
-    memo.put((spark, "/a", 5L), "fresh") // current on-disk stamp
-    memo.put((spark, "/b", 1L), "otherpath")
+    val memo = Memo[String]("documents")
+    memo.entries.put((spark, "/a", 1L), "dead")  // two rewrites ago
+    memo.entries.put((spark, "/a", 5L), "fresh") // current on-disk stamp
+    memo.entries.put((spark, "/b", 1L), "otherpath")
     var evals = 0
     def stamp: Long = { evals += 1; if (evals == 1) 3L else 5L }
-    Tables.memoGetOrBuild(memo, spark, "/a", stamp)("mid")
-    assert(!memo.contains((spark, "/a", 1L)), "two-rewrites-old entry kept")
-    assert(memo.contains((spark, "/a", 5L)), "current-stamp entry evicted")
-    assert(memo.contains((spark, "/b", 1L)), "other path swept")
+    memo.getStamped(spark, "/a", stamp)("mid")
+    assert(!memo.entries.contains((spark, "/a", 1L)), "two-rewrites-old entry kept")
+    assert(memo.entries.contains((spark, "/a", 5L)), "current-stamp entry evicted")
+    assert(memo.entries.contains((spark, "/b", 1L)), "other path swept")
   }
 
   // ---- tok1 kernel ≡ SQL lockstep (r13 review #6) --------------------

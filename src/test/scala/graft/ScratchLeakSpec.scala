@@ -15,8 +15,7 @@ import graft.operators.GraphOps
   *     through the raw RDD API where the SQL cache (and therefore
   *     Bench's per-query clear, and any caller's clearCache) cannot
   *     reach it. Checkpointed blocks are exempt: they are either
-  *     corpus-version memo state with an owner ([[graft.Tables
-  *     .memoGetOrBuild]]) or a query's own eagerly-materialized
+  *     corpus-version memo state with an owner ([[graft.Memo]]) or a query's own eagerly-materialized
   *     result, and lineage truncation makes unpersisting them unsafe
   *     by construction.
   *
@@ -73,9 +72,8 @@ class ScratchLeakSpec extends SparkSpec {
     "scratch-leaving queries is pinned exactly in both directions") {
     val sc = spark.sparkContext
     // memo state up front so its checkpoint blocks join the baseline
-    GraphOps.primeEdgeMemo(spark, sf)
-    graft.operators.PipelineOps.primePipeMemos(spark, sf)
-    graft.operators.DedupOps.primeDedupMemos(spark, sf)
+    Seq("memo_copurchase_edges", "memo_pipeline_perdoc", "memo_dedup_sigs")
+      .foreach(primeMemo(_, sf))
     GraphOps.releaseScratch()
     spark.catalog.clearCache()
     var base = sc.getPersistentRDDs.keySet.toSet

@@ -29,6 +29,19 @@ class SourceInvariantSpec extends AnyFunSuite {
       kids.filter(_.isDirectory).flatMap(scalaSources)
   }
 
+  private val mainRoot = new java.io.File("src/main/scala/graft")
+
+  /** A source file's code with line comments and scaladoc stripped, so
+    * prose mentions don't trip the checks. */
+  private def code(f: java.io.File): String = {
+    val src = scala.io.Source.fromFile(f, "UTF-8")
+    try src.getLines()
+      .map(l => l.replaceAll("//.*$", ""))
+      .filterNot(l => l.trim.startsWith("*") || l.trim.startsWith("/**"))
+      .mkString("\n")
+    finally src.close()
+  }
+
   /** Files allowed to localCheckpoint: each stores SIGNATURE-CLASS
     * narrow relations only, never a corpus projection. DedupOps
     * checkpoints (doc_id, hashed-shingle, minhash) signatures;
@@ -50,17 +63,9 @@ class SourceInvariantSpec extends AnyFunSuite {
   test("localCheckpoint call sites match the audited allowlist " +
     "EXACTLY (file and count) — corpus-scale projections must " +
     "persist(MEMORY_AND_DISK)") {
-    val root = new java.io.File("src/main/scala/graft")
-    assert(root.isDirectory, s"source root not found at ${root.getAbsolutePath}")
-    val counts = scalaSources(root).flatMap { f =>
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      // strip line comments and scaladoc so prose mentions don't trip it
-      val code = try src.getLines()
-        .map(l => l.replaceAll("//.*$", ""))
-        .filterNot(l => l.trim.startsWith("*") || l.trim.startsWith("/**"))
-        .mkString("\n")
-      finally src.close()
-      val occ = code.sliding(".localCheckpoint(".length)
+    assert(mainRoot.isDirectory, s"source root not found at ${mainRoot.getAbsolutePath}")
+    val counts = scalaSources(mainRoot).flatMap { f =>
+      val occ = code(f).sliding(".localCheckpoint(".length)
         .count(_ == ".localCheckpoint(")
       if (occ > 0) Some(f.getName -> occ) else None
     }.toMap
@@ -70,6 +75,16 @@ class SourceInvariantSpec extends AnyFunSuite {
         "relations must keep lineage; use " +
         "persist(StorageLevel.MEMORY_AND_DISK) instead, or re-audit " +
         "and re-pin")
+  }
+
+  test("TrieMap is declared only in Memo.scala — every per-session " +
+    "memo goes through the one version-stamped registry, so a " +
+    "hand-rolled memo map fails here by name") {
+    assert(mainRoot.isDirectory, s"source root not found at ${mainRoot.getAbsolutePath}")
+    val users = scalaSources(mainRoot).filter(code(_).contains("TrieMap"))
+      .map(_.getName).toSet
+    assert(users == Set("Memo.scala"),
+      s"TrieMap outside the memo registry: ${users - "Memo.scala"}")
   }
 
   test("Bench's short-key mapping stays bijective with " +

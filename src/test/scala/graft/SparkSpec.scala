@@ -17,6 +17,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  /** Build one `Bench.memoBuilds` line the way Bench primes it. */
+  def primeMemo(name: String, dir: String): Unit =
+    Bench.memoBuilds.find(_._1 == name).get._3(spark, dir)
+
   override def afterAll(): Unit = {
     // shared across suites in one JVM; let the JVM exit clean it up
     super.afterAll()

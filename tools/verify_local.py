@@ -66,6 +66,11 @@ def main():
             n_fail += 1
             continue
         path = os.path.join(out_dir, name)
+        if not any(f.endswith(".parquet") for f in os.listdir(path)):
+            print(f"  [FAIL-miss] {name}: no parquet files in the spark "
+                  f"output dir (query crashed mid-write?)")
+            n_fail += 1
+            continue
         srel = con.sql(f"SELECT * FROM '{path}/*.parquet'")
         sbad = nonscalar_cols(srel.columns, srel.types)
         if sbad:
