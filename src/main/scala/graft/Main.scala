@@ -31,7 +31,7 @@ object Main {
     val Array(xmlPath, outDir) = args
     val spark = GraftSession.local("graft-osm")
 
-    val docs = readCollection(spark, xmlPath).cache()
+    val docs = OsmXmlSource.collection(spark, xmlPath).cache()
 
     JsonLinesSink.write(docs, s"$outDir/docs_jsonl")
     ParquetSink.write(docs, s"$outDir/docs_parquet")
@@ -52,15 +52,6 @@ object Main {
     spark.stop()
   }
 
-  /** The shaped collection. The parallel-parse ingest (pre-chunking a
-    * non-splittable over-threshold extract, with single-file +
-    * post-scan redistribution as the fallback) now lives INSIDE
-    * `OsmXmlSource.collection` (VERDICT r13 #7) — the dump flow and
-    * mongo-load just read. */
-  private def readCollection(spark: org.apache.spark.sql.SparkSession,
-      xmlPath: String): org.apache.spark.sql.DataFrame =
-    OsmXmlSource.collection(spark, xmlPath)
-
   /** The live-connector load path. Separated so a misconfigured env
     * fails BEFORE a SparkSession spins up (MongoSinkConfig's
     * requires), and the actual write is exactly the library's
@@ -75,7 +66,7 @@ object Main {
       sys.env.getOrElse("SPARK_GRAFT_MONGO_COLLECTION", "documents"))
     val spark = GraftSession.local("graft-mongo-load")
     try {
-      val docs = readCollection(spark, args(0))
+      val docs = OsmXmlSource.collection(spark, args(0))
       val bad = graft.sinks.MongoExtendedJson.invalidFieldNames(docs.schema)
       require(bad.isEmpty,
         s"schema has Mongo-invalid field names: ${bad.mkString(", ")}")

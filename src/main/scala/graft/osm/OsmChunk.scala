@@ -48,8 +48,10 @@ object OsmChunk {
     * the cut scanner's CUT POSITIONS or the fragment framing — a
     * pure-throughput rewrite that provably preserves cuts (the r15
     * skip-scan form, pinned cut-identical by the chunk-parity sweep)
-    * does not. v2 = PI-aware scanner. */
-  private[osm] val FormatVersion = 2
+    * does not. v2 = PI-aware scanner; v3 = the scanner itself detects
+    * a live `<!DOCTYPE` (a prologue over 16 MiB, or one holding
+    * `<!DOCTYPE` text inside a PI, used to force one fragment). */
+  private[osm] val FormatVersion = 3
 
   private val patterns: Seq[Array[Byte]] =
     Seq("<node", "<way", "<relation").map(_.getBytes("US-ASCII"))
@@ -59,6 +61,7 @@ object OsmChunk {
   private val CdataClose = "]]>".getBytes("US-ASCII")
   private val PiOpen = "<?".getBytes("US-ASCII")
   private val PiClose = "?>".getBytes("US-ASCII")
+  private val Doctype = "<!DOCTYPE".getBytes("US-ASCII")
   /** Longest lexeme the scanner must see whole — the buffer overlap. */
   private val MaxLexeme = CdataOpen.length + 1
 
@@ -86,22 +89,12 @@ object OsmChunk {
     false
   }
 
-  /** Earliest top-level element start at or after `from` in `buf`
-    * (comment/CDATA-blind — the single-window helper the boundary
-    * unit spec exercises; [[findCuts]] is the stateful scanner the
-    * chunker actually uses), or -1. */
-  private[osm] def nextBoundary(buf: Array[Byte], from: Int, len: Int): Int = {
-    var i = math.max(from, 0)
-    while (i < len) {
-      if (buf(i) == '<' && isBoundary(buf, i, len)) return i
-      i += 1
-    }
-    -1
-  }
-
   /** ONE sequential pass over the file: for each ascending target
     * offset, the first top-level element start AT OR AFTER it that is
-    * not inside a comment or CDATA section. The full scan (rather
+    * not inside a comment, CDATA section or PI — or no cuts at all
+    * once a live `<!DOCTYPE` appears (a DTD internal subset may embed
+    * markup the scanner does not lex; a DOCTYPE is only legal before
+    * the root, so it is always met before any cut). The full scan (rather
     * than probe-seeks) is the soundness price — a probe landing
     * inside `<!-- ... -->` cannot know it without left context; the
     * scan is O(bytes) exactly like the copy that follows. */
@@ -151,6 +144,8 @@ object OsmChunk {
                   // contain raw '<' in their content (ADVICE r13 —
                   // the xml declaration is also lexed here, harmless)
                   state = 3; i += PiOpen.length
+                } else if (matchesAt(buf, i, want, Doctype)) {
+                  return Nil
                 } else {
                   if (isBoundary(buf, i, want)) {
                     val off = base + i
@@ -202,50 +197,6 @@ object OsmChunk {
       .getBytes("UTF-8")
   private val footer = "</osm>\n".getBytes("UTF-8")
 
-  /** Does the file's prologue carry a DTD? A DOCTYPE is only legal
-    * BEFORE the root element, so the scan reads until the first
-    * UNCOMMENTED `<osm` root start (a commented-out DOCTYPE is
-    * harmless — [[findCuts]] skips comments), answering true the
-    * moment an uncommented `<!DOCTYPE` appears first. The prologue is
-    * read in full up to a 16 MiB cap (legal prologues are
-    * comments/PIs/whitespace — a fixed 4 KiB window missed any
-    * DOCTYPE behind a long comment, r13 review); past the cap the
-    * answer is conservatively TRUE (single-fragment copy, never a
-    * risked cut). */
-  private[osm] def hasDoctype(in: String): Boolean = {
-    val raf = new RandomAccessFile(in, "r")
-    try {
-      val cap = 16 << 20
-      val n = math.min(raf.length(), cap.toLong).toInt
-      val buf = new Array[Byte](n)
-      var got = 0
-      while (got < n) {
-        val r = raf.read(buf, got, n - got)
-        if (r <= 0) return true // unreadable prologue: be conservative
-        got += r
-      }
-      val doctype = "<!DOCTYPE".getBytes("US-ASCII")
-      val root = "<osm".getBytes("US-ASCII")
-      var i = 0
-      var inComment = false
-      while (i < n) {
-        if (inComment) {
-          if (matchesAt(buf, i, n, CommentClose)) { inComment = false; i += 3 }
-          else i += 1
-        } else if (buf(i) == '<') {
-          if (matchesAt(buf, i, n, CommentOpen)) { inComment = true; i += 4 }
-          else if (matchesAt(buf, i, n, doctype)) return true
-          else if (matchesAt(buf, i, n, root) &&
-            i + root.length < n && isBoundaryFollower(buf(i + root.length)))
-            return false // root reached, no DTD before it
-          else i += 1
-        } else i += 1
-      }
-      // prologue longer than the cap (or no root found): conservative
-      raf.length() > n
-    } finally raf.close()
-  }
-
   /** Split `in` into ≤ `n` well-formed `.osm` fragment files under
     * `outDir` (created, or cleared if already a directory), returning
     * the fragment count. Fragment k>0 gets a synthetic header;
@@ -268,9 +219,7 @@ object OsmChunk {
     try {
       val len = raf.length()
       val targets = (1 until n).map(k => len * k / n).distinct
-      val mids =
-        if (hasDoctype(in)) Nil else findCuts(in, targets)
-      val cuts = 0L +: mids :+ len
+      val cuts = 0L +: findCuts(in, targets) :+ len
       val src = raf.getChannel
       var i = 0
       while (i < cuts.length - 1) {

@@ -2,8 +2,11 @@ package graft.osm
 
 import java.io.{BufferedWriter, File, FileWriter}
 
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.GraftSession
+import graft.{GraftSession, Memo}
 import graft.sinks.MongoImportSink
 
 /** The OSM ETL benchmark at the REFERENCE'S OWN SCALE (VERDICT r11
@@ -243,42 +246,34 @@ object OsmEtlBench {
     // (OsmChunk — VERDICT r12 #5: the parse itself was the serial
     // section, pinning input MB/s to one task's iterparse speed), so
     // each per-rowTag read plans one parse task PER FRAGMENT; (2) the
-    // three record types still ship as three CONCURRENT write jobs
-    // (mongoimport ingests a directory of part-files either way),
-    // overlapping their shape+encode+write stages. Chunking is timed
+    // three record types still ship as three OVERLAPPING write jobs
+    // (node and way as concurrent steps, relation inline — mongoimport
+    // ingests a directory of part-files either way), overlapping their
+    // shape+encode+write stages. Chunking is timed
     // as part of the run — it IS the read path's cost, re-done each
     // run (chunk(), not the memoizing chunked()) so the measured span
     // never silently drops it on a re-run.
     def etl(inXml: String, outDir: String): Unit = {
-      import scala.concurrent._
-      import scala.concurrent.duration._
-      import ExecutionContext.Implicits.global
       val parts = Runtime.getRuntime.availableProcessors()
       val in = inXml + ".chunks"
-      // per-step stderr timing (the memo_copurchase discipline): the
-      // timed span has two serial sections — the single-threaded cut
-      // scan and the parallel parse+shape+encode+write jobs — and a
-      // wall regression must be attributable to one of them
-      val tc = System.nanoTime()
-      OsmChunk.chunk(inXml, in, parts)
-      System.err.println(
-        f"[graft]   osm_etl/chunk    ${(System.nanoTime() - tc) / 1e9}%.3f s")
+      // per-step stderr timing (the memo-line discipline): the timed
+      // span has two serial sections — the single-threaded cut scan
+      // and the parallel parse+shape+encode+write jobs — and a wall
+      // regression must be attributable to one of them
+      Memo.timed("osm_etl", "chunk")(OsmChunk.chunk(inXml, in, parts))
       // no repartition: the fragment scan already carries ~|cores|
       // partitions, so an exchange of the raw rows would be pure cost
       // (the repartition earned its exchange only when the scan was
       // one task)
-      val jobs = Seq(
-        ("node", () => OsmXmlSource.nodes(spark, in)),
-        ("way", () => OsmXmlSource.ways(spark, in)),
-        ("relation", () => OsmXmlSource.relations(spark, in))
-      ).map { case (t, mk) => Future {
-        MongoImportSink.write(OsmShape.shape(mk(), t), s"$outDir/$t",
-          overwrite = true)
-      } }
-      val tj = System.nanoTime()
-      Await.result(Future.sequence(jobs), 30.minutes)
-      System.err.println(
-        f"[graft]   osm_etl/jobs     ${(System.nanoTime() - tj) / 1e9}%.3f s")
+      def write(t: String, read: (SparkSession, String) => DataFrame,
+          concurrent: Boolean) = Memo.Step(t, concurrent)((s, d) =>
+        MongoImportSink.write(OsmShape.shape(read(s, d), t), s"$outDir/$t",
+          overwrite = true))
+      Memo.timed("osm_etl", "jobs")(Memo.run("osm_etl",
+        write("node", OsmXmlSource.nodes, concurrent = true),
+        write("way", OsmXmlSource.ways, concurrent = true),
+        write("relation", OsmXmlSource.relations, concurrent = false)
+      )(spark, in))
     }
     // untimed warmup on a 200-element sample (JVM/codegen compile —
     // same schemas and plan shape as the timed run, so the generated
@@ -331,7 +326,11 @@ object OsmEtlBench {
     if (parity)
       try java.nio.file.Files.write(java.nio.file.Paths.get("OSM_BENCH.json"),
         (line + "\n").getBytes("UTF-8"))
-      catch { case _: Throwable => () }
+      catch {
+        case NonFatal(e) =>
+          System.err.println(s"[osm-bench] could not write " +
+            s"${new File("OSM_BENCH.json").getAbsolutePath}: $e")
+      }
     spark.stop()
     if (!parity) {
       System.err.println(s"[osm-bench] COUNT PARITY FAILED: $counts != " +

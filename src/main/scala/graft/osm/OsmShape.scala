@@ -60,13 +60,19 @@ object OsmShape {
     map_from_entries(array(entries: _*))
   }
 
+  // Tag families: every fixed tag belongs to exactly one, decided once
+  // in the reference's shape_element order (clean_and_write.py:283-340).
+  private val Dropped = 0; private val Pass = 1; private val Addr = 2
+  private val Subdoc = 3; private val ListFam = 4; private val IsIn = 5
+  private val IntFam = 6; private val FloatFam = 7; private val Scalar = 8
+
   def shape(df: DataFrame, docType: String): DataFrame = {
     val raw = coalesce(col("tag"), emptyTags)
     val kept = filter(raw, t => !hasProblemChars(p(t, "_k")))
 
     // F9 key-fix pipeline + the two gnis in-namespace fixes, with the
     // original prefix/depth retained for the dispatch decisions.
-    val fixedExpr = transform(kept, t => {
+    val keyFixed = transform(kept, t => {
       val k = p(t, "_k"); val v = p(t, "_v")
       val opfx = split(k, ":").getItem(0)
       val isPass = opfx.isin(PassthroughNamespaces: _*)
@@ -77,66 +83,70 @@ object OsmShape {
       struct(k1.as("k"), v1.as("v"), isPass.as("pass"), opfx.as("opfx"),
         size(split(k, ":")).as("odepth"))
     })
-    // Materialize the key-fix pipeline ONCE per row: every tag family
-    // below references `fixed`, and higher-order functions are
-    // CodegenFallback — with the expression inlined, the whole
+    // The one classification: subdivide/bool dispatch reads the
+    // ORIGINAL prefix and depth, list/numeric dispatch the FIXED key.
+    // Yes/no fuel/payment values are typed in bool_tags only.
+    val fixedExpr = transform(keyFixed, t => {
+      val k = p(t, "k"); val v = p(t, "v")
+      val opfx = p(t, "opfx"); val odepth = p(t, "odepth")
+      val boolNs = opfx.isin(BoolTags: _*)
+      val fam = when(p(t, "pass"), Pass)
+        .when(odepth > 1 && opfx.isin(SubdivideKeys: _*),
+          when(opfx =!= "addr", Subdoc).when(odepth === 2, Addr).otherwise(Dropped))
+        .when(k.isin(ListKeys: _*), ListFam)
+        .when(element_at(isInLit, k).isNotNull, IsIn)
+        .when(k.isin(ToIntKeys: _*), IntFam)
+        .when(k.isin(ToFloatKeys: _*) && floatValue(k, v).isNotNull, FloatFam)
+        .when(boolNs && boolValue(v).isNotNull, Dropped)
+        .otherwise(Scalar)
+      struct(k.as("k"), v.as("v"), fam.as("fam"), boolNs.as("boolNs"))
+    })
+    // Materialize the key-fix pipeline and its classification ONCE per
+    // row: every tag family below references `fixed`, and higher-order
+    // functions are CodegenFallback — with the expression inlined, the whole
     // regex/split forest re-evaluated once PER FAMILY (~8x per row,
     // measured ~2x the shape stage's cost at reference scale).
     // CollapseProject keeps the two Projects separate because the
     // alias is non-cheap and multiply referenced.
     val fixed = col("__fixed")
-
-    def isSubdiv(t: Column): Column =
-      !p(t, "pass") && p(t, "odepth") > 1 && p(t, "opfx").isin(SubdivideKeys: _*)
-    def elseBranch(t: Column): Column = !p(t, "pass") && !isSubdiv(t)
+    def family(f: Int): Column = filter(fixed, t => p(t, "fam") === f)
 
     // ---- list keys (F6) + canonical is_in, concatenating on repeats
-    val listPairs = filter(fixed, t =>
-      elseBranch(t) && p(t, "k").isin(ListKeys: _*))
-    val listTags = extendMap(listPairs, t => {
+    val listTags = extendMap(family(ListFam), t => {
       val split = handleListKeys(p(t, "v"))
       when(p(t, "k").isin("phone", "fax"), transform(split, formatPhone(_)))
         .otherwise(split)
     })
-    val isInPairs = filter(fixed, t =>
-      elseBranch(t) && element_at(isInLit, p(t, "k")).isNotNull)
-    val isInTags = extendMap(isInPairs, t => element_at(isInLit, p(t, "k")))
+    val isInTags = extendMap(family(IsIn), t => element_at(isInLit, p(t, "k")))
     val allListTags = when(listTags.isNotNull || isInTags.isNotNull,
       map_concat(coalesce(listTags, map().cast("map<string,array<string>>")),
         coalesce(isInTags, map().cast("map<string,array<string>>"))))
 
     // ---- promoted numerics (F8 casts)
-    val intPairs = filter(fixed, t => elseBranch(t) && p(t, "k").isin(ToIntKeys: _*))
-    val intTags = lastWinsMap(transform(intPairs, t =>
+    val intTags = lastWinsMap(transform(family(IntFam), t =>
       struct(p(t, "k").as("k"), intValue(p(t, "v")).as("v"))))
-    val floatPairs = filter(fixed, t => elseBranch(t) &&
-      p(t, "k").isin(ToFloatKeys: _*) && floatValue(p(t, "k"), p(t, "v")).isNotNull)
-    val floatTags = lastWinsMap(transform(floatPairs, t =>
+    val floatTags = lastWinsMap(transform(family(FloatFam), t =>
       struct(p(t, "k").as("k"), floatValue(p(t, "k"), p(t, "v")).as("v"))))
 
     // ---- booleans (F7): any fuel*/payment* key, typed view
     val boolPairs = filter(fixed, t =>
-      p(t, "opfx").isin(BoolTags: _*) && boolValue(p(t, "v")).isNotNull)
+      p(t, "boolNs") && boolValue(p(t, "v")).isNotNull)
     val boolTags = lastWinsMap(transform(boolPairs, t =>
       struct(p(t, "k").as("k"), boolValue(p(t, "v")).as("v"))))
 
     // ---- addr subdocument (F3): 2-part keys only, unit promotion
-    val addrPairs = filter(fixed, t =>
-      isSubdiv(t) && p(t, "opfx") === "addr" && p(t, "odepth") === 2)
-    val addrEntries = flatten(transform(addrPairs, t => {
+    val addrMap = lastWinsMap(flatten(transform(family(Addr), t => {
       val sub = split(p(t, "k"), ":").getItem(1)
       val cleaned = auditAddr(sub, p(t, "v"))
       val main = struct(sub.as("k"), p(cleaned, "value").as("v"))
       val unit = struct(lit("unit").as("k"), p(cleaned, "unit").as("v"))
       when(p(cleaned, "unit").isNotNull, array(unit, main)).otherwise(array(main))
-    }))
-    val addrMap = lastWinsMap(addrEntries)
+    })))
 
     // ---- other subdocuments (F5): full colon path as the map key
-    val subPairs = filter(fixed, t => isSubdiv(t) && p(t, "opfx") =!= "addr")
-    val subdocs = lastWinsMap(transform(subPairs, t => {
+    val subdocs = lastWinsMap(transform(family(Subdoc), t => {
       val v = p(t, "v")
-      val stored = when(p(t, "opfx").isin(BoolTags: _*),
+      val stored = when(p(t, "boolNs"),
         when(boolValue(v).isNotNull, boolValue(v).cast("string"))
           .otherwise(boolResidual(v)))
         .otherwise(v)
@@ -146,23 +156,12 @@ object OsmShape {
     // ---- residual scalars (F8 string edits; passthrough kept raw).
     // Depth-1 fuel/payment values that aren't yes/no keep their
     // lowercased residual here (the reference's handle_bools
-    // passthrough); yes/no values live in bool_tags only.
-    val boolResidualScalar = (t: Column) =>
-      p(t, "opfx").isin(BoolTags: _*) && p(t, "odepth") === 1 &&
-        boolValue(p(t, "v")).isNull
-    val scalarPairs = filter(fixed, t =>
-      p(t, "pass") ||
-        (elseBranch(t) &&
-          !p(t, "k").isin(ListKeys: _*) &&
-          element_at(isInLit, p(t, "k")).isNull &&
-          !p(t, "k").isin(ToIntKeys: _*) &&
-          !(p(t, "k").isin(ToFloatKeys: _*) &&
-            floatValue(p(t, "k"), p(t, "v")).isNotNull) &&
-          (!p(t, "opfx").isin(BoolTags: _*) || boolResidualScalar(t))))
+    // passthrough).
+    val scalarPairs = filter(fixed, t => p(t, "fam").isin(Pass, Scalar))
     val tagsMap = lastWinsMap(transform(scalarPairs, t =>
       struct(p(t, "k").as("k"),
-        when(p(t, "pass"), p(t, "v"))
-          .when(boolResidualScalar(t), boolResidual(p(t, "v")))
+        when(p(t, "fam") === Pass, p(t, "v"))
+          .when(p(t, "boolNs"), boolResidual(p(t, "v")))
           .otherwise(miscValEditsStr(p(t, "k"), p(t, "v"))).as("v"))))
 
     val created = struct(

@@ -87,6 +87,18 @@ class SourceInvariantSpec extends AnyFunSuite {
       s"TrieMap outside the memo registry: ${users - "Memo.scala"}")
   }
 
+  test("Future and ExecutionContext appear only in Memo.scala — " +
+    "concurrent build steps go through the one step runner (Memo.run), " +
+    "so a hand-rolled Future.sequence runner fails here by name") {
+    assert(mainRoot.isDirectory, s"source root not found at ${mainRoot.getAbsolutePath}")
+    val concurrent = "\\b(Future|ExecutionContext)\\b".r
+    val users = scalaSources(mainRoot)
+      .filter(f => concurrent.findFirstIn(code(f)).isDefined)
+      .map(_.getName).toSet
+    assert(users == Set("Memo.scala"),
+      s"Future/ExecutionContext outside the step runner: ${users - "Memo.scala"}")
+  }
+
   test("Bench's short-key mapping stays bijective with " +
     "SparkEntry.queries — a rename that collides two prefixes would " +
     "mis-attribute a timing in BENCH_r*.json; fail here, not mid-bench") {

@@ -77,11 +77,16 @@ class OsmEtlBenchSpec extends SparkSpec {
 
   // ---- OsmChunk (r13: the parallel-parse ingest path) ---------------
 
-  test("nextBoundary matches only real top-level element starts: " +
+  test("findCuts matches only real top-level element starts: " +
     "<node /<way /<relation with a legal follower — never <nd, never " +
     "a longer name, never inside plain text bytes") {
-    def find(s: String): Int =
-      OsmChunk.nextBoundary(s.getBytes("UTF-8"), 0, s.length)
+    val dir = Files.createTempDirectory("osmbnd").toString
+    // the first cut at or after offset 0, or -1 when there is none
+    def find(s: String): Long = {
+      val p = s"$dir/b.osm"
+      Files.write(java.nio.file.Paths.get(p), s.getBytes("UTF-8"))
+      OsmChunk.findCuts(p, Seq(0L)).headOption.getOrElse(-1L)
+    }
     assert(find("""  <node id="1" lat="0"/>""") == 2)
     assert(find("  <way>") == 2)
     assert(find("""  <relation x="y">""") == 2)
@@ -427,11 +432,12 @@ class OsmEtlBenchSpec extends SparkSpec {
     try raf.setLength(raf.length() - 8) finally raf.close()
     assert(!OsmEtlBench.looksComplete(xml, nN, nW, nR))
   }
-  // ---- hasDoctype prologue scan (r13 review #4) ----------------------
 
-  test("hasDoctype finds a DTD behind a prologue comment longer than " +
-    "any fixed window, ignores a commented-out DOCTYPE, and stops at " +
-    "the root") {
+  // ---- DOCTYPE detection in the prologue (r13 review #4) -----------
+
+  test("the cut scanner finds a DTD behind a prologue comment longer " +
+    "than any fixed window, and cuts through DOCTYPE text inside a " +
+    "comment or a PI") {
     val dir = java.nio.file.Files.createTempDirectory("osmdtd2").toString
     def write(name: String, content: String): String = {
       val p = s"$dir/$name"
@@ -439,19 +445,26 @@ class OsmEtlBenchSpec extends SparkSpec {
         content.getBytes("UTF-8"))
       p
     }
+    val nodes = (0 until 20).map(i =>
+      s"""  <node id="$i" lat="1" lon="2"/>\n""").mkString
     val pad = "x" * 8192
     val longPrologueDtd = write("a.osm",
       s"<?xml version=\"1.0\"?>\n<!-- $pad -->\n" +
         "<!DOCTYPE osm [ <!ENTITY e \"<node sneaky/>\"> ]>\n" +
         "<osm version=\"0.6\">\n  <node id=\"1\" lat=\"1\" lon=\"2\"/>\n</osm>\n")
-    assert(OsmChunk.hasDoctype(longPrologueDtd),
+    assert(OsmChunk.findCuts(longPrologueDtd, Seq(1L, 4096L)).isEmpty,
       "DTD behind an 8 KiB comment missed")
-    val commentedDtd = write("b.osm",
-      "<?xml version=\"1.0\"?>\n<!-- <!DOCTYPE osm [ ]> -->\n" +
-        "<osm version=\"0.6\">\n  <node id=\"1\" lat=\"1\" lon=\"2\"/>\n</osm>\n")
-    assert(!OsmChunk.hasDoctype(commentedDtd),
-      "commented-out DOCTYPE treated as live")
     // and the chunker actually single-fragments the live-DTD file
     assert(OsmChunk.chunk(longPrologueDtd, s"$dir/frags", 8) == 1)
+    // DOCTYPE text that is not markup: commented out, or PI content
+    for ((name, hidden) <- Seq("b.osm" -> "<!-- <!DOCTYPE osm [ ]> -->",
+        "c.osm" -> "<?render <!DOCTYPE osm [ ]> ?>")) {
+      val xml = write(name, s"<?xml version=\"1.0\"?>\n$hidden\n" +
+        s"<osm version=\"0.6\">\n$nodes</osm>\n")
+      val frags = s"$dir/frags-$name"
+      assert(OsmChunk.chunk(xml, frags, 8) > 1,
+        s"DOCTYPE text in ${hidden.take(4)} treated as live")
+      assert(OsmXmlSource.nodes(spark, frags).count() == 20)
+    }
   }
 }
