@@ -7,11 +7,12 @@ import graft.osm.CleanFns
 
 /** The OSM cleaning library (graft.osm.CleanFns, SURVEY.md §2.7) under
   * the cross-engine oracle gate: deterministic dirty inputs are
-  * synthesized from TPC-H keys, cleaned with the real engine
-  * combinators, and the oracle replays the same rules in SQL.
-  * (The OSM-fixture behavior itself is unit-tested in
-  * graft.osm.CleanFnsSpec / OsmEndToEndSpec; this proves the rule
-  * chains are engine-portable expressions, not Scala-only logic.)
+  * synthesized from TPC-H keys, cleaned through the `Column` faces of
+  * the engine's rules (the same functions the OSM shaping kernel
+  * calls), and the oracle replays the same rules in SQL. (The
+  * OSM-fixture behavior itself is unit-tested in graft.osm.CleanFnsSpec
+  * / CleanFnsPinnedSpec / OsmEndToEndSpec; this proves the rules agree
+  * with an independent SQL engine.)
   */
 object CleanOps {
 

@@ -1,13 +1,33 @@
 package graft.osm
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.util.{ArrayData, CollationFactory, CollationSupport, GenericArrayData}
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import OsmConstants._
 
 /** The reference's row-scalar cleaning library (SURVEY.md §2.7
-  * F1-F9) as pure `Column` combinators — codegen'd built-in expression
-  * chains, no UDFs, so the whole cleaning pipeline stays inside one
-  * WholeStageCodegen span per scan at any scale.
+  * F1-F9), implemented ONCE as plain Scala functions over `String`.
+  * The shaping kernel ([[graft.functions.TagShape]]) calls them per
+  * tag; the `Column` faces further down are thin `StaticInvoke`
+  * wrappers over the same functions (through [[CleanFnsCatalyst]]),
+  * for CleanOps and the specs. No rule exists twice.
+  *
+  * The rules were first written as Spark SQL expression chains, and
+  * the functions keep those semantics where Java's differ: `split`
+  * is a regex split that keeps trailing empty strings, `trim` strips
+  * only ASCII spaces, `lower`/`initcap` call Spark's own case mapping
+  * (ICU or not, per `spark.sql.icu.caseMappings.enabled`), substrings
+  * count code points, numeric promotion is Spark's `try_cast`
+  * string → double → long, and regex tests use `find`. SQL NULL
+  * semantics carry over too: a null input gives what the expression
+  * chain gave — null for the null-intolerant rules, a struct or
+  * singleton of nulls where the chain built one.
   *
   * Faithfulness notes (SURVEY.md §7.4.5): the reference's deliberate
   * quirks are preserved where they're deterministic data behavior
@@ -20,100 +40,117 @@ import OsmConstants._
   */
 object CleanFns {
 
-  private def mapLookup(m: Map[String, String], key: Column): Column = {
-    val pairs = m.toSeq.flatMap { case (k, v) => Seq(lit(k), lit(v)) }
-    element_at(map(pairs: _*), key)
+  // ---- Spark SQL string semantics the rules are defined in
+
+  private def useICU: Boolean = SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+
+  /** SQL `lower` (UTF8_BINARY collation). */
+  private def lower(s: String): String =
+    if (s == null) null
+    else CollationSupport.Lower.exec(UTF8String.fromString(s),
+      CollationFactory.UTF8_BINARY_COLLATION_ID, useICU).toString
+
+  /** SQL `initcap` (UTF8_BINARY collation). */
+  private def initcap(s: String): String =
+    CollationSupport.InitCap.exec(UTF8String.fromString(s),
+      CollationFactory.UTF8_BINARY_COLLATION_ID, useICU).toString
+
+  /** SQL `substring(s, pos, len)`: 1-based, in code points. */
+  private def substr(s: String, pos: Int, len: Int): String =
+    UTF8String.fromString(s).substringSQL(pos, len).toString
+
+  private def numChars(s: String): Int = s.codePointCount(0, s.length)
+
+  /** SQL `split(s, regex)`: limit -1, trailing empty strings kept. */
+  private def split(s: String, regex: String): Array[String] = s.split(regex, -1)
+
+  /** SQL `trim`: ASCII spaces only, not tabs or other whitespace. */
+  private def trim(s: String): String = {
+    var b = 0; var e = s.length
+    while (b < e && s.charAt(b) == ' ') b += 1
+    while (e > b && s.charAt(e - 1) == ' ') e -= 1
+    s.substring(b, e)
   }
+
+  /** SQL `try_cast(s AS double)`: Java's parse (which trims control
+    * characters and spaces), then Spark's inf/nan literals. */
+  private def toDouble(s: String): java.lang.Double =
+    if (s == null) null
+    else try java.lang.Double.valueOf(s) catch {
+      case _: NumberFormatException =>
+        org.apache.spark.sql.catalyst.expressions.Cast
+          .processFloatingPointSpecialLiterals(s, false).asInstanceOf[java.lang.Double]
+    }
+
+  private val SubnumRe = java.util.regex.Pattern.compile("_\\d$")
+  private val ProblemRe = java.util.regex.Pattern.compile(ProblemChars)
+
+  // ---- the rules
 
   /** F1 — `format_phone` (clean_and_write.py:97-111; fixtures
     * main.ipynb cell 17: "(360) 555-9999 ext. 1234" →
     * "+1-360-555-9999 x1234", "+1 306-398-8300" → "+1-360-398-8300").
-    *
-    * Already-formatted numbers pass through (see note above); others:
-    * strip non-digits, fix the `306` area-code typo when the digits
-    * start `1*306`, ensure leading country code `1`, digits beyond 11
-    * become a ` x<ext>` suffix, then hyphenate `+C-AAA-LLL-NNNN`.
-    */
-  def formatPhone(num: Column): Column = {
-    // native expression ([[graft.functions.FormatPhone]]): the built-in
-    // chain needs each intermediate (digits → typo-fixed → country-coded
-    // → extension-split) in several downstream positions, and Column ops
-    // build trees, not DAGs — the re-inlined subtrees exceeded Janino's
-    // 64KB method limit and dropped f1 out of codegen (ADVICE r1)
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(
-      graft.functions.FormatPhone(ColumnBridge.expression(num)))
-  }
+    * The pipeline lives in [[graft.functions.PhoneFormat]], shared with
+    * the native `format_phone` expression. */
+  def formatPhone(num: String): String =
+    if (num == null) null else graft.functions.PhoneFormat.formatString(num)
 
   /** F2 — `clean_street_type` (clean_and_write.py:66-77): returns
-    * `struct(street, unit)`. If the last token contains `#` it's a
-    * unit — pop it; map the (new) last token through StreetTypeMap.
-    * The reference's single-token leading-space artifact is preserved
-    * (the join of an empty prefix with the mapped type).
+    * `(street, unit)`. If the last token contains `#` it's a unit —
+    * pop it; map the (new) last token through StreetTypeMap. The
+    * reference's single-token leading-space artifact is preserved (the
+    * join of an empty prefix with the mapped type), and a unit-only
+    * value ("#215", where the reference's python IndexErrors) gives an
+    * empty street with the unit kept.
     */
-  def cleanStreet(street: Column): Column = {
+  def cleanStreet(street: String): (String, String) = {
+    if (street == null) return (null, null)
     val toks0 = split(street, " ")
-    val last0 = element_at(toks0, -1)
-    val hasUnit = last0.contains("#")
-    val unit = when(hasUnit, last0)
-    val toks = when(hasUnit, slice(toks0, lit(1), size(toks0) - 1)).otherwise(toks0)
-    // a unit-only value ("#215") leaves zero tokens; ANSI element_at on
-    // an empty array throws (the reference's python IndexErrors here —
-    // intended semantics: empty street, unit kept)
-    val last = when(size(toks) > 0, element_at(toks, -1))
-    val mapped = mapLookup(StreetTypeMap, last)
-    val cleaned = when(mapped.isNotNull,
-      concat(array_join(slice(toks, lit(1), size(toks) - 1), " "), lit(" "), mapped))
-      .otherwise(array_join(toks, " "))
-    struct(cleaned.as("street"), unit.as("unit"))
+    val hasUnit = toks0.last.contains("#")
+    val unit = if (hasUnit) toks0.last else null
+    val toks = if (hasUnit) toks0.init else toks0
+    val mapped = if (toks.nonEmpty) StreetTypeMap.getOrElse(toks.last, null) else null
+    val cleaned =
+      if (mapped != null) toks.init.mkString(" ") + " " + mapped
+      else toks.mkString(" ")
+    (cleaned, unit)
   }
 
   /** F3 — `audit_addr` (clean_and_write.py:80-94): per-subkey addr
-    * cleaning. Returns `struct(value, unit)` (unit non-null only for
-    * street values that carried one).
+    * cleaning. Returns `(value, unit)` (unit non-null only for street
+    * values that carried one).
     */
-  def auditAddr(subKey: Column, v: Column): Column = {
-    val streetRes = cleanStreet(v)
-    val prefix3 = substring(v, 1, 3)
-    val unitMapped = mapLookup(StreetTypeMap, prefix3)
-    val housename = array_join(
-      transform(
-        filter(split(v, " "), w => w =!= "LLC"),
-        w => initcap(lower(w))), " ")
-    val postcode = when(substring(v, 1, 5) === "99248", "98248")
-      .otherwise(substring(v, 1, 5))
-    when(subKey === "street",
-      struct(streetRes.getField("street").as("value"),
-        streetRes.getField("unit").as("unit")))
-      .when(subKey === "unit" && unitMapped.isNotNull,
-        struct(concat(unitMapped, v.substr(lit(4), length(v) - 3)).as("value"),
-          lit(null.asInstanceOf[String]).as("unit")))
-      .when(subKey === "housename",
-        struct(housename.as("value"), lit(null.asInstanceOf[String]).as("unit")))
-      .when(subKey === "postcode",
-        struct(postcode.as("value"), lit(null.asInstanceOf[String]).as("unit")))
-      .otherwise(struct(v.as("value"), lit(null.asInstanceOf[String]).as("unit")))
+  def auditAddr(subKey: String, v: String): (String, String) = subKey match {
+    case "street" => cleanStreet(v)
+    case "unit" if v != null && StreetTypeMap.contains(substr(v, 1, 3)) =>
+      (StreetTypeMap(substr(v, 1, 3)) + substr(v, 4, numChars(v) - 3), null)
+    case "housename" if v != null =>
+      (split(v, " ").filter(_ != "LLC").map(w => initcap(lower(w))).mkString(" "), null)
+    case "postcode" if v != null =>
+      val p = substr(v, 1, 5)
+      (if (p == "99248") "98248" else p, null)
+    case _ => (v, null)
   }
 
   /** F6 — `handle_list_keys` (clean_and_write.py:168-179):
     * `;`-separated values split + trimmed; values without `;` become a
     * singleton (untrimmed, faithfully). */
-  def handleListKeys(v: Column): Column =
-    when(v.contains(";"), transform(split(v, ";"), trim(_)))
-      .otherwise(array(v))
+  def handleListKeys(v: String): Array[String] =
+    if (v != null && v.contains(";")) split(v, ";").map(trim) else Array(v)
 
   /** F7 — `handle_bools` (clean_and_write.py:182-192): lowercase;
-    * yes→true, no→false. Returns a boolean column (null when not a
-    * bool — callers keep the lowercased string alongside, mirroring
-    * the reference's union(string|bool) fields). */
-  def boolValue(v: Column): Column =
-    when(lower(v) === "yes", lit(true))
-      .when(lower(v) === "no", lit(false))
+    * yes→true, no→false, null when not a bool (callers keep the
+    * lowercased string alongside, mirroring the reference's
+    * union(string|bool) fields). */
+  def boolValue(v: String): java.lang.Boolean = lower(v) match {
+    case "yes" => java.lang.Boolean.TRUE
+    case "no" => java.lang.Boolean.FALSE
+    case _ => null
+  }
 
   /** The string face of F7: what the reference stores when the value
     * isn't yes/no — the lowercased original. */
-  def boolResidual(v: Column): Column =
-    when(boolValue(v).isNull, lower(v))
+  def boolResidual(v: String): String = if (boolValue(v) == null) lower(v) else null
 
   /** F8 — `misc_val_edits` (clean_and_write.py:195-227), string rules
     * only (int/float promotion is [[intValue]]/[[floatValue]]).
@@ -122,24 +159,30 @@ object CleanFns {
     * no-op). `is_in*` canonical lists are handled in the shaper (array
     * output).
     */
-  def miscValEditsStr(k: Column, v: Column): Column =
-    when(k === "shop" && v.isin("Cannabis", "Parcel_Shipping"), lower(v))
-      .when(k === "inscription" &&
-        v === "Inscriptions too long to input, see Description.",
-        lit("Inscription's too long to input; see description."))
-      .when(k === "designation", array_join(split(lower(v), "\\s+"), "_"))
-      .when(k === "denomination" && v === "Non-denominational", lit("nondenominational"))
-      .when(k === "access" && v === "privatem", lit("private"))
-      .when(k === "kerb" && v === "rised", lit("rasied"))
-      .when(k === "width" && v === "10'", lit("10 feet"))
-      .when(k === "office" && v === "Whatcom_Educational_Credit_Union", lit("credit_union"))
-      .otherwise(v)
+  def miscValEditsStr(k: String, v: String): String = k match {
+    case "shop" if v == "Cannabis" || v == "Parcel_Shipping" => lower(v)
+    case "inscription" if v == "Inscriptions too long to input, see Description." =>
+      "Inscription's too long to input; see description."
+    case "designation" if v != null => split(lower(v), "\\s+").mkString("_")
+    case "denomination" if v == "Non-denominational" => "nondenominational"
+    case "access" if v == "privatem" => "private"
+    case "kerb" if v == "rised" => "rasied"
+    case "width" if v == "10'" => "10 feet"
+    case "office" if v == "Whatcom_Educational_Credit_Union" => "credit_union"
+    case _ => v
+  }
 
   /** F8 int promotion — `int(float(v))`, truncating (clean_and_write
-    * .py:218-219). try_cast: ANSI mode is on in Spark 4, so a plain
-    * cast would abort the whole ingest on one unparseable value — the
-    * null-on-bad-input contract documented on [[floatValue]]. */
-  def intValue(v: Column): Column = v.try_cast("double").try_cast("long")
+    * .py:218-219), as `try_cast` string → double → long: an
+    * unparseable, NaN, infinite or out-of-long-range value is null
+    * (the null-on-bad-input contract documented on [[floatValue]]). */
+  def intValue(v: String): java.lang.Long = {
+    val d = toDouble(v)
+    // Spark's exact double → long range test (DoubleExactNumeric.toLong,
+    // whose overflow error try_cast turns into null; NaN fails it too)
+    if (d == null || !(math.floor(d) <= Long.MaxValue && math.ceil(d) >= Long.MinValue)) null
+    else d.longValue
+  }
 
   /** F8 float promotion — with the `building:levels "3s"→3` special
     * case and the quote-char guard on `maxheight` (clean_and_write
@@ -152,27 +195,90 @@ object CleanFns {
     * which is the intended semantics per SURVEY §7.4.5's policy.
     * Likewise unparseable numerics yield null here where the
     * reference's bare `int(float(v))` would raise. */
-  def floatValue(k: Column, v: Column): Column =
-    when(k === "building:levels" && v === "3s", lit(3.0))
-      .when(k === "maxheight" && (v.contains("\"") || v.contains("'")),
-        lit(null).cast("double"))
-      .otherwise(v.try_cast("double"))
+  def floatValue(k: String, v: String): java.lang.Double =
+    if (k == "building:levels" && v == "3s") 3.0
+    else if (k == "maxheight" && v != null && (v.contains("\"") || v.contains("'"))) null
+    else toDouble(v)
 
   /** F9 — the key-fix pipeline (clean_and_write.py:283-299), applied
     * to keys that are not in the tiger/gnis/nist passthrough
-    * namespaces: strip `contact:` prefix, strip a trailing `_<digit>`,
-    * rename via WrongKeyMap. (The `gnis:ST_alph` rename and
-    * `gnis:County_num` zero-pad are namespace-internal fixes applied
-    * in the shaper before the passthrough check, as in the reference.)
+    * namespaces: strip `contact:` prefix (keeping at most 100 of the
+    * following parts), strip a trailing `_<digit>`, rename via
+    * WrongKeyMap. (The `gnis:ST_alph` rename and `gnis:County_num`
+    * zero-pad are namespace-internal fixes applied in the shaper
+    * before the passthrough check, as in the reference.)
     */
-  def fixKey(k: Column): Column = {
-    val noContact = when(split(k, ":").getItem(0) === "contact",
-      array_join(slice(split(k, ":"), 2, 100), ":")).otherwise(k)
-    val noSubnum = when(noContact.rlike("_\\d$"),
-      noContact.substr(lit(1), length(noContact) - 2)).otherwise(noContact)
-    coalesce(mapLookup(WrongKeyMap, noSubnum), noSubnum)
+  def fixKey(k: String): String = {
+    if (k == null) return null
+    val parts = split(k, ":")
+    val noContact = if (parts(0) == "contact") parts.slice(1, 101).mkString(":") else k
+    val noSubnum =
+      if (SubnumRe.matcher(noContact).find()) substr(noContact, 1, numChars(noContact) - 2)
+      else noContact
+    WrongKeyMap.getOrElse(noSubnum, noSubnum)
   }
 
   /** P6 — problem-character key filter (clean_and_write.py:14,283). */
-  def hasProblemChars(k: Column): Column = k.rlike(ProblemChars)
+  def hasProblemChars(k: String): java.lang.Boolean =
+    if (k == null) null else ProblemRe.matcher(k).find()
+
+  // ---- Column faces: one native call each into the functions above
+
+  private def call(fn: String, dt: DataType, args: Column*): Column =
+    ColumnBridge.column(StaticInvoke(CleanFnsCatalyst.getClass, dt, fn,
+      args.map(ColumnBridge.expression), inputTypes = args.map(_ => StringType),
+      propagateNull = false))
+
+  /** F1 as a Column: the native `format_phone` expression
+    * ([[graft.functions.FormatPhone]]). */
+  def formatPhone(num: Column): Column =
+    ColumnBridge.column(graft.functions.FormatPhone(ColumnBridge.expression(num)))
+
+  /** F2 as a Column: `struct(street, unit)`. */
+  def cleanStreet(street: Column): Column = call("cleanStreet",
+    StructType(Seq(StructField("street", StringType), StructField("unit", StringType))), street)
+
+  /** F3 as a Column: `struct(value, unit)`. */
+  def auditAddr(subKey: Column, v: Column): Column = call("auditAddr",
+    StructType(Seq(StructField("value", StringType), StructField("unit", StringType))), subKey, v)
+
+  def handleListKeys(v: Column): Column = call("handleListKeys", ArrayType(StringType), v)
+
+  def boolValue(v: Column): Column = call("boolValue", BooleanType, v)
+
+  def boolResidual(v: Column): Column = call("boolResidual", StringType, v)
+
+  def miscValEditsStr(k: Column, v: Column): Column = call("miscValEditsStr", StringType, k, v)
+
+  def intValue(v: Column): Column = call("intValue", LongType, v)
+
+  def floatValue(k: Column, v: Column): Column = call("floatValue", DoubleType, k, v)
+
+  def fixKey(k: Column): Column = call("fixKey", StringType, k)
+
+  def hasProblemChars(k: Column): Column = call("hasProblemChars", BooleanType, k)
+}
+
+/** [[CleanFns]] in Catalyst's value types, for the `StaticInvoke`
+  * calls of its `Column` faces (public because generated code calls
+  * them): `UTF8String` in, Catalyst values out, nulls as in CleanFns. */
+object CleanFnsCatalyst {
+  private def s(u: UTF8String): String = if (u == null) null else u.toString
+  private def u(s: String): UTF8String = if (s == null) null else UTF8String.fromString(s)
+  private def row(p: (String, String)): InternalRow =
+    new GenericInternalRow(Array[Any](u(p._1), u(p._2)))
+
+  def cleanStreet(v: UTF8String): InternalRow = row(CleanFns.cleanStreet(s(v)))
+  def auditAddr(k: UTF8String, v: UTF8String): InternalRow = row(CleanFns.auditAddr(s(k), s(v)))
+  def handleListKeys(v: UTF8String): ArrayData =
+    new GenericArrayData(CleanFns.handleListKeys(s(v)).map[Any](u))
+  def boolValue(v: UTF8String): java.lang.Boolean = CleanFns.boolValue(s(v))
+  def boolResidual(v: UTF8String): UTF8String = u(CleanFns.boolResidual(s(v)))
+  def miscValEditsStr(k: UTF8String, v: UTF8String): UTF8String =
+    u(CleanFns.miscValEditsStr(s(k), s(v)))
+  def intValue(v: UTF8String): java.lang.Long = CleanFns.intValue(s(v))
+  def floatValue(k: UTF8String, v: UTF8String): java.lang.Double =
+    CleanFns.floatValue(s(k), s(v))
+  def fixKey(k: UTF8String): UTF8String = u(CleanFns.fixKey(s(k)))
+  def hasProblemChars(k: UTF8String): java.lang.Boolean = CleanFns.hasProblemChars(s(k))
 }

@@ -1,0 +1,74 @@
+package graft.osm
+
+import graft.SparkSpec
+import graft.functions.ShapeTags
+import graft.sinks.MongoExtendedJson
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types._
+
+/** The plan the shaping stage hands Catalyst, and the kernel's two
+  * evaluation paths. Planning cost grows with the expression count, a
+  * counter that does not drift with machine load: with the tag routing
+  * written as built-in array/map expression chains, `shape` plus the
+  * Extended-JSON encode optimized to 6,649 (node), 6,720 (way) and
+  * 6,683 (relation) expression nodes, and planning that tree cost each
+  * ETL write more than its Spark job.
+  */
+class OsmShapePlanSpec extends SparkSpec {
+
+  private def expressionNodes(plan: LogicalPlan): Int =
+    plan.collect { case p => p.expressions.map(_.collect { case _ => 1 }.size).sum }.sum
+
+  private def kernelCalls(plan: LogicalPlan): Int =
+    plan.collect { case p => p.expressions.map(_.collect { case _: ShapeTags => 1 }.size).sum }.sum
+
+  test("shape + Extended-JSON encode optimizes to at most a tenth of the " +
+    "expression-chain form's nodes per document type, with one kernel call") {
+    val path = getClass.getResource("/mini.osm").getPath
+    val chainForm = Map("node" -> 6649, "way" -> 6720, "relation" -> 6683)
+    for ((t, read) <- Seq("node" -> OsmXmlSource.nodes _, "way" -> OsmXmlSource.ways _,
+        "relation" -> OsmXmlSource.relations _)) {
+      val shaped = OsmShape.shape(read(spark, path), t)
+      val plan = shaped.select(MongoExtendedJson.toExtendedJsonLine(shaped).as("v"))
+        .queryExecution.optimizedPlan
+      val n = expressionNodes(plan)
+      assert(n <= chainForm(t) / 10, s"$t: $n expression nodes")
+      assert(kernelCalls(plan) == 1, s"$t: the kernel is planned more than once\n$plan")
+    }
+  }
+
+  test("the kernel's interpreted and generated paths build the same maps") {
+    val schema = StructType(Seq(StructField("tag", ArrayType(StructType(Seq(
+      StructField("_k", StringType), StructField("_v", StringType)))))))
+    def tags(kvs: (String, String)*): Row = Row(kvs.map { case (k, v) => Row(k, v) })
+    val rows = Seq(
+      tags("fuel" -> "yes", "addr:street:name" -> "x", "addr:city" -> "Bellingham",
+        "cost:fee" -> "5", "fuel:octane_95" -> "YES", "service:bicycle:repair" -> "no",
+        "addr:street" -> "Ellis St #5", "addr:unit" -> "St.201", "addr:city" -> "Ferndale"),
+      tags("payment" -> "No", "tiger:county" -> "Whatcom, WA", "gnis:ST_alph" -> "53",
+        "gnis:County_num" -> "73", "is_in:state" -> "anything", "is_in" -> "Bellingham",
+        "is_in" -> "x"),
+      tags("fuel" -> "Maybe", "lanes" -> "2.0", "maxheight" -> "12'6\"",
+        "building:levels" -> "3s", "level" -> "abc", "roof:levels" -> "2",
+        "population" -> "x12", "payment:cash" -> "maybe"),
+      tags("name_1" -> "Foo", "name" -> "Bar; Baz", "contact:phone" -> "3605550101",
+        "phone" -> "(360) 555-9999;360.555.0103", "image" -> "foo.jpg",
+        "bad key" -> "dropped", "maxspeed:type" -> "sign", "designation" -> "A b",
+        (null, "no key"), "k" -> null, "cuisine" -> null, "lanes" -> null),
+      tags(),
+      Row(null))
+    val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    val scanned = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    def shaped(df: DataFrame): Seq[String] =
+      df.select(ColumnBridge.column(ShapeTags(ColumnBridge.expression(col("tag")))).as("s"))
+        .select(org.apache.spark.sql.functions.to_json(col("s"))).collect()
+        .map(r => String.valueOf(r.get(0))).toSeq
+    val interpreted = shaped(local)
+    assert(interpreted == shaped(scanned))
+    assert(interpreted.drop(4) == Seq("{}", "null") && !interpreted.take(4).contains("{}"),
+      interpreted.mkString("\n"))
+  }
+}
