@@ -4,11 +4,12 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import graft.functions.{DotProduct, FormatPhone, JaroWinklerSim}
+import graft.functions.{DotProduct, JaroWinklerKernel, PhoneFormat}
 
-/** The engine's SparkSessionExtensions: registers the custom native
-  * expressions into the function registry so they're callable from
-  * SQL and `call_function` alike. Loadable by class name via
+/** The engine's SparkSessionExtensions: registers the engine's
+  * functions (the JVM kernels' [[graft.functions.Kernel]] calls and
+  * the native [[DotProduct]]) into the function registry so they're
+  * callable from SQL and `call_function` alike. Loadable by class name via
   * `spark.sql.extensions=graft.GraftSparkExtensions` on any cluster,
   * or programmatically via `builder.withExtensions` ([[GraftSession]]).
   */
@@ -23,17 +24,17 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
       }))
     ext.injectFunction((
       new FunctionIdentifier("format_phone"),
-      new ExpressionInfo(classOf[FormatPhone].getName, "format_phone"),
+      new ExpressionInfo(PhoneFormat.getClass.getName, "format_phone"),
       (children: Seq[Expression]) => {
         arity("format_phone", children, 1)
-        FormatPhone(children.head)
+        PhoneFormat.expr(children.head)
       }))
     ext.injectFunction((
       new FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinklerSim].getName, "jaro_winkler"),
+      new ExpressionInfo(JaroWinklerKernel.getClass.getName, "jaro_winkler"),
       (children: Seq[Expression]) => {
         arity("jaro_winkler", children, 2)
-        JaroWinklerSim(children(0), children(1))
+        JaroWinklerKernel.expr(children(0), children(1))
       }))
     // Spark's bloom sketch expressions (the pair its own runtime-filter
     // rule injects) are NOT in the public registry in 4.1 — surface

@@ -20,6 +20,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * ([[Fns.dot]]), the typed kernels, and DuckDB's sequential
   * `list_sum` — the cross-engine determinism contract.
   *
+  * It is the one hand-written expression (every other kernel is a
+  * [[Kernel]] call) because it generates its loop inline, a null
+  * element inside an array makes its result null, and its similarity
+  * family is in no benchmark workload, so a rebinding could not be
+  * checked there.
+  *
   * Null semantics: null if either array is null (nullIntolerant), and
   * null if any traversed ELEMENT is null — matching `zip_with` +
   * `aggregate`, where a null product poisons the accumulator

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Engine-internal column combinators shared by the operator modules.
   *
@@ -57,18 +58,6 @@ object Fns {
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
 
-  /** L2 norm of a double array (sequential accumulation). */
-  def l2(a: Column): Column = sqrt(dot(a, a))
-
-  /** Cosine similarity of two double arrays, rounded to 6 places so the
-    * cross-engine compare is insensitive to sub-ulp accumulation noise.
-    */
-  def cosine6(a: Column, b: Column): Column = {
-    val prod = l2(a) * l2(b)
-    when(prod === 0.0, lit(Double.NaN))
-      .otherwise(round(dot(a, b) / prod, 6))
-  }
-
   /** Fixed-dimension dot product, fully unrolled: Spark's higher-order
     * functions (zip_with/aggregate) evaluate interpreted, which
     * dominates quadratic similarity joins; a flat left-associated
@@ -91,12 +80,12 @@ object Fns {
   /** L2 norm via the native dot. */
   def l2Native(a: Column): Column = sqrt(dotNative(a, a))
 
-  /** The native codegen'd Jaro-Winkler similarity
-    * ([[JaroWinklerSim]], registered by
-    * [[graft.GraftSparkExtensions]]) — bit-pinned to DuckDB's
+  /** Jaro-Winkler similarity ([[JaroWinklerKernel]], the SQL
+    * `jaro_winkler`) — bit-pinned to DuckDB's
     * `jaro_winkler_similarity` (see the kernel's contract). */
   def jaroWinkler(a: Column, b: Column): Column =
-    call_function("jaro_winkler", a, b)
+    ColumnBridge.column(JaroWinklerKernel.expr(ColumnBridge.expression(a),
+      ColumnBridge.expression(b)))
 
   /** Fixed-point half-up rounding computed IDENTICALLY in any engine:
     * floor(x·10^d + 0.5) / 10^d.
@@ -192,22 +181,6 @@ object Fns {
           i => concat(element_at(tokens, i), lit(" "), element_at(tokens, i + 1)))))
       .otherwise(array().cast("array<string>"))
 
-  /** Distinct word n-gram shingles of a token array — the general
-    * form of [[bigramShingles]] (same guard: Spark's
-    * `sequence(1, 0)` is DESCENDING, so short docs take the explicit
-    * empty branch, matching DuckDB's empty `generate_series`).
-    * Decontamination screens want wider windows than dedup (a shared
-    * n-gram run must be long enough to be evidence of copying, not
-    * phrasing) — pipe6 uses n=4 where production picks 8–13. */
-  def wordShingles(tokens: Column, n: Int): Column =
-    when(size(tokens) >= n,
-      array_distinct(
-        transform(
-          sequence(lit(1), size(tokens) - (n - 1)),
-          i => concat_ws(" ",
-            (0 until n).map(k => element_at(tokens, i + k)): _*))))
-      .otherwise(array().cast("array<string>"))
-
   /** Fused kernel form of `wordShinglesLocal(text, n).map(md5LongLocal)`
     * as a SET (r16): the md5 digests the shingle's exact UTF-8 bytes
     * (token bytes + single 0x20 separators — byte-identical to
@@ -263,7 +236,9 @@ object Fns {
     out.toArray
   }
 
-  /** Local mirror of [[wordShingles]] for spec replays. */
+  /** Distinct word n-gram shingles of a whitespace-tokenized text, in
+    * first-occurrence order — the string form [[wordShingleHashesLocal]]
+    * hashes, for spec replays. */
   def wordShinglesLocal(text: String, n: Int): Seq[String] = {
     val t = text.split(" ", -1)
     val seen = new scala.collection.mutable.LinkedHashSet[String]
@@ -273,20 +248,4 @@ object Fns {
     }
     seen.toSeq
   }
-
-  /** k MinHash values of a shingle array: for each seed 0..k-1 the
-    * minimum of the seeded hash over the shingles. One pass per seed —
-    * at scale this is a narrow map, no shuffle.
-    */
-  def minhashes(shingles: Column, k: Int): Column =
-    transform(
-      sequence(lit(0), lit(k - 1)),
-      s => array_min(transform(shingles, x => md5LongSeeded(s, x))))
-
-  /** Jaccard similarity of two pre-deduplicated string arrays. Exact
-    * integer ratio — identical across engines.
-    */
-  def jaccard(a: Column, b: Column): Column =
-    size(array_intersect(a, b)).cast("double") /
-      size(array_union(a, b)).cast("double")
 }

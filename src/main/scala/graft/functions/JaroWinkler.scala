@@ -1,13 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.{DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** JVM kernel for Jaro-Winkler similarity, shared by the interpreted
-  * and generated paths of [[JaroWinklerSim]].
+/** JVM kernel for Jaro-Winkler similarity, bound to Catalyst as one
+  * [[Kernel]] call. Spark ships `levenshtein` but no Jaro-Winkler, and
+  * the entity-resolution scoring path (er2) runs it over every blocked
+  * name pair, so the one static call keeps the scoring projection in
+  * the join's generated stage.
   *
   * The exact variant is pinned to DuckDB's `jaro_winkler_similarity`
   * (the oracle engine), bit-for-bit — verified on a probe set spanning
@@ -72,46 +73,11 @@ object JaroWinklerKernel {
     } else j
   }
 
-  /** Entry point for codegen (UTF8String in; null-safe at the
-    * expression layer, never called with null). */
+  /** The kernel (never called with null). */
   def sim(a: UTF8String, b: UTF8String): Double =
     similarity(a.toString, b.toString)
-}
 
-/** Native Catalyst expression for Jaro-Winkler string similarity.
-  *
-  * Why a custom expression: Spark ships `levenshtein` but no
-  * Jaro-Winkler, and the entity-resolution scoring path (er2) runs it
-  * over every blocked name pair — a hot inner loop that must stay
-  * inside whole-stage codegen. `doGenCode` emits one static call, so
-  * the blocked self-join's scoring projection compiles into the same
-  * generated stage as the join, exactly like [[DotProduct]] in the
-  * similarity family.
-  */
-case class JaroWinklerSim(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"jaro_winkler expects (string, string), got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-
-  override def dataType: DataType = DoubleType
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "jaro_winkler"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    JaroWinklerKernel.sim(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.JaroWinklerKernel.sim($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+  /** `jaro_winkler(a, b)`: null if either side is null. */
+  def expr(a: Expression, b: Expression): Expression =
+    Kernel(this, "sim", DoubleType, Seq(StringType, StringType))(a, b)
 }

@@ -4,20 +4,19 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.osm.CleanFns
+import graft.osm.{CleanFns, OsmXmlSource}
 import graft.osm.OsmConstants._
 
 /** The tag half of the reference's `shape_element`
   * (clean_and_write.py:230-381) as one pass over an element's raw
-  * `tag` array, shared by the interpreted and generated paths of
-  * [[ShapeTags]]. Each tag is visited once:
+  * `tag` array, bound to Catalyst as one [[Kernel]] call: raw `tag`
+  * array → `struct<tags, list_tags, int_tags, float_tags, bool_tags,
+  * addr, subdocs>`. Each tag is visited once:
   *
   *   1. a key with a problem char is dropped (P6);
   *   2. the key is fixed — `gnis:ST_alph` renamed, tiger/gnis/nist
@@ -38,6 +37,13 @@ import graft.osm.OsmConstants._
   * `contact:phone`→`phone`) land in one list. `list_tags` holds the
   * list keys, then the canonical `is_in` lists. A map with no entry is
   * null.
+  *
+  * Why one kernel rather than built-in chains: expressed with
+  * `filter`/`transform`/`map_from_entries` per family, the same
+  * routing was ~6,700 expression nodes per document type (literal key
+  * lists, per-key dedup lambdas and the cleaning forests, repeated
+  * inline), and planning that tree cost the ETL more than its Spark
+  * job; the higher-order functions were also CodegenFallback.
   */
 object TagShape {
 
@@ -148,40 +154,9 @@ object TagShape {
       mapData(ints)(identity), mapData(floats)(identity), mapData(bools)(identity),
       mapData(addr)(utf8), mapData(subdocs)(utf8)))
   }
-}
 
-/** Native Catalyst expression for [[TagShape]]: raw `tag` array →
-  * `struct<tags, list_tags, int_tags, float_tags, bool_tags, addr,
-  * subdocs>`.
-  *
-  * Why one native expression rather than built-in chains: expressed
-  * with `filter`/`transform`/`map_from_entries` per family, the same
-  * routing was ~6,700 expression nodes per document type (literal key
-  * lists, per-key dedup lambdas and the cleaning forests, repeated
-  * inline), and planning that tree cost the ETL more than its Spark
-  * job; the higher-order functions were also CodegenFallback. This
-  * generates a single static call per row, as [[FormatPhone]] does.
-  */
-case class ShapeTags(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StructType(Array(StructField(_, StringType, _, _),
-        StructField(_, StringType, _, _))), _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"shape_tags expects array<struct<k:string,v:string>>, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = TagShape.dataType
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "shape_tags"
-
-  override def nullSafeEval(tags: Any): Any = TagShape.shape(tags.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TagShape.shape($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  /** The seven tag maps of one element's `tag` array; a null array is
+    * a null struct. */
+  def expr(tags: Expression): Expression =
+    Kernel(this, "shape", dataType, Seq(OsmXmlSource.tagArr))(tags)
 }

@@ -1051,8 +1051,8 @@ object DedupOps {
   /** er2 — er1's blocked entity resolution scored with Jaro-Winkler
     * instead of Levenshtein: the linkage metric record-linkage
     * practice actually prefers for short name strings (prefix-weighted,
-    * length-normalized). Scoring runs the native codegen'd
-    * [[graft.functions.JaroWinklerSim]] — bit-pinned to DuckDB's
+    * length-normalized). Scoring runs the codegen'd kernel
+    * [[graft.functions.JaroWinklerKernel]] — bit-pinned to DuckDB's
     * `jaro_winkler_similarity` — rounded to 6 places (the portable
     * floor form), then binned into tenth-wide similarity bands; the
     * output is the per-noun band histogram a linkage-threshold

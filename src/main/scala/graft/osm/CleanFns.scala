@@ -3,20 +3,21 @@ package graft.osm
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, CollationFactory, CollationSupport, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.{Kernel, PhoneFormat}
 import OsmConstants._
 
 /** The reference's row-scalar cleaning library (SURVEY.md §2.7
   * F1-F9), implemented ONCE as plain Scala functions over `String`.
   * The shaping kernel ([[graft.functions.TagShape]]) calls them per
-  * tag; the `Column` faces further down are thin `StaticInvoke`
-  * wrappers over the same functions (through [[CleanFnsCatalyst]]),
-  * for CleanOps and the specs. No rule exists twice.
+  * tag; the `Column` faces further down are one
+  * [[graft.functions.Kernel]] call each into the same functions
+  * (through [[CleanFnsCatalyst]]), for CleanOps and the specs. No rule
+  * exists twice.
   *
   * The rules were first written as Spark SQL expression chains, and
   * the functions keep those semantics where Java's differ: `split`
@@ -91,9 +92,9 @@ object CleanFns {
     * main.ipynb cell 17: "(360) 555-9999 ext. 1234" →
     * "+1-360-555-9999 x1234", "+1 306-398-8300" → "+1-360-398-8300").
     * The pipeline lives in [[graft.functions.PhoneFormat]], shared with
-    * the native `format_phone` expression. */
+    * the SQL `format_phone`. */
   def formatPhone(num: String): String =
-    if (num == null) null else graft.functions.PhoneFormat.formatString(num)
+    if (num == null) null else PhoneFormat.formatString(num)
 
   /** F2 — `clean_street_type` (clean_and_write.py:66-77): returns
     * `(street, unit)`. If the last token contains `#` it's a unit —
@@ -222,17 +223,16 @@ object CleanFns {
   def hasProblemChars(k: String): java.lang.Boolean =
     if (k == null) null else ProblemRe.matcher(k).find()
 
-  // ---- Column faces: one native call each into the functions above
+  // ---- Column faces: one kernel call each into the functions above
 
+  /** The rules take and give SQL NULL themselves. */
   private def call(fn: String, dt: DataType, args: Column*): Column =
-    ColumnBridge.column(StaticInvoke(CleanFnsCatalyst.getClass, dt, fn,
-      args.map(ColumnBridge.expression), inputTypes = args.map(_ => StringType),
-      propagateNull = false))
+    ColumnBridge.column(Kernel(CleanFnsCatalyst, fn, dt, args.map(_ => StringType),
+      propagateNull = false)(args.map(ColumnBridge.expression): _*))
 
-  /** F1 as a Column: the native `format_phone` expression
-    * ([[graft.functions.FormatPhone]]). */
+  /** F1 as a Column: the SQL `format_phone`. */
   def formatPhone(num: Column): Column =
-    ColumnBridge.column(graft.functions.FormatPhone(ColumnBridge.expression(num)))
+    ColumnBridge.column(PhoneFormat.expr(ColumnBridge.expression(num)))
 
   /** F2 as a Column: `struct(street, unit)`. */
   def cleanStreet(street: Column): Column = call("cleanStreet",

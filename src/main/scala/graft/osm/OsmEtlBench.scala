@@ -4,7 +4,6 @@ import java.io.{BufferedWriter, File, FileWriter}
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{GraftSession, Memo}
 import graft.sinks.MongoImportSink
@@ -241,39 +240,23 @@ object OsmEtlBench {
       if (looksComplete(xml))
         (new File(xml).length(), N_NODES.toLong, N_WAYS.toLong, N_RELS.toLong)
       else generate(xml)
-    // The pipeline: (1) element-boundary pre-chunking splits the
-    // single non-splittable .osm into ~|cores| well-formed fragments
-    // (OsmChunk — VERDICT r12 #5: the parse itself was the serial
-    // section, pinning input MB/s to one task's iterparse speed), so
-    // each per-rowTag read plans one parse task PER FRAGMENT; (2) the
-    // three record types still ship as three OVERLAPPING write jobs
-    // (node and way as concurrent steps, relation inline — mongoimport
-    // ingests a directory of part-files either way), overlapping their
-    // shape+encode+write stages. Chunking is timed
-    // as part of the run — it IS the read path's cost, re-done each
-    // run (chunk(), not the memoizing chunked()) so the measured span
-    // never silently drops it on a re-run.
+    // The pipeline `graft.Main` runs: element-boundary pre-chunking
+    // (OsmChunk) splits the single non-splittable .osm into ~|cores|
+    // well-formed fragments, so the parse runs one task per fragment;
+    // then the shaped union of the three record types is dumped in one
+    // write (three overlapping per-type write jobs measured the same
+    // within the runs' spread, ROADMAP 5(d)).
     def etl(inXml: String, outDir: String): Unit = {
-      val parts = Runtime.getRuntime.availableProcessors()
       val in = inXml + ".chunks"
-      // per-step stderr timing (the memo-line discipline): the timed
-      // span has two serial sections — the single-threaded cut scan
-      // and the parallel parse+shape+encode+write jobs — and a wall
-      // regression must be attributable to one of them
-      Memo.timed("osm_etl", "chunk")(OsmChunk.chunk(inXml, in, parts))
-      // no repartition: the fragment scan already carries ~|cores|
-      // partitions, so an exchange of the raw rows would be pure cost
-      // (the repartition earned its exchange only when the scan was
-      // one task)
-      def write(t: String, read: (SparkSession, String) => DataFrame,
-          concurrent: Boolean) = Memo.Step(t, concurrent)((s, d) =>
-        MongoImportSink.write(OsmShape.shape(read(s, d), t), s"$outDir/$t",
-          overwrite = true))
-      Memo.timed("osm_etl", "jobs")(Memo.run("osm_etl",
-        write("node", OsmXmlSource.nodes, concurrent = true),
-        write("way", OsmXmlSource.ways, concurrent = true),
-        write("relation", OsmXmlSource.relations, concurrent = false)
-      )(spark, in))
+      // the serial cut scan and the parallel parse+shape+encode+write
+      // job are timed apart on stderr, so a wall regression is
+      // attributable to one of them
+      Memo.timed("osm_etl", "chunk")(
+        OsmChunk.chunk(inXml, in, Runtime.getRuntime.availableProcessors()))
+      // parts = 0, no repartition: the fragment scan already carries
+      // ~|cores| partitions, so an exchange of the raw rows is pure cost
+      Memo.timed("osm_etl", "write")(MongoImportSink.write(
+        OsmXmlSource.collection(spark, in, 0), outDir, overwrite = true))
     }
     // one untimed run of the full extract warms the JVM like the
     // baseline's native binary: a 200-element sample compiled the
@@ -301,7 +284,7 @@ object OsmEtlBench {
     // octet_length, not length: length() counts CHARACTERS, which
     // only equals bytes while the corpus stays pure ASCII — a future
     // non-ASCII tag value would silently misreport MB/s (ADVICE r12)
-    val stats = spark.read.text(s"$out/node", s"$out/way", s"$out/relation")
+    val stats = spark.read.text(out)
       .select(get_json_object(col("value"), "$.doc_type").as("t"),
         (octet_length(col("value")) + 1).cast("long").as("b"))
       .groupBy(col("t")).agg(count(lit(1)).as("n"), sum(col("b")).as("b"))

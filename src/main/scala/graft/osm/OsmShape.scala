@@ -3,14 +3,14 @@ package graft.osm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import graft.functions.{ShapeTags, TagShape}
+import graft.functions.TagShape
 
 /** The shaping stage (SURVEY.md §2, `shape_element`
   * clean_and_write.py:230-381): raw XML rows → the wide document
   * schema, per row — no explode, no shuffle, one WholeStageCodegen
   * pass over the scan at any scale. The fixed fields are built-in
-  * expressions; every tag goes through one native kernel call
-  * ([[graft.functions.ShapeTags]]) that routes it once and builds the
+  * expressions; every tag goes through one kernel call
+  * ([[graft.functions.TagShape]]) that routes it once and builds the
   * seven tag maps in one loop.
   *
   * Spark mapping of the reference's dynamic document (SURVEY.md §1.5):
@@ -33,7 +33,7 @@ import graft.functions.{ShapeTags, TagShape}
 object OsmShape {
 
   def shape(df: DataFrame, docType: String): DataFrame = {
-    // The whole tag half of shape_element is one native kernel call
+    // The whole tag half of shape_element is one kernel call
     // (TagShape: one pass over the tags, classify once, build all seven
     // maps). Its struct is aliased once and read seven times:
     // CollapseProject never inlines a non-cheap alias referenced more
@@ -70,7 +70,7 @@ object OsmShape {
       case other => sys.error(s"unknown doc_type $other")
     }
     df.withColumn("__tags",
-        ColumnBridge.column(ShapeTags(ColumnBridge.expression(col("tag")))))
+        ColumnBridge.column(TagShape.expr(ColumnBridge.expression(col("tag")))))
       .select(common ++ extra: _*)
   }
 }

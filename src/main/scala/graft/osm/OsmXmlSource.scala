@@ -18,7 +18,7 @@ import org.apache.spark.sql.types._
   */
 object OsmXmlSource {
 
-  private val tagArr = ArrayType(StructType(Seq(
+  private[graft] val tagArr = ArrayType(StructType(Seq(
     StructField("_k", StringType), StructField("_v", StringType))))
 
   private def attrs(extra: StructField*): StructType = StructType(Seq(

@@ -50,8 +50,13 @@ object MongoExtendedJson {
     * server rejects at insert (or worse, collides with an
     * Extended-JSON wrapper) — schema-level [[invalidFieldNames]]
     * can't see data-dependent keys, so the guard rides the encode
-    * expression itself and fails the write job naming the key. */
+    * expression itself and fails the write job naming the key.
+    *
+    * A column whose type needs neither is returned as it is: an
+    * identity `transform`/`struct` rebuild would cost a
+    * CodegenFallback lambda per row and change nothing in the line. */
   private[sinks] def extend(c: Column, dt: DataType): Column = dt match {
+    case _ if !rewrites(dt) => c
     case LongType =>
       nullSafe(c, struct(c.cast(StringType).as("$numberLong")))
     case IntegerType | ShortType | ByteType =>
@@ -74,11 +79,20 @@ object MongoExtendedJson {
             .otherwise(k))
         case _ => c
       }
-      transform_values(guarded, (_, v) => extend(v, vt))
+      if (rewrites(vt)) transform_values(guarded, (_, v) => extend(v, vt)) else guarded
     case st: StructType =>
       nullSafe(c, struct(st.fields.toSeq.map(f =>
         extend(c.getField(f.name), f.dataType).as(f.name)): _*))
-    case _ => c
+  }
+
+  /** Whether [[extend]] changes a value of this type: it holds an
+    * integral, timestamp or date value, or a string-keyed map. */
+  private def rewrites(dt: DataType): Boolean = dt match {
+    case LongType | IntegerType | ShortType | ByteType | TimestampType | DateType => true
+    case ArrayType(et, _) => rewrites(et)
+    case MapType(kt, vt, _) => kt == StringType || rewrites(vt)
+    case st: StructType => st.fields.exists(f => rewrites(f.dataType))
+    case _ => false
   }
 
   private def nullSafe(src: Column, wrapped: Column): Column =

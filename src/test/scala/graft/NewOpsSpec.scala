@@ -577,6 +577,12 @@ class NewOpsSpec extends SparkSpec {
   test("format_phone is SQL-registered via the extensions") {
     assert(spark.sql("SELECT format_phone('306-555-1234') AS p").head().getString(0)
       == "+1-360-555-1234")
+    // the input type and the arity are checked at analysis, before a row runs
+    intercept[org.apache.spark.sql.AnalysisException](spark.sql("SELECT format_phone(array(1))"))
+    val arity = intercept[Exception](spark.sql("SELECT format_phone('1', '2')"))
+    assert(Iterator.iterate[Throwable](arity)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("format_phone requires exactly 1")),
+      arity.toString)
   }
 
   // ----- round-3 additions -----

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, when}
 
 /** Physical-plan regression checks — the properties that decide
   * 100 TB behavior, locked in as assertions so a refactor can't
@@ -88,12 +89,18 @@ class PlanShapeSpec extends SparkSpec {
     assert(exec.find(
       _.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec])
       .isDefined, exec.toString)
-    assert(exec.toString.contains("format_phone"), exec.toString)
-    // the generated stage must actually compile: CODEGEN_ONLY makes a
-    // Janino failure throw instead of silently falling back
-    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-    try assert(df.limit(5).collect().length == 5)
-    finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    assert(exec.toString.contains("static_invoke(graft.functions.PhoneFormat.format("),
+      exec.toString)
+    // the generated stage must actually compile (CODEGEN_ONLY makes a
+    // Janino failure throw instead of silently falling back), and the
+    // interpreted path must give the same rows, null numbers included
+    val withNulls = df.withColumn("null_safe", graft.osm.CleanFns.formatPhone(
+      when(col("c_custkey") % 5 =!= 0, col("raw_phone"))))
+    val (interpreted, generated) =
+      onBothPaths(withNulls.collect().map(_.toString).sorted.toSeq)
+    assert(interpreted == generated)
+    assert(interpreted.length == df.count())
+    assert(interpreted.count(_.endsWith(",null]")) == df.filter(col("c_custkey") % 5 === 0).count())
   }
 
   test("anti-join stays a LeftAnti (j6) — no payload, no multiplication") {

@@ -80,19 +80,26 @@ class Round9OpsSpec extends SparkSpec {
 
   test("jaro_winkler expression: SQL-registered codegen path equals " +
     "the kernel on fixture name pairs, null-safe") {
-    val parts = Tables.part(spark, sf).select(col("p_name")).limit(50)
-    val pairs = parts.select(col("p_name").as("a"))
-      .crossJoin(parts.select(col("p_name").as("b")))
-    val got = pairs
+    val names = Tables.part(spark, sf).select(col("p_name")).limit(50)
+      .union(spark.range(1).select(lit(null).cast("string").as("p_name")))
+    val pairs = names.select(col("p_name").as("a"))
+      .crossJoin(names.select(col("p_name").as("b")))
+    val (interpreted, generated) = onBothPaths(pairs
       .select(col("a"), col("b"),
         graft.functions.Fns.jaroWinkler(col("a"), col("b")).as("jw"))
-      .collect()
-    got.foreach { r =>
-      val want = JaroWinklerKernel.similarity(r.getString(0), r.getString(1))
-      assert(java.lang.Double.doubleToLongBits(r.getDouble(2)) ==
-        java.lang.Double.doubleToLongBits(want))
+      .collect().toSeq)
+    for (got <- Seq(interpreted, generated)) {
+      got.foreach { r =>
+        if (r.isNullAt(0) || r.isNullAt(1)) assert(r.isNullAt(2), s"$r: null input must be null")
+        else {
+          val want = JaroWinklerKernel.similarity(r.getString(0), r.getString(1))
+          assert(java.lang.Double.doubleToLongBits(r.getDouble(2)) ==
+            java.lang.Double.doubleToLongBits(want))
+        }
+      }
+      assert(got.length == 51 * 51)
     }
-    assert(got.length == 2500)
+    assert(interpreted.map(_.toString).sorted == generated.map(_.toString).sorted)
     val n = spark.sql("SELECT jaro_winkler(CAST(NULL AS STRING), 'x') AS j")
       .collect()(0)
     assert(n.isNullAt(0), "null input must be null, not 0")

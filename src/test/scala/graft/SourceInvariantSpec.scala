@@ -99,6 +99,19 @@ class SourceInvariantSpec extends AnyFunSuite {
       s"Future/ExecutionContext outside the step runner: ${users - "Memo.scala"}")
   }
 
+  test("a Catalyst Expression subclass is declared only in DotProduct.scala — " +
+    "every other JVM kernel reaches Catalyst through the one Kernel " +
+    "(StaticInvoke) binding, so a hand-written expression class fails here by name") {
+    assert(mainRoot.isDirectory, s"source root not found at ${mainRoot.getAbsolutePath}")
+    val expression =
+      """\b(extends|with)\s+(\w+\.)*\w*(Expression|Aggregate|AggregateFunction|Generator|CodegenFallback)\b""".r
+    val declaring = scalaSources(mainRoot)
+      .filter(f => expression.findFirstIn(code(f)).isDefined)
+      .map(_.getName).toSet
+    assert(declaring == Set("DotProduct.scala"),
+      s"Expression subclasses outside DotProduct: ${declaring - "DotProduct.scala"}")
+  }
+
   test("Bench's short-key mapping stays bijective with " +
     "SparkEntry.queries — a rename that collides two prefixes would " +
     "mis-attribute a timing in BENCH_r*.json; fail here, not mid-bench") {

@@ -21,6 +21,18 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def primeMemo(name: String, dir: String): Unit =
     Bench.memoBuilds.find(_._1 == name).get._3(spark, dir)
 
+  /** `body` run on each evaluation path: interpreted (no whole-stage
+    * codegen, interpreted projections), then generated (CODEGEN_ONLY, so
+    * a compile failure throws instead of falling back). */
+  def onBothPaths[T](body: => T): (T, T) = {
+    def under(conf: (String, String)*): T = {
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body finally conf.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+    (under("spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"),
+      under("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"))
+  }
+
   override def afterAll(): Unit = {
     // shared across suites in one JVM; let the JVM exit clean it up
     super.afterAll()
