@@ -21,10 +21,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * `list_sum` — the cross-engine determinism contract.
   *
   * It is the one hand-written expression (every other kernel is a
-  * [[Kernel]] call) because it generates its loop inline, a null
-  * element inside an array makes its result null, and its similarity
-  * family is in no benchmark workload, so a rebinding could not be
-  * checked there.
+  * [[Kernel]] call) because it generates its loop inline and can return
+  * null on non-null arrays (a null element), which [[Kernel]]'s rule
+  * that a null-propagating kernel never returns null cannot express.
   *
   * Null semantics: null if either array is null (nullIntolerant), and
   * null if any traversed ELEMENT is null — matching `zip_with` +

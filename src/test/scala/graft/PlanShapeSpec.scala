@@ -91,13 +91,20 @@ class PlanShapeSpec extends SparkSpec {
       .isDefined, exec.toString)
     assert(exec.toString.contains("static_invoke(graft.functions.PhoneFormat.format("),
       exec.toString)
-    // the generated stage must actually compile (CODEGEN_ONLY makes a
-    // Janino failure throw instead of silently falling back), and the
-    // interpreted path must give the same rows, null numbers included
-    val withNulls = df.withColumn("null_safe", graft.osm.CleanFns.formatPhone(
-      when(col("c_custkey") % 5 =!= 0, col("raw_phone"))))
-    val (interpreted, generated) =
-      onBothPaths(withNulls.collect().map(_.toString).sorted.toSeq)
+    // the generated stage must actually compile, and the interpreted path
+    // must give the same rows, null numbers included. A Dataset keeps the
+    // plan it first made, so each path builds its own
+    def withNulls = q("f1_phone_clean").withColumn("null_safe",
+      graft.osm.CleanFns.formatPhone(when(col("c_custkey") % 5 =!= 0, col("raw_phone"))))
+    val ((interpreted, interpretedStaged), (generated, generatedStaged)) = onBothPaths {
+      val d = withNulls
+      val rows = d.collect().map(_.toString).sorted.toSeq
+      (rows, physical(d).collect {
+        case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w.toString
+      }.exists(_.contains("static_invoke(graft.functions.PhoneFormat.format(")))
+    }
+    assert(!interpretedStaged, "the interpreted path ran a whole-stage stage")
+    assert(generatedStaged, "the generated path ran no whole-stage stage calling the kernel")
     assert(interpreted == generated)
     assert(interpreted.length == df.count())
     assert(interpreted.count(_.endsWith(",null]")) == df.filter(col("c_custkey") % 5 === 0).count())

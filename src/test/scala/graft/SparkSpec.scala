@@ -22,15 +22,18 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     Bench.memoBuilds.find(_._1 == name).get._3(spark, dir)
 
   /** `body` run on each evaluation path: interpreted (no whole-stage
-    * codegen, interpreted projections), then generated (CODEGEN_ONLY, so
-    * a compile failure throws instead of falling back). */
+    * codegen, interpreted projections), then generated (CODEGEN_ONLY and
+    * no codegen fallback, so a projection's or a whole-stage stage's
+    * compile failure throws instead of falling back). `body` must build
+    * its Dataset itself: a Dataset keeps the physical plan it first made,
+    * so one planned on the interpreted path would run that plan again. */
   def onBothPaths[T](body: => T): (T, T) = {
     def under(conf: (String, String)*): T = {
       conf.foreach { case (k, v) => spark.conf.set(k, v) }
       try body finally conf.foreach { case (k, _) => spark.conf.unset(k) }
     }
     (under("spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"),
-      under("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"))
+      under("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY", "spark.sql.codegen.fallback" -> "false"))
   }
 
   override def afterAll(): Unit = {
