@@ -12,7 +12,10 @@ import graft.sinks.MongoExtendedJson
   * routing, cleaning or the document schema moves a hash here; a
   * refactor of [[OsmShape]] must keep them all.
   * The constants were recorded before the single-classification form
-  * of `shape`, so they do not come from the code they check.
+  * of `shape`, so they do not come from the code they check; the
+  * collection-level and lexical-corner constants were recorded on
+  * Spark's built-in XML source (one `rowTag` read per type), before
+  * the one-pass reader replaced it.
   */
 class OsmShapeGoldenSpec extends SparkSpec {
 
@@ -29,6 +32,26 @@ class OsmShapeGoldenSpec extends SparkSpec {
       t -> ((lines.length.toLong, md.digest().map("%02x".format(_)).mkString))
     }.toMap
 
+  private def sha256(lines: Seq[String]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    lines.foreach(l => md.update((l + "\n").getBytes("UTF-8")))
+    md.digest().map("%02x".format(_)).mkString
+  }
+
+  /** [[OsmXmlSource.collection]] as one relation: its line count, the
+    * hash of its sorted Extended-JSON lines, and the hash of its
+    * `schema.json` (column order, types and nullability). */
+  private def collectionGolden(path: String): (Long, String, String) = {
+    val docs = OsmXmlSource.collection(spark, path)
+    val lines = docs.select(MongoExtendedJson.toExtendedJsonLine(docs).as("v"))
+      .collect().map(_.getString(0)).sorted.toSeq
+    (lines.length.toLong, sha256(lines), sha256(Seq(docs.schema.json)))
+  }
+
+  /** The collection's schema.json hash, the same for every input. */
+  private val collectionSchema =
+    "cb03a4a9498ea4e793af9fa6affc10d89682ff015f92c3e5870d542c0f1b71eb"
+
   test("shaped Extended-JSON lines of the generated extract (scale " +
     "0.01) match the recorded count and hash per document type") {
     val dir = Files.createTempDirectory("osmgold").toString
@@ -39,6 +62,8 @@ class OsmShapeGoldenSpec extends SparkSpec {
       "way" -> ((301L, "3978fff2d2a87d6abb2a036eb41be6247c4c79c8dd156bb454a2c098cab94ab6")),
       "relation" -> ((5L, "5491a8bca4914cc26f87699da0212d8a35e9e775d5b074983a20a323a6310b32")))
     assert(got == expected, s"golden drift: $got")
+    val all = collectionGolden(s"$dir/g.osm")
+    assert(all == ((3856L, "624ff4e636e5c8692413056a74a5619768e200ab4ae18e527b851e54e12b6e35", collectionSchema)), s"collection drift: $all")
   }
 
   test("shaped Extended-JSON lines of a routing-edge fixture match the " +
@@ -87,4 +112,68 @@ class OsmShapeGoldenSpec extends SparkSpec {
       "relation" -> ((1L, "acd42e6cb3baa5b9543b0a0238f35de7d11404d9d6cd9791cb04e69260b0808d")))
     assert(got == expected, s"golden drift: $got")
   }
+
+  /** Lexical corners of XML that the generated extracts never reach:
+    * references, multi-byte text, markup between elements, attribute
+    * order and padding, lenient numbers, absent and unknown parts. */
+  private val lexicalFixture: String = {
+    val a = """version="1" changeset="3" timestamp="2015-01-01T00:00:00Z" user="u" uid="1""""
+    "<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n" +
+      "<!-- prologue comment <node id=\"c0\" lat=\"1\" lon=\"1\"/> -->\n" +
+      "<?app-pi <node id=\"p0\"/> ?>\n" +
+      "<osm version=\"0.6\" generator=\"fixture\">\n" +
+      """  <bounds minlat="48.6" minlon="-122.8" maxlat="49.0" maxlon="-122.0"/>""" + "\n" +
+      "  <!-- between elements: <node id=\"c1\" lat=\"1\" lon=\"1\"/> <way id=\"c2\"> & raw < -->\n" +
+      s"""  <node uid="7" user = " Jöhn &amp; &quot;Q&quot; ☃ " id=" 101 " lat=" 48.7 " lon="-122.4" version="2" changeset="9" timestamp="2015-01-01T00:00:00Z" extra="ignored">""" + "\n" +
+      """    <tag k="name" v="Caf&#xE9; &amp; Bar &#x2603; ☕"/>""" + "\n" +
+      """    <tag k="x"/>""" + "\n" +
+      """    <unknown a="b"><tag k="nested" v="not a tag of 101"/></unknown>""" + "\n" +
+      """    <tag k="amenity" v="cafe">text content</tag>""" + "\n" +
+      """    <tag k="phone" v=" (360) 555-0101 "/>""" + "\n" +
+      "  </node>\n" +
+      "  <?render between <node id=\"p1\"/> ?>\n" +
+      "  <![CDATA[ <node id=\"cd\"/> <way ]]>\n" +
+      s"""  <node lon="1.5" lat="-0.5" $a id="104"/>""" + "\n" +
+      s"""  <node id="105" lat="12abc" lon="+3.5" $a/>""" + "\n" +
+      s"""  <node id="106" lat="1,234.5" lon="-1e1" $a/>""" + "\n" +
+      s"<node\n    id=\"107\"\tlat=\"1\" lon=\"2\" $a>\n<tag\nk=\"addr:street\"\tv=\"Ellis St\"/></node>\n" +
+      s"""  <node id="108" $a></node>""" + "\n" +
+      s"""  <way id="201" lat="abc" lon="" $a><nd ref="101"/><nd/><nd ref=" 104 "/><foo/>""" +
+      """<tag k="highway" v=" x "/><tag k="cuisine" v="thai; pizza"/></way>""" + "\n" +
+      s"""  <way id="202" $a/>""" + "\n" +
+      s"""  <relation id="301" lat="" $a><member ref="101" type="node" role=""/>""" +
+      """<member type="way"/><member ref="201" role="outer" type="way"/><tag k="type" v="route"/></relation>""" + "\n" +
+      s"""  <relation id="302" $a/>""" + "\n" +
+      "</osm>\n"
+  }
+
+  test("shaped Extended-JSON lines of a lexical-corner fixture match the " +
+    "recorded count and hash per document type and for the collection") {
+    val xml = Files.createTempFile("osmlex", ".osm")
+    Files.write(xml, lexicalFixture.getBytes("UTF-8"))
+    val got = golden(xml.toString)
+    val expected = Map(
+      "node" -> ((6L, "18d71c9d273adb828209a296ef76de840a4f54d7f0d53aec36dfc6b0827bf86b")),
+      "way" -> ((2L, "e8e774b3c0078d8e1c189c1cec4ac25a67d38287b4ea61a80fccac39680e1a43")),
+      "relation" -> ((2L, "85b731d588bf982addb04134495c469c6a7b242b852ecfb3307aa66f29163a57")))
+    assert(got == expected, s"golden drift: $got")
+    val all = collectionGolden(xml.toString)
+    assert(all == ((10L, "4497c7e3b206acd5d89caa52677372ed3b34a77b45a53e69f58e1f2a9503849e", collectionSchema)), s"collection drift: $all")
+  }
+
+  test("a node whose lat is empty or not a number fails the read, naming " +
+    "the number") {
+    for (bad <- Seq("", "abc")) {
+      val xml = Files.createTempFile("osmbadlat", ".osm")
+      Files.write(xml, ("<osm version=\"0.6\">\n" +
+        s"""  <node id="1" lat="$bad" lon="2"/>\n</osm>\n""").getBytes("UTF-8"))
+      val e = intercept[Exception](
+        OsmXmlSource.collection(spark, xml.toString).collect())
+      val messages = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toList
+      assert(messages.exists(_.contains(s"""Unparseable number: "$bad"""")),
+        messages.mkString(" / "))
+    }
+  }
 }
+
