@@ -8,10 +8,9 @@ object Verify {
     // optional trailing args = query names to dump alone (the Bench
     // partial-run convention, for local oracle iteration on one
     // operator). The driver always calls with exactly two args →
-    // full surface; a partial dump reuses the previous full dump's
-    // oracle_sql.json/queries.json siblings, which this overwrites
-    // with the CURRENT full maps either way (they're surface-level,
-    // not selection-level).
+    // full surface. oracle_sql.json is always the full map;
+    // queries.json names the queries this run dumped, so a compare
+    // checks exactly those.
     val wanted = args.drop(2).toSet
     val selected =
       if (wanted.isEmpty) SparkEntry.queries
@@ -19,6 +18,8 @@ object Verify {
     val spark = GraftSession.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     selected.foreach { case (name, fn) =>
+      // a query that fails must leave no output, not an earlier run's
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$outDir/$name"))
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -42,10 +43,11 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // the FULL query-name list, so the gate can detect a crashed
-    // no-oracle query (its output dir is missing but it's named here)
+    // the names this run dumped (the full list with two args), so the
+    // gate can detect a crashed no-oracle query (its output dir is
+    // missing but it's named here)
     Files.writeString(Paths.get(s"$outDir/queries.json"),
-      SparkEntry.queries.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
+      selected.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
     spark.stop()
   }
 }

@@ -185,8 +185,10 @@ object OsmAudit {
     * distinct descendant-element tag set, and the distinct
     * attribute-name set, per element type. The parse is the
     * reference's `ET.iterparse` re-expressed for Spark: one streaming
-    * StAX scan per FILE via `binaryFiles` (a 100 TB corpus is many
-    * extract files, so parallelism = file count and no file is ever
+    * StAX scan per FILE through the reader's opener
+    * ([[OsmXmlSource.scan]] with one range per file, so the root
+    * element counts once per file; a 100 TB corpus is many extract
+    * files, so parallelism = file count and no file is ever
     * materialized), each task pre-aggregating its file into one row
     * per element type — the map-side combine — so the final
     * declarative agg merges #files×#types rows, never per-element
@@ -201,8 +203,7 @@ object OsmAudit {
   def elementProfile(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
     import spark.implicits._
-    spark.sparkContext.binaryFiles(path)
-      .flatMap { case (_, stream) => profileOneFile(stream.open()) }
+    OsmXmlSource.scan(spark, path, 0)((xml, _) => profileOneFile(xml))
       .toDF("element_type", "n", "attributes", "sub_els")
       .groupBy(col("element_type"))
       .agg(sum(col("n")).as("count"),
@@ -215,37 +216,30 @@ object OsmAudit {
   /** One file's streaming profile: (element_type, count, attribute
     * names, descendant tags) — constant memory in the file size
     * (a tag-name stack plus per-TYPE sets, never the document). */
-  private def profileOneFile(in: java.io.InputStream)
+  private def profileOneFile(r: javax.xml.stream.XMLStreamReader)
       : Iterator[(String, Long, Seq[String], Seq[String])] = {
-    import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
+    import javax.xml.stream.XMLStreamConstants
     import scala.collection.mutable
-    val f = XMLInputFactory.newInstance()
-    // profile parses untrusted XML: no DTDs, no external entities
-    f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
-    f.setProperty("javax.xml.stream.isSupportingExternalEntities", false)
-    val r = f.createXMLStreamReader(in)
     val counts = mutable.LinkedHashMap.empty[String, Long]
     val attrs = mutable.Map.empty[String, mutable.SortedSet[String]]
     val subs = mutable.Map.empty[String, mutable.SortedSet[String]]
     val stack = mutable.ArrayBuffer.empty[String]
-    try {
-      while (r.hasNext) r.next() match {
-        case XMLStreamConstants.START_ELEMENT =>
-          val t = r.getLocalName
-          counts.update(t, counts.getOrElse(t, 0L) + 1L)
-          val as = attrs.getOrElseUpdate(t, mutable.SortedSet.empty[String])
-          (0 until r.getAttributeCount).foreach(i =>
-            as += r.getAttributeLocalName(i))
-          subs.getOrElseUpdate(t, mutable.SortedSet.empty[String])
-          // this element is a descendant of everything on the stack
-          // (el.iter() semantics: same-tag ancestors excluded)
-          stack.foreach(a => if (a != t) subs(a) += t)
-          stack += t
-        case XMLStreamConstants.END_ELEMENT =>
-          stack.remove(stack.length - 1)
-        case _ =>
-      }
-    } finally { r.close(); in.close() }
+    while (r.hasNext) r.next() match {
+      case XMLStreamConstants.START_ELEMENT =>
+        val t = r.getLocalName
+        counts.update(t, counts.getOrElse(t, 0L) + 1L)
+        val as = attrs.getOrElseUpdate(t, mutable.SortedSet.empty[String])
+        (0 until r.getAttributeCount).foreach(i =>
+          as += r.getAttributeLocalName(i))
+        subs.getOrElseUpdate(t, mutable.SortedSet.empty[String])
+        // this element is a descendant of everything on the stack
+        // (el.iter() semantics: same-tag ancestors excluded)
+        stack.foreach(a => if (a != t) subs(a) += t)
+        stack += t
+      case XMLStreamConstants.END_ELEMENT =>
+        stack.remove(stack.length - 1)
+      case _ =>
+    }
     counts.map { case (t, n) =>
       (t, n, attrs(t).toSeq, subs(t).toSeq)
     }.toList.iterator

@@ -25,7 +25,7 @@ import graft.sinks.MongoImportSink
   * alone — its Python ETL (iterparse + shape + json dump) ran before
   * the clock started; the engine's timed span covers read + shape +
   * Extended-JSON encode + write, i.e. strictly MORE work than the
-  * baseline's span. One untimed run over the full extract absorbs
+  * baseline's span. Two untimed runs over the full extract absorb
   * JVM/JIT and codegen compile (the graft.Bench convention), because
   * mongoimport is a warm native binary.
   *
@@ -240,36 +240,24 @@ object OsmEtlBench {
       if (looksComplete(xml))
         (new File(xml).length(), N_NODES.toLong, N_WAYS.toLong, N_RELS.toLong)
       else generate(xml)
-    // The pipeline `graft.Main` runs: element-boundary pre-chunking
-    // (OsmChunk) splits the single non-splittable .osm into ~|cores|
-    // well-formed fragments, so the parse runs one task per fragment;
-    // then the shaped union of the three record types is dumped in one
-    // write (three overlapping per-type write jobs measured the same
-    // within the runs' spread, ROADMAP 5(d)).
-    def etl(inXml: String, outDir: String): Unit = {
-      val in = inXml + ".chunks"
-      // the serial cut scan and the parallel parse+shape+encode+write
-      // job are timed apart on stderr, so a wall regression is
-      // attributable to one of them
-      Memo.timed("osm_etl", "chunk")(
-        OsmChunk.chunk(inXml, in, Runtime.getRuntime.availableProcessors()))
-      // parts = 0, no repartition: the fragment scan already carries
-      // ~|cores| partitions, so an exchange of the raw rows is pure cost
+    // The pipeline `graft.Main` runs: the reader cuts the single .osm
+    // into ~|cores| byte ranges (one serial cut scan, no copy) and
+    // parses one range per task; the shaped collection is dumped in
+    // one write.
+    def etl(inXml: String, outDir: String): Unit =
       Memo.timed("osm_etl", "write")(MongoImportSink.write(
-        OsmXmlSource.collection(spark, in, 0), outDir, overwrite = true))
-    }
-    // one untimed run of the full extract warms the JVM like the
-    // baseline's native binary: a 200-element sample compiled the
-    // generated code but left the JIT cold, so the first timed run was
-    // ~35% slower than the third and min-of-3 rested on the last run
+        OsmXmlSource.collection(spark, inXml), outDir, overwrite = true))
+    // two untimed runs of the full extract warm the JVM like the
+    // baseline's native binary: after one, the first timed run was
+    // still the slowest of three in every A/B run (the JIT was still
+    // compiling), so min-of-3 rested on the later runs
     etl(xml, out)
-    // the timed span: read + shape + Extended-JSON encode + write.
-    // min-of-3 with a recorded spread — the graft.Bench convention
-    // (r15: a single-shot record made the headline hostage to box
-    // state; the baseline's mongoimport is a warm native binary, so
-    // the engine's best-of-warm is the like-for-like figure). Every
-    // run re-chunks (chunk(), not the memoizing chunked()) so the
-    // measured span never silently drops the serial section.
+    etl(xml, out)
+    // the timed span: cut scan + read + shape + Extended-JSON encode +
+    // write. min-of-3 with a recorded spread — the graft.Bench
+    // convention (a single-shot record made the headline hostage to
+    // box state; the baseline's mongoimport is a warm native binary,
+    // so the engine's best-of-warm is the like-for-like figure).
     val runs = (1 to 3).map { _ =>
       val t0 = System.nanoTime()
       etl(xml, out)

@@ -1,6 +1,6 @@
 package graft.osm
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import graft.functions.TagShape
@@ -32,7 +32,45 @@ import graft.functions.TagShape
   */
 object OsmShape {
 
-  def shape(df: DataFrame, docType: String): DataFrame = {
+  private val pos =
+    when(col("_lat").isNotNull && col("_lon").isNotNull,
+      array(col("_lat"), col("_lon"))).as("pos")
+
+  private val nodeRefs = {
+    val refs = array_sort(array_distinct(
+      transform(coalesce(col("nd"), array().cast("array<struct<_ref:string>>")),
+        n => n.getField("_ref"))))
+    when(size(refs) > 0, refs).as("node_refs")
+  }
+
+  private val members = {
+    val ms = transform(
+      coalesce(col("member"),
+        array().cast("array<struct<_type:string,_ref:string,_role:string>>")),
+      m => struct(m.getField("_type").as("type"),
+        m.getField("_ref").as("ref"), m.getField("_role").as("role")))
+    when(size(ms) > 0, ms).as("members")
+  }
+
+  /** One element type's raw rows (an [[OsmXmlSource]] per-type read)
+    * shaped: the common columns and the type's own one. */
+  def shape(df: DataFrame, docType: String): DataFrame =
+    project(df, lit(docType), docType match {
+      case "node" => Seq(pos)
+      case "way" => Seq(nodeRefs)
+      case "relation" => Seq(members)
+      case other => sys.error(s"unknown doc_type $other")
+    })
+
+  /** The reader's one raw relation ([[OsmXmlSource.rawSchema]]) shaped
+    * in one Project, in the column order, types and nullability of the
+    * three per-type shapes unioned by name: only nodes carry lat/lon,
+    * only ways `nd` and only relations `member`, so each type's own
+    * column is null on the other types' rows. */
+  private[osm] def shapeAll(raw: DataFrame): DataFrame =
+    project(raw, col("doc_type"), Seq(pos, nodeRefs, members))
+
+  private def project(df: DataFrame, docType: Column, extra: Seq[Column]): DataFrame = {
     // The whole tag half of shape_element is one kernel call
     // (TagShape: one pass over the tags, classify once, build all seven
     // maps). Its struct is aliased once and read seven times:
@@ -48,27 +86,9 @@ object OsmShape {
 
     val common = Seq(
       col("_id").as("_id"),
-      lit(docType).as("doc_type"),
+      docType.as("doc_type"),
       created.as("created")) ++ tagMaps
 
-    val extra = docType match {
-      case "node" =>
-        Seq(when(col("_lat").isNotNull && col("_lon").isNotNull,
-          array(col("_lat"), col("_lon"))).as("pos"))
-      case "way" =>
-        val refs = array_sort(array_distinct(
-          transform(coalesce(col("nd"), array().cast("array<struct<_ref:string>>")),
-            n => n.getField("_ref"))))
-        Seq(when(size(refs) > 0, refs).as("node_refs"))
-      case "relation" =>
-        val ms = transform(
-          coalesce(col("member"),
-            array().cast("array<struct<_type:string,_ref:string,_role:string>>")),
-          m => struct(m.getField("_type").as("type"),
-            m.getField("_ref").as("ref"), m.getField("_role").as("role")))
-        Seq(when(size(ms) > 0, ms).as("members"))
-      case other => sys.error(s"unknown doc_type $other")
-    }
     df.withColumn("__tags",
         ColumnBridge.column(TagShape.expr(ColumnBridge.expression(col("tag")))))
       .select(common ++ extra: _*)

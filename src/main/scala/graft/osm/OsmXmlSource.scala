@@ -1,162 +1,219 @@
 package graft.osm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import java.text.NumberFormat
+import java.util.Locale
+import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
 
-/** S1 — the OSM XML source (SURVEY.md §2.1): the Spark-native
-  * equivalent of the reference's streaming `ET.iterparse`
-  * (clean_and_write.py:425). One `spark.read.format("xml")` per record
-  * type — the `rowTag` selection is source-level pruning (non-target
-  * elements never leave the scan) — then `unionByName` with a
-  * `doc_type` discriminator, exactly the reference's three-shape
-  * collection.
+import scala.collection.mutable.ArrayBuffer
+import scala.reflect.ClassTag
+import scala.util.control.NonFatal
+
+import org.apache.spark.{SerializableWritable, TaskContext}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+/** S1 — the OSM XML source (SURVEY.md §2.1): the reference's streaming
+  * `ET.iterparse` (clean_and_write.py:425) as one StAX pass per byte
+  * range ([[OsmChunk.ranges]]). Each task streams its range once and
+  * emits every top-level `node`, `way` and `relation` once, in document
+  * order, as a row of [[rawSchema]]; [[collection]] shapes that one
+  * relation with [[OsmShape]] in a single Project. A `node`, `way` or
+  * `relation` nested inside another one is an unknown child, skipped.
   *
-  * Explicit schemas: ids/refs stay strings (the reference keeps OSM
-  * ids as strings), lat/lon parse to double (F11), and schema
-  * inference never runs (an inference pass would double-read 100 TB).
+  * Values follow Spark's XML source, which this reader replaced (the
+  * `OsmShapeGoldenSpec` constants were recorded on it): attribute
+  * values are trimmed, ids and refs stay strings (the reference keeps
+  * OSM ids as strings), lat/lon parse leniently to double (F11), and a
+  * node whose lat or lon is no number at all fails the read, naming the
+  * number and the range. Unknown attributes, unknown children and text
+  * content are ignored. Malformed XML fails the read with the parser's
+  * message and the range.
   */
 object OsmXmlSource {
 
-  private[graft] val tagArr = ArrayType(StructType(Seq(
-    StructField("_k", StringType), StructField("_v", StringType))))
+  private val attrNames =
+    Array("id", "version", "changeset", "timestamp", "user", "uid")
+  private val TagAttrs = Array("k", "v")
+  private val NdAttrs = Array("ref")
+  private val MemberAttrs = Array("type", "ref", "role")
 
-  private def attrs(extra: StructField*): StructType = StructType(Seq(
-    StructField("_id", StringType),
-    StructField("_version", StringType),
-    StructField("_changeset", StringType),
-    StructField("_timestamp", StringType),
-    StructField("_user", StringType),
-    StructField("_uid", StringType)) ++ extra)
+  private def fields(names: Array[String]): Seq[StructField] =
+    names.toSeq.map(n => StructField(s"_$n", StringType))
+  private def structs(names: Array[String]) = ArrayType(StructType(fields(names)))
+  private[graft] val tagArr = structs(TagAttrs)
 
-  val nodeSchema: StructType = attrs(
-    StructField("_lat", DoubleType),
-    StructField("_lon", DoubleType),
-    StructField("tag", tagArr))
+  /** One row per element: its type, its attributes, then every type's
+    * own raw fields, each null where the element's type has no such
+    * field. */
+  val rawSchema: StructType = StructType(
+    StructField("doc_type", StringType, nullable = false) +: fields(attrNames) ++: Seq(
+      StructField("_lat", DoubleType),
+      StructField("_lon", DoubleType),
+      StructField("nd", structs(NdAttrs)),
+      StructField("member", structs(MemberAttrs)),
+      StructField("tag", tagArr)))
 
-  val waySchema: StructType = attrs(
-    StructField("nd", ArrayType(StructType(Seq(StructField("_ref", StringType))))),
-    StructField("tag", tagArr))
+  private val DocTypes = Array("node", "way", "relation")
+  private val Node = 0
+  private val Way = 1
+  private val Relation = 2
+  private val docTypeUtf8 = DocTypes.map(UTF8String.fromString)
+  private val Lat = rawSchema.fieldIndex("_lat")
+  private val Lon = rawSchema.fieldIndex("_lon")
+  private val Nd = rawSchema.fieldIndex("nd")
+  private val Member = rawSchema.fieldIndex("member")
+  private val Tag = rawSchema.fieldIndex("tag")
 
-  val relationSchema: StructType = attrs(
-    StructField("member", ArrayType(StructType(Seq(
-      StructField("_type", StringType),
-      StructField("_ref", StringType),
-      StructField("_role", StringType))))),
-    StructField("tag", tagArr))
+  /** The one StAX factory, set as Spark's XML source sets its own:
+    * namespace-unaware, coalescing, and no DTDs or external entities,
+    * because the input is untrusted. */
+  private lazy val factory: XMLInputFactory = {
+    val f = XMLInputFactory.newInstance()
+    f.setProperty(XMLInputFactory.IS_NAMESPACE_AWARE, false)
+    f.setProperty(XMLInputFactory.IS_COALESCING, true)
+    f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
+    f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
+    f
+  }
 
-  private def read(spark: SparkSession, path: String, rowTag: String,
-      schema: StructType): DataFrame =
-    spark.read.format("xml")
-      .option("rowTag", rowTag)
-      .schema(schema)
-      .load(path)
+  /** One task per range of `path` ([[OsmChunk.ranges]] for `parts`):
+    * the range opened as one StAX stream and handed to `read`, which
+    * reports failures against the range it is given. */
+  private[osm] def scan[T: ClassTag](spark: SparkSession, path: String, parts: Int)(
+      read: (XMLStreamReader, OsmChunk.Range) => Iterator[T]): RDD[T] = {
+    val sc = spark.sparkContext
+    val rs = OsmChunk.ranges(path, parts, sc.hadoopConfiguration)
+    val conf = new SerializableWritable(sc.hadoopConfiguration)
+    sc.parallelize(rs, math.max(rs.length, 1)).mapPartitions(_.flatMap { r =>
+      val in = OsmChunk.open(r, conf.value)
+      val xml = factory.createXMLStreamReader(in)
+      TaskContext.get().addTaskCompletionListener[Unit] { _ => xml.close(); in.close() }
+      read(xml, r)
+    })
+  }
+
+  /** Every element of `path` as a row of [[rawSchema]]. */
+  private[osm] def raw(spark: SparkSession, path: String, parts: Int): DataFrame =
+    ColumnBridge.internalCreateDataFrame(spark, scan(spark, path, parts)(elements), rawSchema)
+
+  /** The top-level elements of one stream, in document order. */
+  private def elements(xml: XMLStreamReader, range: OsmChunk.Range): Iterator[InternalRow] = {
+    def next(): InternalRow =
+      try {
+        while (xml.hasNext) {
+          if (xml.next() == XMLStreamConstants.START_ELEMENT) {
+            val kind = DocTypes.indexOf(xml.getLocalName)
+            if (kind >= 0) return element(xml, kind)
+          }
+        }
+        null
+      } catch {
+        case NonFatal(e) =>
+          throw new IllegalArgumentException(s"OSM XML $range: ${e.getMessage}", e)
+      }
+    Iterator.continually(next()).takeWhile(_ != null)
+  }
+
+  private def str(v: String): UTF8String = UTF8String.fromString(v.trim)
+
+  /** A lat/lon value as Spark's XML source parsed it: trimmed, sign
+    * split off, then `toDouble`, falling back to the locale's lenient
+    * `NumberFormat` ("12abc" is 12.0, "1,234.5" is 1234.5) — which
+    * throws on a value holding no number. */
+  private def double(v: String): Double = {
+    def parse(s: String): Double =
+      try s.toDouble
+      catch {
+        case _: NumberFormatException =>
+          NumberFormat.getInstance(Locale.getDefault).parse(s).doubleValue()
+      }
+    val t = v.trim
+    if (t.startsWith("+")) parse(t.substring(1))
+    else if (t.startsWith("-")) -parse(t.substring(1))
+    else parse(t)
+  }
+
+  /** The element the stream is at, read through its end tag: its
+    * attributes, and of its direct children the `tag`s, plus a way's
+    * `nd`s and a relation's `member`s. */
+  private def element(xml: XMLStreamReader, kind: Int): InternalRow = {
+    val row = new Array[Any](rawSchema.length)
+    row(0) = docTypeUtf8(kind)
+    var i = 0
+    while (i < xml.getAttributeCount) {
+      val name = xml.getAttributeLocalName(i)
+      val a = attrNames.indexOf(name)
+      if (a >= 0) row(1 + a) = str(xml.getAttributeValue(i))
+      else if (kind == Node && name == "lat") row(Lat) = double(xml.getAttributeValue(i))
+      else if (kind == Node && name == "lon") row(Lon) = double(xml.getAttributeValue(i))
+      i += 1
+    }
+    val tags = ArrayBuffer.empty[InternalRow]
+    val refs = ArrayBuffer.empty[InternalRow] // nd or member
+    var depth = 1
+    while (depth > 0) xml.next() match {
+      case XMLStreamConstants.START_ELEMENT =>
+        depth += 1
+        if (depth == 2) xml.getLocalName match {
+          case "tag" => tags += child(xml, TagAttrs)
+          case "nd" if kind == Way => refs += child(xml, NdAttrs)
+          case "member" if kind == Relation => refs += child(xml, MemberAttrs)
+          case _ =>
+        }
+      case XMLStreamConstants.END_ELEMENT => depth -= 1
+      case _ =>
+    }
+    def array(rows: ArrayBuffer[InternalRow]): GenericArrayData =
+      if (rows.isEmpty) null else new GenericArrayData(rows.toArray[Any])
+    row(Tag) = array(tags)
+    if (kind == Way) row(Nd) = array(refs)
+    if (kind == Relation) row(Member) = array(refs)
+    new GenericInternalRow(row)
+  }
+
+  /** A child element's named attributes, in order, as a struct row. */
+  private def child(xml: XMLStreamReader, names: Array[String]): InternalRow = {
+    val values = new Array[Any](names.length)
+    var i = 0
+    while (i < xml.getAttributeCount) {
+      val a = names.indexOf(xml.getAttributeLocalName(i))
+      if (a >= 0) values(a) = str(xml.getAttributeValue(i))
+      i += 1
+    }
+    new GenericInternalRow(values)
+  }
+
+  /** One type's rows of `path`, read one range per file, in the
+    * columns of its per-type raw schema: the attributes, then its own. */
+  private def ofType(spark: SparkSession, path: String, docType: String,
+      own: String*): DataFrame =
+    raw(spark, path, 0).where(col("doc_type") === docType)
+      .select((attrNames.map(a => s"_$a").toSeq ++ own).map(col): _*)
 
   def nodes(spark: SparkSession, path: String): DataFrame =
-    read(spark, path, "node", nodeSchema)
+    ofType(spark, path, "node", "_lat", "_lon", "tag")
 
   def ways(spark: SparkSession, path: String): DataFrame =
-    read(spark, path, "way", waySchema)
+    ofType(spark, path, "way", "nd", "tag")
 
   def relations(spark: SparkSession, path: String): DataFrame =
-    read(spark, path, "relation", relationSchema)
+    ofType(spark, path, "relation", "member", "tag")
 
-  /** Single-file `.osm` inputs LARGER than this transparently
-    * pre-chunk through [[OsmChunk.chunked]] before the scan (VERDICT
-    * r13 #7: the chunker was a pre-pass every caller had to
-    * remember). Below it, chunking overhead outweighs the parallelism
-    * it buys on a local scan; directories (already N files = N parse
-    * tasks) and non-local paths (`File.isFile` is false for
-    * hdfs://…) pass through untouched. */
-  private[osm] val ChunkThresholdBytes: Long = 16L << 20
+  /** [[collection]] aiming at one range per core. */
+  def collection(spark: SparkSession, path: String): DataFrame =
+    collection(spark, path, spark.sparkContext.defaultParallelism)
 
-  /** Resolve a [[collection]] read path to (path, parts): a
-    * chunkable over-threshold single file becomes its fragment
-    * directory with no post-scan exchange needed; a file that CANNOT
-    * chunk (DOCTYPE prologue → one fragment; or an unwritable source
-    * directory — the stamped sibling dir needs write access) keeps
-    * the single-file scan but fans the raw rows out post-scan, so
-    * the pipeline never serializes end-to-end.
-    *
-    * NON-local paths (ADVICE r14: `File.isFile` is false for
-    * `hdfs://…`/`s3a://…`, which used to return (path, 0) — a large
-    * remote single-file `.osm` got neither chunking nor the post-scan
-    * fan-out, serializing the whole pipeline into the one XML parse
-    * task) are probed through their own Hadoop FileSystem: a remote
-    * SINGLE FILE over the threshold keeps the single-file scan (the
-    * chunker is a local-FS pre-pass) but fans out post-scan; a remote
-    * directory is already N files = N parse tasks and passes through;
-    * an unprobeable path (globs, dead namenodes) keeps the fan-out —
-    * on an already-parallel scan the redistribution costs one narrow
-    * raw-row exchange, on a single file it is the ONLY parallelism. */
-  private[osm] def resolveChunked(spark: SparkSession, path: String,
-      threshold: Long): (String, Int) = {
-    val f = new java.io.File(path)
-    if (!f.isFile && !f.isDirectory) {
-      val parts = spark.sparkContext.defaultParallelism
-      try {
-        val hp = new org.apache.hadoop.fs.Path(path)
-        val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val st = fs.getFileStatus(hp)
-        if (st.isFile && st.getLen > threshold) (path, parts) else (path, 0)
-      } catch {
-        case scala.util.control.NonFatal(_) => (path, parts)
-      }
-    } else if (!f.isFile || f.length() <= threshold) (path, 0)
-    else {
-      val parts = spark.sparkContext.defaultParallelism
-      try {
-        val dir = OsmChunk.chunked(path, parts)
-        val n = Option(new java.io.File(dir).listFiles())
-          .getOrElse(Array.empty[java.io.File])
-          .count(_.getName.startsWith("part-"))
-        if (n > 1) (dir, 0) else (path, parts)
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"transparent chunking of $path failed (falling back to " +
-              s"single-file scan + post-scan redistribution): " +
-              s"${e.getClass.getName}: ${e.getMessage}")
-          (path, parts)
-      }
-    }
-  }
-
-  /** All three record types shaped ([[OsmShape.shape]]) and unioned
-    * into the single wide collection with `doc_type` discriminator.
-    * A single `.osm` file over [[ChunkThresholdBytes]] is chunked
-    * transparently (see [[resolveChunked]]) — callers no longer
-    * pre-chunk by hand. */
-  def collection(spark: SparkSession, path: String): DataFrame = {
-    val (p, parts) = resolveChunked(spark, path, ChunkThresholdBytes)
-    collection(spark, p, parts)
-  }
-
-  /** [[collection]] with the scan's rows REDISTRIBUTED before the
-    * shape stage. Spark's built-in XML source does not split a single
-    * file (a rowTag record may span any byte boundary, so each file
-    * is one partition — verified empirically at any
-    * `maxPartitionBytes`), which makes one planet-scale `.osm` a
-    * single-task pipeline no matter the cluster: parse, shape,
-    * Extended-JSON encode and write would ALL serialize. A
-    * round-robin repartition right after the scan confines the
-    * serial section to the parse alone — shape + encode + write fan
-    * out to `parts` tasks at the cost of one exchange of the raw
-    * rows. `parts <= 0` keeps the scan partitioning (the fixture/
-    * spec path, where an exchange would be noise).
-    *
-    * PREFERRED at scale: pre-chunk the file with [[OsmChunk]] (one
-    * streamed element-boundary split at ingest) and read the
-    * fragment directory with `parts = 0` — then the PARSE itself
-    * parallelizes too and no raw-row exchange is needed at all
-    * (OsmEtlBench r13: 11.3 → 23.8 input MB/s at reference scale). */
-  def collection(spark: SparkSession, path: String, parts: Int): DataFrame = {
-    def spread(df: DataFrame): DataFrame =
-      if (parts > 0) df.repartition(parts) else df
-    val n = OsmShape.shape(spread(nodes(spark, path)), "node")
-    val w = OsmShape.shape(spread(ways(spark, path)), "way")
-    val r = OsmShape.shape(spread(relations(spark, path)), "relation")
-    n.unionByName(w, allowMissingColumns = true)
-      .unionByName(r, allowMissingColumns = true)
-  }
+  /** Every element of `path` shaped ([[OsmShape.shapeAll]]) into the
+    * single wide collection with its `doc_type` discriminator, read in
+    * about `parts` ranges across the whole input (never fewer than one
+    * per file; `parts <= 0` is exactly one per file). */
+  def collection(spark: SparkSession, path: String, parts: Int): DataFrame =
+    OsmShape.shapeAll(raw(spark, path, parts))
 }

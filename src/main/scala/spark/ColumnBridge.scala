@@ -1,10 +1,15 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
-/** Column ⇄ catalyst Expression bridge.
+/** Column ⇄ catalyst Expression bridge, and the `InternalRow` DataFrame
+  * factory.
   *
   * Spark 4 made the classic converters `private[sql]`
   * (`org.apache.spark.sql.classic.ExpressionUtils`), so library code
@@ -12,8 +17,15 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * subexpression bindings, see [[graft.functions.Fns.let]]) needs this
   * one-hop re-export from inside the `org.apache.spark.sql` package —
   * the standard extension-library pattern, no private APIs re-implemented.
+  * The OSM reader ([[graft.osm.OsmXmlSource]]) builds catalyst rows
+  * itself; `internalCreateDataFrame` wraps them without the external
+  * `Row` conversion `createDataFrame` would run per row.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  def internalCreateDataFrame(spark: SparkSession, rows: RDD[InternalRow],
+      schema: StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 }

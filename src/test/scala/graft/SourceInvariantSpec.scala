@@ -112,6 +112,23 @@ class SourceInvariantSpec extends AnyFunSuite {
       s"Expression subclasses outside DotProduct: ${declaring - "DotProduct.scala"}")
   }
 
+  test("the OSM XML is read one way: Spark's per-rowTag XML source " +
+    "(format(\"xml\")) appears nowhere in src/main and an XMLInputFactory " +
+    "is constructed in exactly one place, so a second parser fails here by name") {
+    assert(mainRoot.isDirectory, s"source root not found at ${mainRoot.getAbsolutePath}")
+    def text(f: java.io.File): String = {
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.mkString finally src.close()
+    }
+    val xmlSource = scalaSources(mainRoot).filter(text(_).contains("format(\"xml\")"))
+      .map(_.getName)
+    assert(xmlSource.isEmpty, s"format(\"xml\") in src/main: $xmlSource")
+    val factory = "XMLInputFactory\\.new\\w*".r
+    val sites = scalaSources(mainRoot)
+      .flatMap(f => factory.findAllIn(code(f)).map(_ => f.getName))
+    assert(sites == Seq("OsmXmlSource.scala"), s"XMLInputFactory constructions: $sites")
+  }
+
   test("Bench's short-key mapping stays bijective with " +
     "SparkEntry.queries — a rename that collides two prefixes would " +
     "mis-attribute a timing in BENCH_r*.json; fail here, not mid-bench") {

@@ -15,6 +15,20 @@ import graft.SparkSpec
   */
 class OsmEtlBenchSpec extends SparkSpec {
 
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  /** The file read in each of `splits` range counts equals the file
+    * read as one range, row for row; returns the largest range count. */
+  private def splitLaw(xml: String, splits: Seq[Int]): Int = {
+    val whole = rows(OsmXmlSource.collection(spark, xml, 0))
+    splits.map { n =>
+      assert(rows(OsmXmlSource.collection(spark, xml, n)) == whole,
+        s"$xml read in $n ranges drifted from one range")
+      OsmChunk.ranges(xml, n, spark.sparkContext.hadoopConfiguration).length
+    }.max
+  }
+
   test("generator is deterministic (byte-identical on re-run) and " +
     "its element counts parse back exactly through OsmXmlSource — " +
     "the cell-36 parity check the bench relies on") {
@@ -33,15 +47,9 @@ class OsmEtlBenchSpec extends SparkSpec {
       .groupBy("doc_type").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(shaped == Map("node" -> nN, "way" -> nW, "relation" -> nR))
-    // the parts > 0 overload — the library's single-big-file path
-    // (Spark's XML source can't split one file): identical output,
-    // raw rows spread to `parts` partitions per record type BEFORE
-    // the shape stage so encode/write parallelize
-    val spread = OsmXmlSource.collection(spark, s"$dir/a.osm", 3)
-    assert(spread.groupBy("doc_type").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap == shaped)
-    assert(spread.rdd.getNumPartitions == 9, // 3 types x 3 parts
-      s"expected 3x3 partitions, got ${spread.rdd.getNumPartitions}")
+    // the one file read in 3 ranges is the same rows as read in one
+    assert(rows(OsmXmlSource.collection(spark, s"$dir/a.osm", 3)) ==
+      rows(OsmXmlSource.collection(spark, s"$dir/a.osm", 0)))
   }
 
   test("the generated tag mix exercises the cleaning surface: shaped " +
@@ -168,6 +176,8 @@ class OsmEtlBenchSpec extends SparkSpec {
     assert(cuts.nonEmpty)
     cuts.foreach(c => assert(c < cmtFrom || c >= cmtTo,
       s"cut $c inside the comment span [$cmtFrom,$cmtTo)"))
+    // and read as byte ranges of the one file, without fragment copies
+    assert(splitLaw(xml, Seq(2, 16)) > 1)
   }
 
   test("the scanner never cuts inside a processing instruction — " +
@@ -207,6 +217,7 @@ class OsmEtlBenchSpec extends SparkSpec {
     assert(cuts.nonEmpty)
     cuts.foreach(c => assert(c < piFrom || c >= piTo,
       s"cut $c inside the PI span [$piFrom,$piTo)"))
+    assert(splitLaw(xml, Seq(2, 16)) > 1)
   }
 
   test("property sweep: 20 seeded-random interleavings of elements, " +
@@ -311,112 +322,45 @@ class OsmEtlBenchSpec extends SparkSpec {
       OsmXmlSource.relations(spark, xml).count())
   }
 
-  test("chunked() memoizes per source version: same stamp reuses the " +
-    "fragment dir; touching the source re-chunks") {
-    val dir = Files.createTempDirectory("osmchunk3").toString
-    val xml = s"$dir/e.osm"
-    OsmEtlBench.generate(xml, 0.001)
-    val out1 = OsmChunk.chunked(xml, 4)
-    val frag = new java.io.File(out1).listFiles()
-      .filter(_.getName.startsWith("part-")).head
-    val m1 = frag.lastModified()
-    Thread.sleep(1100) // FS mtime resolution
-    assert(OsmChunk.chunked(xml, 4) == out1)
-    assert(frag.lastModified() == m1, "reused dir was rewritten")
-    new java.io.File(xml).setLastModified(System.currentTimeMillis())
-    OsmChunk.chunked(xml, 4)
-    assert(frag.lastModified() != m1 || !frag.exists(),
-      "source touch did not re-chunk")
-  }
-
-  test("chunked()'s reuse stamp carries the chunker format version — " +
-    "a directory from an older splitting algorithm re-chunks instead " +
-    "of being trusted forever (ADVICE r13)") {
-    val dir = Files.createTempDirectory("osmver").toString
-    val xml = s"$dir/v.osm"
-    OsmEtlBench.generate(xml, 0.001)
-    val out = OsmChunk.chunked(xml, 4)
-    val stampPath = java.nio.file.Paths.get(out, "_SOURCE_STAMP")
-    val stamp = new String(Files.readAllBytes(stampPath), "UTF-8")
-    assert(stamp.startsWith(s"v${OsmChunk.FormatVersion}:"), stamp)
-    // simulate a directory left by an older algorithm: same
-    // length/mtime/n, older version prefix → must re-chunk
-    Files.write(stampPath,
-      stamp.replaceFirst("^v\\d+:", "v1:").getBytes("UTF-8"))
-    val frag = new java.io.File(out).listFiles()
-      .filter(_.getName.startsWith("part-")).head
-    val m1 = frag.lastModified()
-    Thread.sleep(1100) // FS mtime resolution
-    assert(OsmChunk.chunked(xml, 4) == out)
-    assert(frag.lastModified() != m1 || !frag.exists(),
-      "old-format-version directory was trusted without re-chunking")
-    assert(new String(Files.readAllBytes(stampPath), "UTF-8")
-      .startsWith(s"v${OsmChunk.FormatVersion}:"))
-  }
-
-  test("OsmXmlSource.collection transparently chunks a single .osm " +
-    "over the size threshold (VERDICT r13 #7): the resolved read is " +
-    "the fragment directory with no post-scan exchange, rows are " +
-    "EXACTLY the unchunked collection's, and an unchunkable file " +
-    "falls back to post-scan redistribution") {
+  test("collection cuts a single .osm into byte ranges read inside the " +
+    "chunk framing: the extract read in N ranges is the extract read in " +
+    "one, and a DOCTYPE-carrying file stays one range with the same rows") {
     val dir = Files.createTempDirectory("osmauto").toString
     val xml = s"$dir/auto.osm"
     OsmEtlBench.generate(xml, 0.002)
-    // over-threshold relative to a 1 KiB test threshold — the
-    // wrapper's decision logic, exercised without a 16 MiB fixture
-    val (p, parts) = OsmXmlSource.resolveChunked(spark, xml, 1024)
-    assert(p != xml && parts == 0, s"expected fragment dir, got ($p, $parts)")
-    assert(new java.io.File(p).isDirectory)
-    val auto = OsmXmlSource.collection(spark, p, parts)
-      .collect().map(_.toString).sorted
-    val whole = OsmXmlSource.collection(spark, xml, 0)
-      .collect().map(_.toString).sorted
-    assert(auto.sameElements(whole), "wrapper drifted from direct read")
-    // under threshold: passthrough, no chunk dir materialized
-    val (p2, parts2) =
-      OsmXmlSource.resolveChunked(spark, xml, Long.MaxValue)
-    assert(p2 == xml && parts2 == 0)
-    // unchunkable (DOCTYPE → 1 fragment): single-file scan + fan-out
+    assert(splitLaw(xml, Seq(2, 3, 7, 16)) > 1, "the extract was never cut")
     val dtd = s"$dir/dtd.osm"
     Files.write(java.nio.file.Paths.get(dtd),
       ("<?xml version=\"1.0\"?>\n<!DOCTYPE osm [ <!ENTITY e \"x\"> ]>\n" +
-        "<osm version=\"0.6\">\n  <node id=\"1\" lat=\"1\" lon=\"2\"/>\n" +
+        "<osm version=\"0.6\">\n" + (0 until 50).map(i =>
+          s"""  <node id="$i" lat="1" lon="2" version="1" changeset="1" timestamp="2015-01-01T00:00:00Z" user="u" uid="1"/>\n""").mkString +
         "</osm>\n").getBytes("UTF-8"))
-    val (p3, parts3) = OsmXmlSource.resolveChunked(spark, dtd, 16)
-    assert(p3 == dtd && parts3 == spark.sparkContext.defaultParallelism,
-      s"expected fallback redistribution, got ($p3, $parts3)")
-    // and the PUBLIC two-arg collection on an under-threshold file is
-    // the plain unchunked read
-    assert(OsmXmlSource.collection(spark, xml)
-      .collect().map(_.toString).sorted.sameElements(whole))
+    assert(splitLaw(dtd, Seq(2, 8)) == 1, "a DOCTYPE file was cut")
+    assert(OsmXmlSource.collection(spark, dtd).count() == 50)
+    // the two-argument form aims at one range per core
+    assert(rows(OsmXmlSource.collection(spark, xml)) ==
+      rows(OsmXmlSource.collection(spark, xml, 0)))
   }
 
-  test("resolveChunked probes NON-local paths through Hadoop instead " +
-    "of java.io.File (ADVICE r14): an over-threshold remote single " +
-    "file keeps the post-scan fan-out, an under-threshold one and a " +
-    "remote directory pass through, an unprobeable path keeps the " +
-    "fan-out") {
-    val par = spark.sparkContext.defaultParallelism
+  test("ranges are found through the path's Hadoop FileSystem: a file:// " +
+    "URI cuts like the plain path, a directory is at least one range per " +
+    "file, and a path matching nothing fails by name") {
+    val conf = spark.sparkContext.hadoopConfiguration
     val dir = Files.createTempDirectory("osmremote").toString
-    val f = s"$dir/r.osm"
-    Files.write(java.nio.file.Paths.get(f),
-      ("<osm version=\"0.6\"><node id=\"1\" lat=\"1\" lon=\"2\"/>" +
-        "</osm>").getBytes("UTF-8"))
-    // file:// URIs are not java.io.File paths, so they exercise the
-    // Hadoop-probe branch with deterministic local statuses
-    val (po, po_n) = OsmXmlSource.resolveChunked(spark, s"file://$f", 16)
-    assert(po == s"file://$f" && po_n == par,
-      s"over-threshold remote file must fan out, got ($po, $po_n)")
-    val (pu, pu_n) =
-      OsmXmlSource.resolveChunked(spark, s"file://$f", Long.MaxValue)
-    assert(pu == s"file://$f" && pu_n == 0)
-    val (pd, pd_n) = OsmXmlSource.resolveChunked(spark, s"file://$dir", 16)
-    assert(pd == s"file://$dir" && pd_n == 0,
-      s"remote directory is already N parse tasks, got ($pd, $pd_n)")
-    val ghost = s"file://$dir/nope.osm"
-    val (pg, pg_n) = OsmXmlSource.resolveChunked(spark, ghost, 16)
-    assert(pg == ghost && pg_n == par,
-      s"unprobeable path must keep the fan-out, got ($pg, $pg_n)")
+    OsmEtlBench.generate(s"$dir/r.osm", 0.002)
+    OsmEtlBench.generate(s"$dir/s.osm", 0.001)
+    val local = OsmChunk.ranges(s"$dir/r.osm", 4, conf)
+    val uri = OsmChunk.ranges(s"file://$dir/r.osm", 4, conf)
+    assert(local.length > 1 && uri == local, s"$uri != $local")
+    assert(rows(OsmXmlSource.collection(spark, s"file://$dir/r.osm", 4)) ==
+      rows(OsmXmlSource.collection(spark, s"$dir/r.osm", 0)))
+    assert(OsmChunk.ranges(s"file://$dir", 0, conf).length == 2)
+    assert(OsmChunk.ranges(s"file://$dir", 1, conf).length == 2)
+    assert(rows(OsmXmlSource.collection(spark, s"file://$dir", 6)) ==
+      rows(OsmXmlSource.collection(spark, dir, 0)))
+    val ex = intercept[IllegalArgumentException](
+      OsmXmlSource.collection(spark, s"file://$dir/nope.osm"))
+    assert(ex.getMessage.contains("no OSM input"), ex.getMessage)
   }
 
   test("looksComplete requires the count-stamped generator header " +

@@ -53,12 +53,15 @@ def main():
     oracles = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     dirs = set(d for d in os.listdir(out_dir)
                if os.path.isdir(os.path.join(out_dir, d)))
-    # union with the FULL query list (queries.json) so a crashed
-    # no-oracle query is a FAIL-miss, not a silent omission; fall back
-    # to oracle keys for output dirs written before queries.json existed
+    # queries.json names the queries graft.Verify dumped (all of them
+    # unless it was given a subset): compare exactly those, so a crashed
+    # query is a FAIL-miss and an unselected one is not; fall back to
+    # output dirs + oracle keys for dirs written before queries.json
     qpath = os.path.join(out_dir, "queries.json")
-    declared = set(json.load(open(qpath))) if os.path.exists(qpath) else set()
-    names = sorted(dirs | set(oracles) | declared)
+    if os.path.exists(qpath):
+        names = sorted(set(json.load(open(qpath))))
+    else:
+        names = sorted(dirs | set(oracles))
     n_pass = n_fail = n_noracle = 0
     for name in names:
         if name not in dirs:
