@@ -82,6 +82,29 @@ object Bench {
       Set("cls2", "cls4", "cal1", "al1"),
       (s, d) => { operators.RetrievalOps.nbDocScores(s, d); () }))
 
+  /** One timed run of a query. A failed query reports -1, never a
+    * (fast) bogus elapsed time, and names its cause on stderr as
+    * `[graft] <query> failed: <class>: <message>`, so the -1 in
+    * BENCH_FULL.json comes with its reason. */
+  private[graft] def once(spark: org.apache.spark.sql.SparkSession, sfDir: String,
+      name: String, fn: (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame): Double = {
+    val t0 = System.nanoTime()
+    try {
+      // time FULL materialization of the query's own plan, not
+      // df.count(): Catalyst prunes every column count() doesn't
+      // need, so a projection-heavy query (cleaning chains,
+      // p1-class selects) was under-measured.
+      // toRdd executes the final physical plan and produces each
+      // output row; count() on the RDD forces every partition.
+      fn(spark, sfDir).queryExecution.toRdd.count()
+      (System.nanoTime() - t0) / 1e9
+    } catch { case e: Throwable =>
+      System.err.println(s"[graft] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+      -1.0
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local("graft-bench")
@@ -161,28 +184,13 @@ object Bench {
         v.toInt
       }.getOrElse(3))
     val ordered = selected.sortBy(_._1)
-    // a failed query reports -1, never a (fast) bogus elapsed time
-    def once(fn: (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try {
-        // time FULL materialization of the query's own plan, not
-        // df.count(): Catalyst prunes every column count() doesn't
-        // need, so a projection-heavy query (cleaning chains,
-        // p1-class selects) was under-measured (VERDICT r12 #3).
-        // toRdd executes the final physical plan and produces each
-        // output row; count() on the RDD forces every partition.
-        fn(spark, sfDir).queryExecution.toRdd.count()
-        (System.nanoTime() - t0) / 1e9
-      } catch { case _: Throwable => -1.0 }
-    }
     // nRuns FULL passes over the whole list; each query's scratch
     // cache is cleared after its run in EVERY pass, so pass 2/3 time
     // the same cold-cache work as pass 1 (JIT/codegen warmth carries
     // over, which is what min-of-N was for in the first place).
     val passes: Seq[Seq[Double]] = Seq.fill(nRuns) {
-      ordered.map { case (_, fn) =>
-        val t = once(fn)
+      ordered.map { case (name, fn) =>
+        val t = once(spark, sfDir, name, fn)
         // cached tables some operators persist are per-query scratch
         spark.catalog.clearCache()
         t

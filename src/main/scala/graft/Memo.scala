@@ -12,7 +12,8 @@ import org.apache.spark.sql.SparkSession
   * by (session, dir, [[Tables.versionStamp]] of `table`), so a dataset
   * REWRITTEN at the same path within a session gets a fresh build
   * instead of a stale checkpoint. Values are narrow, eagerly
-  * checkpointed relations; entries live for the session, and
+  * checkpointed relations, or a table's schema ([[Tables.apply]]);
+  * entries live for the session, and
   * [[Memo.clearAll]] drops every memo for cold-run specs.
   *
   * Superseded stamps are evicted BOTH before and after the build: a
@@ -107,6 +108,21 @@ object Memo {
   final case class Step(name: String, concurrent: Boolean = false)(
       val build: (SparkSession, String) => Any)
 
+  /** Where concurrent steps run: one thread per running step, since a
+    * step blocks on Spark jobs (the global pool, sized to the cores,
+    * could queue a step behind blocked ones). The threads are named
+    * `graft-memo-N` so a thread dump shows which build is running, and
+    * are daemons so an idle pool never holds the JVM open. */
+  private lazy val stepPool: ExecutionContext = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    ExecutionContext.fromExecutorService(
+      java.util.concurrent.Executors.newCachedThreadPool { r =>
+        val t = new Thread(r, s"graft-memo-${n.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+  }
+
   /** The memo-line runner: starts the concurrent steps, runs the inline
     * steps in order up to the first failure, then awaits EVERY started
     * step before returning, so no build keeps running detached. The
@@ -116,7 +132,7 @@ object Memo {
     (s, d) => {
       def go(st: Step): Try[Unit] = Try { timed(line, st.name)(st.build(s, d)); () }
       val (bg, fg) = steps.partition(_.concurrent)
-      val started = bg.map(st => Future(go(st))(ExecutionContext.global))
+      val started = bg.map(st => Future(go(st))(stepPool))
       val inline = fg.foldLeft(Vector.empty[Try[Unit]]) { (done, st) =>
         if (done.exists(_.isFailure)) done else done :+ go(st)
       }

@@ -49,4 +49,15 @@ class MemoSpec extends SparkSpec {
     assert(finished.get, "returned before the concurrent step finished")
     assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("second"))
   }
+
+  test("concurrent memo steps run on named daemon graft-memo threads") {
+    val seen = new java.util.concurrent.atomic.AtomicReference[Thread]()
+    Memo.run("memo_test",
+      Memo.Step("where", concurrent = true)((_, _) => seen.set(Thread.currentThread())))(
+      null, "/unused")
+    val t = seen.get
+    assert(t != null && t != Thread.currentThread(), "the concurrent step ran inline")
+    assert(t.getName.startsWith("graft-memo-"), s"step thread named ${t.getName}")
+    assert(t.isDaemon, "a step thread would hold the JVM open")
+  }
 }

@@ -40,4 +40,18 @@ class OutputContractSpec extends SparkSpec {
       "non-scalar output columns (wrap in Fns.strJoin / hex):\n  " +
         offenders.mkString("\n  "))
   }
+
+  test("a failed bench run reports -1 and names the query and its cause " +
+    "on stderr") {
+    val err = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    val t = try Bench.once(spark, sf, "zz_failing",
+      (_, _) => throw new IllegalStateException("boom"))
+    finally System.setErr(saved)
+    assert(t == -1.0)
+    assert(err.toString("UTF-8").linesIterator.contains(
+      "[graft] zz_failing failed: java.lang.IllegalStateException: boom"))
+  }
 }
+

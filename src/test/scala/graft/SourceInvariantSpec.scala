@@ -99,6 +99,34 @@ class SourceInvariantSpec extends AnyFunSuite {
       s"Future/ExecutionContext outside the step runner: ${users - "Memo.scala"}")
   }
 
+  /** A parquet read: `.read` then any option/schema calls (arguments
+    * nested up to three parentheses deep), ending in `.parquet(` or
+    * `.format("parquet")`, across line breaks. */
+  private val parquetRead =
+    """\.read(\s*\.(?!parquet\b|format\b)\w+\((?:[^()]|\((?:[^()]|\([^()]*\))*\))*\))*\s*\.(parquet\(|format\(\s*"parquet"\s*\))""".r
+
+  test("the parquet-read pattern sees every read form and no write") {
+    val reads = Seq("spark.read.parquet(p)", "s.read.schema(st).parquet(p)",
+      "spark.read\n  .schema(memo.get(s, d)(infer(p)))\n  .parquet(p)",
+      "spark.read.option(\"mergeSchema\", \"true\").parquet(p)",
+      "spark.read.format(\"parquet\").load(p)")
+    reads.foreach(r => assert(parquetRead.findFirstIn(r).isDefined, s"missed: $r"))
+    val others = Seq("df.write.mode(\"overwrite\").parquet(p)", "spark.read.text(p)",
+      "spark.read.format(\"xml\").load(p)", "raf.read(buf)")
+    others.foreach(o => assert(parquetRead.findFirstIn(o).isEmpty, s"false hit: $o"))
+  }
+
+  test("parquet is read only in Tables.scala — every table open goes " +
+    "through Tables.apply and its schema memo, so a query that reads " +
+    "parquet itself (and pays a schema-inference job per call) fails here by name") {
+    assert(mainRoot.isDirectory, s"source root not found at ${mainRoot.getAbsolutePath}")
+    val readers = scalaSources(mainRoot)
+      .filter(f => parquetRead.findFirstIn(code(f)).isDefined)
+      .map(_.getName).toSet
+    assert(readers == Set("Tables.scala"),
+      s"parquet reads outside Tables.scala: ${readers - "Tables.scala"}")
+  }
+
   test("a Catalyst Expression subclass is declared only in DotProduct.scala — " +
     "every other JVM kernel reaches Catalyst through the one Kernel " +
     "(StaticInvoke) binding, so a hand-written expression class fails here by name") {
