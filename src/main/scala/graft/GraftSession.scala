@@ -15,9 +15,35 @@ import org.apache.spark.sql.SparkSession
   *     timestamp[us] without UTC adjustment); [[Tables.normalizeEventTs]]
   *     is schema-gated and canonicalizes any of them to a UTC TIMESTAMP
   *     that agrees with DuckDB's `epoch_us` semantics.
+  *   - `spark.sql.codegen.cache.maxEntries` = [[CodegenCacheEntries]]
+  *     (Spark's default is 100) and whole-stage class names without
+  *     the stage id: the engine reruns the same queries in one JVM,
+  *     and a generated class the JVM-global cache has evicted is
+  *     compiled again. The working set of one pass is about 100
+  *     classes for the `osm` pass and about 2,440 for the 228-query
+  *     registry at sf0.01 and at sf0.1 (2,810-2,820 while class names
+  *     carried the stage id). At the default cap a warm sf0.01
+  *     registry pass compiled about 3,300 classes and a warm `osm`
+  *     pass 53; a cap of 1000 still compiled 1,922 per warm registry
+  *     pass (NO-GO); at 8192 they compile 53-60 and 0. The cap cost
+  *     18 MB of metaspace and 28 MB of heap after GC at the end of
+  *     two sf0.01 registry passes.
   */
 object GraftSession {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
+  /** Cap of Spark's JVM-global codegen cache. `CodeGenerator` reads it
+    * once per JVM, from the first session that generates code, so it
+    * is set on every builder (here and in the specs' session) and is
+    * not an option. Spark builds the cache on Guava, which splits the
+    * cap over 4 segments that evict on their own, so a working set
+    * just under the cap still thrashes: the cap is the smallest power
+    * of two at least twice the largest measured working set (2,819
+    * classes, one registry pass at sf0.1 before class names dropped
+    * the stage id). Not unbounded: the queries whose generated source
+    * differs on every run (53-60 classes per warm registry pass) would
+    * grow it forever. */
+  val CodegenCacheEntries: Int = 8192
 
   def local(appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()
@@ -29,6 +55,14 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.maxResultSize", "4g")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      // A whole-stage class is named after its stage id, and a query's
+      // stage ids differ from run to run under adaptive execution:
+      // s6_ann_recall compiled 48-78 classes on every warm run whose
+      // source differed from a cached one only in that suffix. Without
+      // it, equal pipelines share one class; the id still shows as
+      // `*(N)` in the plan.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       // bloom_filter_agg (and stat.bloomFilter, which delegates to it
       // in Spark 4) silently CLAMPS its sketch at these caps — the
       // defaults (4M items / 64M bits = 8 MB) saturate a

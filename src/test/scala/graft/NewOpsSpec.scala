@@ -1168,20 +1168,21 @@ class NewOpsSpec extends SparkSpec {
       (reference(2), "unrelated reference corpus filler document"),
       (reference(3), "duplicate only inside the reference side"),
       (reference(4), "duplicate only inside the reference side"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-d10").toString
-    import spark.implicits._
-    rows.toDF("doc_id", "text")
-      .withColumn("lang", lit("en")).withColumn("source", lit("src0"))
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .write.parquet(s"$dir/documents.parquet")
-    val verdicts = SparkEntry.queries("d10_incremental_dedup")(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toMap
-    assert(verdicts(incoming(0)) == "exact", verdicts)
-    assert(verdicts(incoming(1)) == "near", verdicts)
-    assert(verdicts(incoming(2)) == "keep", verdicts)
-    // only incoming docs are verdicted; the reference-side dup pair
-    // (never a candidate in the directional join) is absent entirely
-    assert(verdicts.keySet == Set(incoming(0), incoming(1), incoming(2)))
+    withTempDir("graft-d10") { dir =>
+      import spark.implicits._
+      rows.toDF("doc_id", "text")
+        .withColumn("lang", lit("en")).withColumn("source", lit("src0"))
+        .withColumn("n_chars", length(col("text")).cast("long"))
+        .write.parquet(s"$dir/documents.parquet")
+      val verdicts = SparkEntry.queries("d10_incremental_dedup")(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getString(1))).toMap
+      assert(verdicts(incoming(0)) == "exact", verdicts)
+      assert(verdicts(incoming(1)) == "near", verdicts)
+      assert(verdicts(incoming(2)) == "keep", verdicts)
+      // only incoming docs are verdicted; the reference-side dup pair
+      // (never a candidate in the directional join) is absent entirely
+      assert(verdicts.keySet == Set(incoming(0), incoming(1), incoming(2)))
+    }
   }
 
   test("d10/d2 consistency law: the 'near' verdicts are EXACTLY the " +

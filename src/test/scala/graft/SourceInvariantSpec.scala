@@ -157,6 +157,37 @@ class SourceInvariantSpec extends AnyFunSuite {
     assert(sites == Seq("OsmXmlSource.scala"), s"XMLInputFactory constructions: $sites")
   }
 
+  /** Every Scala source of the engine, its specs and the benchmark
+    * harness: a session built anywhere in one of them can be the one
+    * that sizes the JVM-global codegen cache. */
+  private val allRoots = Seq("src/main/scala", "src/test/scala", "perfbench/src/main/scala")
+    .map(new java.io.File(_))
+
+  test("a SparkSession builder appears only in GraftSession.scala and " +
+    "SparkSpec.scala — Spark sizes its JVM-global codegen cache from the " +
+    "first session that generates code, so any other builder could fix " +
+    "it at the default cap of 100 for the whole JVM") {
+    assert(allRoots.forall(_.isDirectory), s"source roots: ${allRoots.map(_.getAbsolutePath)}")
+    val builder = """SparkSession\s*\.\s*[Bb]uilder\b""".r
+    val sites = allRoots.flatMap(scalaSources)
+      .filter(f => builder.findFirstIn(code(f)).isDefined)
+      .map(_.getName).toSet
+    assert(sites == Set("GraftSession.scala", "SparkSpec.scala"),
+      s"session builders: $sites")
+  }
+
+  test("spark.sql.codegen.cache.maxEntries is set only from " +
+    "GraftSession.CodegenCacheEntries, once in each session builder") {
+    val key = "\"spark.sql.codegen.cache.maxEntries\""
+    val sites = allRoots.flatMap(scalaSources).flatMap { f =>
+      code(f).linesIterator.map(_.trim).filter(_.contains(key)).map(f.getName -> _)
+    }
+    assert(sites.sorted == Seq(
+      "GraftSession.scala" -> s".config($key, CodegenCacheEntries.toLong)",
+      "SparkSpec.scala" -> s".config($key, GraftSession.CodegenCacheEntries.toLong)"),
+      s"codegen cache cap named at: $sites")
+  }
+
   test("Bench's short-key mapping stays bijective with " +
     "SparkEntry.queries — a rename that collides two prefixes would " +
     "mis-attribute a timing in BENCH_r*.json; fail here, not mid-bench") {

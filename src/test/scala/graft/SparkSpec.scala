@@ -15,7 +15,16 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.codegen.cache.maxEntries", GraftSession.CodegenCacheEntries.toLong)
+    .config("spark.sql.codegen.useIdInClassName", "false")
     .getOrCreate()
+
+  /** `body` given a fresh temp directory named `prefix…`, deleted
+    * with everything in it when `body` ends. */
+  def withTempDir[T](prefix: String)(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(dir.toString) finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
 
   /** Build one `Bench.memoBuilds` line the way Bench primes it. */
   def primeMemo(name: String, dir: String): Unit =

@@ -44,11 +44,6 @@ class TablesSchemaMemoSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
-  private def withTempDir[T](body: String => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory("tables-memo").toFile
-    try body(dir.toString) finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
-  }
-
   private def digest(df: DataFrame): (Long, Long) = {
     val r = df.selectExpr("coalesce(sum(cast(hash(*) as bigint)), 0)", "count(*)").head()
     (r.getLong(0), r.getLong(1))
@@ -73,7 +68,7 @@ class TablesSchemaMemoSpec extends SparkSpec {
   test("a table rewritten at the same path in the same session is read " +
     "with its new column and values") {
     import org.apache.spark.sql.functions.col
-    withTempDir { dir =>
+    withTempDir("tables-memo") { dir =>
       val path = s"$dir/documents.parquet"
       spark.range(5).write.parquet(path)
       assert(Tables(spark, dir, "documents").columns.toSeq == Seq("id"))
@@ -89,7 +84,7 @@ class TablesSchemaMemoSpec extends SparkSpec {
 
   test("a path whose version stamp is 0 is read uncached: no memoized " +
     "schema is served, and every open infers") {
-    withTempDir { base =>
+    withTempDir("tables-memo") { base =>
       spark.range(3).write.parquet(s"$base/t1/documents.parquet")
       // a glob root reads fine but lists nothing as a literal path
       val dir = s"$base/t*"

@@ -185,6 +185,41 @@ class OsmEndToEndSpec extends SparkSpec {
     assert(m("2001") == Seq("3001"))
   }
 
+  test("refDocs' one explode over both ref arrays equals the union of " +
+    "two explode_outer scans, on docs with both arrays, null refs and " +
+    "a repeated referrer") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val member = StructType(Seq("type", "ref", "role").map(StructField(_, StringType)))
+    val schema = StructType(Seq(
+      StructField("_id", StringType, nullable = false),
+      StructField("node_refs", ArrayType(StringType)),
+      StructField("members", ArrayType(member))))
+    def m(ref: String) = Row("node", ref, "")
+    val fixture = spark.createDataFrame(java.util.Arrays.asList(
+      Row("w1", Seq("n1", "n2", null), null),
+      // both arrays: its refs from each side count once in the set
+      Row("r1", Seq("n1"), Seq(m("n1"), m("w1"), m(null))),
+      // a repeated referrer of n2, from members and from node_refs
+      Row("r2", Seq("n2", "n2"), Seq(m("n2"), m("n2"))),
+      Row("w2", Seq.empty[String], Seq.empty[Row]),
+      Row("n1", null, null),
+      Row("r3", null, Seq(m(null)))), schema)
+    def twoScans(d: DataFrame): DataFrame =
+      d.select(col("_id"), explode_outer(col("node_refs")).as("ref"))
+        .unionAll(d.select(col("_id"), explode_outer(col("members.ref")).as("ref")))
+        .filter(col("ref").isNotNull)
+        .groupBy(col("ref"))
+        .agg(sort_array(collect_set(col("_id"))).as("refers"))
+        .withColumnRenamed("ref", "_id")
+    def rows(df: DataFrame): Map[String, Seq[String]] =
+      df.collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
+    val got = rows(OsmAudit.refDocs(fixture))
+    assert(got == rows(twoScans(fixture)))
+    assert(got == Map("n1" -> Seq("r1", "w1"), "n2" -> Seq("r2", "w1"), "w1" -> Seq("r1")))
+    assert(OsmAudit.refDocs(fixture).schema == twoScans(fixture).schema)
+  }
+
   test("mostRefd (T1 + back-join contributor)") {
     val rows = OsmAudit.mostRefd(docs, "name", 2).collect()
     assert(rows.length == 1)

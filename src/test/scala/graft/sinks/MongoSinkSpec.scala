@@ -4,7 +4,6 @@ import graft.SparkSpec
 import graft.osm.OsmXmlSource
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import java.nio.file.Files
 
 /** S3 — the MongoDB load path, tested to the edge of the sandbox: the
   * Extended-JSON dump is byte-checked against the canonical encoding
@@ -92,16 +91,17 @@ class MongoSinkSpec extends SparkSpec {
     "typed content partition-parallel") {
     val docs = OsmXmlSource.collection(spark,
       getClass.getResource("/mini.osm").getPath)
-    val out = Files.createTempDirectory("graft-mongoimport").toString
-    MongoImportSink.write(docs, out)
-    val back = spark.read.json(out) // $-keyed wrappers become fields
-    assert(back.count() == docs.count())
-    val lanes = back.filter(col("_id") === "1003")
-      .select(col("int_tags.lanes.$numberLong")).collect().head.getString(0)
-    assert(lanes == "2")
-    // int64 never travels as a bare JSON number anywhere in the dump
-    val raw = spark.read.text(out)
-    assert(raw.filter(col("value").contains(""""lanes":2""")).count() == 0)
+    withTempDir("graft-mongoimport") { out =>
+      MongoImportSink.write(docs, out)
+      val back = spark.read.json(out) // $-keyed wrappers become fields
+      assert(back.count() == docs.count())
+      val lanes = back.filter(col("_id") === "1003")
+        .select(col("int_tags.lanes.$numberLong")).collect().head.getString(0)
+      assert(lanes == "2")
+      // int64 never travels as a bare JSON number anywhere in the dump
+      val raw = spark.read.text(out)
+      assert(raw.filter(col("value").contains(""""lanes":2""")).count() == 0)
+    }
   }
 
   test("field names Mongo rejects fail fast at the driver, naming " +
@@ -113,8 +113,8 @@ class MongoSinkSpec extends SparkSpec {
       lit(3L).as("fine"))
     val bad = MongoExtendedJson.invalidFieldNames(df.schema)
     assert(bad == Seq("$bad", "nested.a.b"), bad)
-    val e = intercept[IllegalArgumentException] {
-      MongoImportSink.write(df, Files.createTempDirectory("x").toString)
+    val e = withTempDir("x") { out =>
+      intercept[IllegalArgumentException](MongoImportSink.write(df, out))
     }
     assert(e.getMessage.contains("$bad"))
   }
