@@ -4,12 +4,13 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import graft.functions.{DotProduct, JaroWinklerKernel, PhoneFormat}
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
+import graft.functions.{Dot, JaroWinklerKernel, Kernel, PhoneFormat}
 
 /** The engine's SparkSessionExtensions: registers the engine's
-  * functions (the JVM kernels' [[graft.functions.Kernel]] calls and
-  * the native [[DotProduct]]) into the function registry so they're
-  * callable from SQL and `call_function` alike. Loadable by class name via
+  * functions (the JVM kernels' [[graft.functions.Kernel]] calls) into
+  * the function registry so they're callable from SQL and
+  * `call_function` alike. Loadable by class name via
   * `spark.sql.extensions=graft.GraftSparkExtensions` on any cluster,
   * or programmatically via `builder.withExtensions` ([[GraftSession]]).
   */
@@ -17,10 +18,18 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((
       new FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
+      new ExpressionInfo(Dot.getClass.getName, "dot_product"),
       (children: Seq[Expression]) => {
         arity("dot_product", children, 2)
-        DotProduct(children(0), children(1))
+        // the analyzer resolves the children before it calls this, so
+        // their types are known: the result can be null on non-null
+        // arrays only where an element type admits null
+        val elemNullable = children.exists(_.dataType match {
+          case ArrayType(_, containsNull) => containsNull
+          case _ => false
+        })
+        Kernel(Dot, "dot", DoubleType, Seq(ArrayType(DoubleType), ArrayType(DoubleType)),
+          returnNullable = elemNullable)(children: _*)
       }))
     ext.injectFunction((
       new FunctionIdentifier("format_phone"),

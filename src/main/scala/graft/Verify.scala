@@ -23,7 +23,8 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        // the class names a cause whose message is null (a JVM NPE)
+        System.err.println(s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
       }
       // release any per-query persisted scratch (LSH signatures etc.)
       spark.catalog.clearCache()

@@ -53,27 +53,17 @@ object Fns {
   /** Sequential left-to-right dot product of two double arrays.
     * Accumulation order is pinned (foldLeft semantics of `aggregate`),
     * so the result is bit-identical to DuckDB's sequential
-    * `list_sum(list_transform(...))` over the same doubles.
+    * `list_sum(list_transform(...))` over the same doubles. No query
+    * calls it: Spark evaluates higher-order functions interpreted, so
+    * queries call [[dotNative]], and the specs check the kernel against
+    * this reference.
     */
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
 
-  /** Fixed-dimension dot product, fully unrolled: Spark's higher-order
-    * functions (zip_with/aggregate) evaluate interpreted, which
-    * dominates quadratic similarity joins; a flat left-associated
-    * `a[1]*b[1] + … + a[n]*b[n]` stays inside whole-stage codegen and
-    * is an order of magnitude faster while producing the bit-identical
-    * IEEE sum (same accumulation order, and 0.0 + x == x). */
-  def dotN(a: Column, b: Column, n: Int): Column =
-    (1 to n).map(i => element_at(a, i) * element_at(b, i)).reduceLeft(_ + _)
-
-  /** Unrolled L2 norm. */
-  def l2N(a: Column, n: Int): Column = sqrt(dotN(a, a, n))
-
-  /** The native codegen'd dot product ([[DotProduct]], registered by
-    * [[graft.GraftSparkExtensions]]) — same sequential semantics as
-    * [[dot]]/[[dotN]], compiled into the stage. Preferred form wherever
-    * the plan supports whole-stage codegen. */
+  /** The `dot_product` kernel ([[Dot]], bound by
+    * [[graft.GraftSparkExtensions]]): same sequential semantics as
+    * [[dot]], one static call per row inside the whole-stage stage. */
   def dotNative(a: Column, b: Column): Column =
     call_function("dot_product", a, b)
 

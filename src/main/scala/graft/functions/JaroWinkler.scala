@@ -19,7 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - transpositions t = (half-transposition count)/2, integer;
   *   - jaro = (m/|a| + m/|b| + (m-t)/m) / 3, evaluated left-to-right
   *     in IEEE doubles (this exact association order is part of the
-  *     cross-engine contract, like [[DotProduct]]'s accumulator);
+  *     cross-engine contract, like [[Dot]]'s accumulator);
   *   - the Winkler prefix boost applies ONLY when jaro > 0.7:
   *     jw = jaro + p*0.1*(1 - jaro), p = common prefix capped at 4.
   *

@@ -15,11 +15,18 @@ import org.apache.spark.sql.types.DataType
   * kernel, never called with null, never returns it (the result is
   * nullable only where an argument is); without it the kernel sees
   * the null and may return one.
+  *
+  * `returnNullable` is the case between: null arguments propagate, but
+  * the kernel may also return null for non-null ones (`dot_product`
+  * on an array holding a null element), so the result is nullable and
+  * the generated code tests the returned box. It is always on without
+  * `propagateNull`, so a call that leaves it out plans as before.
   */
 object Kernel {
 
   def apply(kernel: AnyRef, fn: String, dt: DataType, inputTypes: Seq[DataType],
-      propagateNull: Boolean = true)(args: Expression*): Expression =
+      propagateNull: Boolean = true, returnNullable: Boolean = false)(
+      args: Expression*): Expression =
     StaticInvoke(kernel.getClass, dt, fn, args, inputTypes, propagateNull,
-      returnNullable = !propagateNull)
+      returnNullable = returnNullable || !propagateNull)
 }

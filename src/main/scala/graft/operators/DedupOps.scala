@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Memo, Tables}
+import graft.functions.Dot
 import graft.functions.Fns._
 
 /** Deduplication operators for a large-scale training-data pipeline:
@@ -413,7 +414,7 @@ object DedupOps {
     // streamed side — no second parquet pass
     val collected = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-      .withColumn("nrm", l2N(col("emb"), 64))
+      .withColumn("nrm", l2Native(col("emb")))
       .as[(Long, Array[Double], Double)]
       .collect().sortBy(_._1)
     val corpus = s.sparkContext.broadcast(collected)
@@ -423,10 +424,7 @@ object DedupOps {
       val c = corpus.value
       it.flatMap { case (i, a, na) =>
         c.iterator.filter(_._1 > i).flatMap { case (j, b, nb) =>
-          var sum = 0.0
-          var k = 0
-          while (k < 64) { sum += a(k) * b(k); k += 1 }
-          val cos = round6(sum / (na * nb))
+          val cos = round6(Dot.dot(a, b) / (na * nb))
           if (geqSql(cos, D5_THRESH)) Some((i, j, cos)) else None
         }
       }

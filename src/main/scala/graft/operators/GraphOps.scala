@@ -73,10 +73,12 @@ object GraphOps {
     * an extra materialization of a node-sized result. Instead of a
     * comment-documented leak, every such persist now has a REGISTERED
     * OWNER: each graph query's entry first releases whatever the
-    * previous one left behind, so at most one query's scratch is ever
-    * resident, and a long-lived driver can release eagerly via
-    * [[releaseScratch]]. Bench's per-query clearCache subsumes this;
-    * the registry covers every other caller. Queries whose results
+    * previous one left behind in the same session, so at most one
+    * query's scratch is resident per session, and a long-lived driver
+    * can release eagerly via [[releaseScratch]]. The registry is keyed
+    * by session: a graph query in one session never unpersists
+    * another session's scratch. Bench's per-query clearCache subsumes
+    * this; the registry covers every other caller. Queries whose results
     * materialize eagerly inside the body (gr5/gr7/gr8) release their
     * own scratch and never register.
     *
@@ -95,22 +97,25 @@ object GraphOps {
     * recompute-correct but unamortized. Concurrent drivers should
     * serialize graph queries or call [[releaseScratch]] themselves at
     * known-quiet points. */
-  private val scratch =
-    scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+  private val scratch = scala.collection.mutable.Map
+    .empty[SparkSession, scala.collection.mutable.ArrayBuffer[DataFrame]]
 
-  private def registerScratch(df: DataFrame): DataFrame =
-    scratch.synchronized { scratch += df; df }
+  private def registerScratch(df: DataFrame): DataFrame = scratch.synchronized {
+    scratch.getOrElseUpdate(df.sparkSession, scala.collection.mutable.ArrayBuffer.empty) += df
+    df
+  }
 
-  /** Release every scratch block the last graph query registered. */
-  private[graft] def releaseScratch(): Unit = scratch.synchronized {
-    scratch.foreach(_.unpersist(false)); scratch.clear()
+  /** Release every scratch block the last graph query of `s` registered. */
+  private[graft] def releaseScratch(s: SparkSession): Unit = scratch.synchronized {
+    scratch.remove(s).foreach(_.foreach(_.unpersist(false)))
   }
 
   /** Entry wrapper: every registered graph query releases its
-    * predecessor's scratch before building its own plan. */
+    * predecessor's scratch in the same session before building its
+    * own plan. */
   private def owned(f: (SparkSession, String) => DataFrame)
       : (SparkSession, String) => DataFrame =
-    (s, d) => { releaseScratch(); f(s, d) }
+    (s, d) => { releaseScratch(s); f(s, d) }
 
   /** The shared co-purchase artifacts — see [[edgeMemo]]. Bench primes
     * them as the `memo_copurchase_edges` line so their one-time cost

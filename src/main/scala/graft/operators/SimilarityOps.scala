@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.Tables
+import graft.functions.Dot
 import graft.functions.Fns._
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
@@ -41,8 +42,8 @@ object SimilarityOps {
 
   /** Sign-bit bucket of a double-array embedding against the planes —
     * statically unrolled per plane (literal coefficient arrays +
-    * [[graft.functions.Fns.dotN]]) so the whole bucket computation is
-    * one codegen'd expression. Dots are rounded to 9 places (portable
+    * [[graft.functions.Fns.dotNative]]) so the whole bucket computation
+    * is one codegen'd expression. Dots are rounded to 9 places (portable
     * floor form) before the sign test so that sub-ulp accumulation
     * differences can't flip a bucket bit across engines.
     */
@@ -275,21 +276,11 @@ object SimilarityOps {
     val cents = Array.tabulate(PQ_M, PQ_KS) { (m, c) =>
       vecs(c.toLong).slice(m * PQ_SUB, (m + 1) * PQ_SUB).toArray
     }
-    val cn2 = Array.tabulate(PQ_M, PQ_KS) { (m, c) =>
-      var acc = 0.0
-      var k = 0
-      while (k < PQ_SUB) { acc += cents(m)(c)(k) * cents(m)(c)(k); k += 1 }
-      acc
-    }
+    val cn2 = Array.tabulate(PQ_M, PQ_KS)((m, c) => Dot.dot(cents(m)(c), cents(m)(c)))
     val dt = (0L until 10L).map { qid =>
       qid -> (0 until PQ_M).map { m =>
-        val qsub = vecs(qid).slice(m * PQ_SUB, (m + 1) * PQ_SUB)
-        (0 until PQ_KS).map { c =>
-          var dot = 0.0
-          var k = 0
-          while (k < PQ_SUB) { dot += qsub(k) * cents(m)(c)(k); k += 1 }
-          round9local(cn2(m)(c) - 2.0 * dot)
-        }
+        val qsub = vecs(qid).slice(m * PQ_SUB, (m + 1) * PQ_SUB).toArray
+        (0 until PQ_KS).map(c => round9local(cn2(m)(c) - 2.0 * Dot.dot(qsub, cents(m)(c))))
       }
     }.toMap
     (cents, cn2, dt, vecs)
@@ -381,14 +372,8 @@ object SimilarityOps {
   private def round6local(x: Double): Double =
     math.floor(x * 1e6 + 0.5) / 1e6
 
-  /** Sequential-sum L2 norm — the kernel twin of [[l2Native]]
-    * (sqrt of [[DotProduct]]'s left-to-right fold, same IEEE ops). */
-  private def nrmLocal(v: Array[Double]): Double = {
-    var ss = 0.0
-    var k = 0
-    while (k < v.length) { ss += v(k) * v(k); k += 1 }
-    math.sqrt(ss)
-  }
+  /** Sequential-sum L2 norm — the kernel twin of [[l2Native]]. */
+  private def nrmLocal(v: Array[Double]): Double = math.sqrt(Dot.dot(v, v))
 
   /** One fused corpus pass emitting every vector's coarse IVF cell AND
     * its PQ code — the index build of [[s8]]. Both models ride the task
@@ -409,7 +394,7 @@ object SimilarityOps {
     * like [[cosPrecomp]]); the code entry per subspace is the strict
     * argmin of the round-9 expanded score, exactly [[pqEncode]]'s
     * loop. All accumulations are sequential left-to-right — the
-    * [[DotProduct]] order. */
+    * [[Dot]] order. */
   private def ivfpqEncode(s: SparkSession, corpus: DataFrame,
       centEmb: Array[Array[Double]], centNrm: Array[Double],
       cents: Array[Array[Array[Double]]],
@@ -424,13 +409,9 @@ object SimilarityOps {
         var bestCos = 0.0
         var c = 0
         while (c < centEmb.length) {
-          val ce = centEmb(c)
-          var dot = 0.0
-          var k = 0
-          while (k < v.length) { dot += v(k) * ce(k); k += 1 }
           val prod = centNrm(c) * nrm
           val cos =
-            if (prod == 0.0) Double.NaN else round6local(dot / prod)
+            if (prod == 0.0) Double.NaN else round6local(Dot.dot(v, centEmb(c)) / prod)
           // NaN-greatest, strict-greater keeps the smallest cid on ties
           if (c == 0 || java.lang.Double.compare(cos, bestCos) > 0) {
             bestCos = cos; cell = c
@@ -469,12 +450,8 @@ object SimilarityOps {
       val q = vecs(qid).toArray
       val qn = nrmLocal(q)
       (0 until 4).map { c =>
-        val ce = centEmb(c)
-        var dot = 0.0
-        var k = 0
-        while (k < q.length) { dot += ce(k) * q(k); k += 1 }
         val prod = centNrm(c) * qn
-        (c, if (prod == 0.0) Double.NaN else round6local(dot / prod))
+        (c, if (prod == 0.0) Double.NaN else round6local(Dot.dot(centEmb(c), q) / prod))
       }.sortWith { (a, b) =>
         val cmp = java.lang.Double.compare(a._2, b._2)
         if (cmp != 0) cmp > 0 else a._1 < b._1
@@ -718,9 +695,7 @@ object SimilarityOps {
     val xx = dotNative(col("emb"), col("emb"))
     val ds = cents.map { case (_, cs) =>
       val arr = cs.toArray
-      var cn2 = 0.0
-      var k = 0
-      while (k < arr.length) { cn2 += arr(k) * arr(k); k += 1 }
+      val cn2 = Dot.dot(arr, arr)
       roundFp(lit(cn2) - lit(2.0) * dotNative(col("emb"), typedlit(cs)) + xx, 9)
     }
     val m = least(ds: _*)
@@ -1201,12 +1176,7 @@ object SimilarityOps {
           // zero-norm → NaN upstream by contract; ppm(NaN) = 0 is
           // unreachable (TestDataContractSpec pins nonzero norms)
           if (prod == 0.0) 0L
-          else {
-            var dot = 0.0; var i = 0
-            val x = a._3; val y = b._3
-            while (i < x.length) { dot += x(i) * y(i); i += 1 }
-            ppm(math.floor(dot / prod * 1e6 + 0.5) / 1e6)
-          }
+          else ppm(math.floor(Dot.dot(a._3, b._3) / prod * 1e6 + 0.5) / 1e6)
         }
         val sel = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
         if (cs.nonEmpty) sel += ((0, 1L, 7L * ppm(cs(0)._2)))

@@ -11,7 +11,10 @@ import org.apache.spark.sql.functions._
 class BucketingSpec extends SparkSpec {
 
   test("partitioned writes prune partitions at the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
+    withTempDir("graft-part")(partitionsPruned)
+  }
+
+  private def partitionsPruned(dir: String): Unit = {
     Tables.events(spark, "/root/testdata/sf0.001")
       .write.partitionBy("event_type").mode("overwrite").parquet(dir)
     val q = spark.read.parquet(dir)

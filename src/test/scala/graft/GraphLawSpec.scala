@@ -132,7 +132,7 @@ class GraphLawSpec extends SparkSpec {
     assert(split.nonEmpty)
     assert(rows(bcast = true) == split,
       "gr3 broadcast-anti diverges from the bloom-split form")
-    GraphOps.releaseScratch() // the split path registered its cn persist
+    GraphOps.releaseScratch(spark) // the split path registered its cn persist
     spark.catalog.clearCache()
   }
 
@@ -141,7 +141,7 @@ class GraphLawSpec extends SparkSpec {
     "the bloom-split path") {
     val nEdges = GraphOps.artifacts(spark, sf).nEdges
     assert(nEdges > 0 && GraphOps.GR3_BCAST_BYTES_PER_EDGE > 32L)
-    GraphOps.releaseScratch()
+    GraphOps.releaseScratch(spark)
     val persisted = () => spark.sparkContext.getPersistentRDDs.keySet.toSet
     val base = persisted()
     // only the split path persists (and registers) its pair counts
@@ -151,7 +151,7 @@ class GraphLawSpec extends SparkSpec {
         .queryExecution.toRdd.count()
       (persisted() -- base).nonEmpty
     }
-    GraphOps.releaseScratch()
+    GraphOps.releaseScratch(spark)
     assert(split, "gr3 broadcast an edge list priced over the threshold")
   }
 

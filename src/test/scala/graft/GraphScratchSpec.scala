@@ -33,7 +33,7 @@ class GraphScratchSpec extends SparkSpec {
   test("lazy graph queries register their scratch persists and " +
     "releaseScratch returns the storage catalog to baseline") {
     primeMemo("memo_copurchase_edges", sf)
-    GraphOps.releaseScratch()
+    GraphOps.releaseScratch(spark)
     val base = persistedIds
     // every lazy-plan query that persists scratch: after a standalone
     // run the blocks exist (registered, resident), after release the
@@ -42,7 +42,7 @@ class GraphScratchSpec extends SparkSpec {
       run(q)
       assert((persistedIds -- base).nonEmpty,
         s"$q should have registered scratch persists while resident")
-      GraphOps.releaseScratch()
+      GraphOps.releaseScratch(spark)
       assert((persistedIds -- base).isEmpty,
         s"$q leaked persists past releaseScratch: ${persistedIds -- base}")
     }
@@ -57,7 +57,7 @@ class GraphScratchSpec extends SparkSpec {
       .queryExecution.toRdd.count()
     assert((persistedIds -- base).nonEmpty,
       "gr3's split path should register its cn persist while resident")
-    GraphOps.releaseScratch()
+    GraphOps.releaseScratch(spark)
     assert((persistedIds -- base).isEmpty,
       s"gr3 split path leaked past releaseScratch: ${persistedIds -- base}")
   }
@@ -65,7 +65,7 @@ class GraphScratchSpec extends SparkSpec {
   test("the next graph query's entry releases its predecessor's " +
     "scratch (the owned-entry handshake)") {
     primeMemo("memo_copurchase_edges", sf)
-    GraphOps.releaseScratch()
+    GraphOps.releaseScratch(spark)
     val base = persistedIds
     run("gr2_triangles")
     assert((persistedIds -- base).nonEmpty,
@@ -77,10 +77,35 @@ class GraphScratchSpec extends SparkSpec {
       s"gr4's entry did not release gr2's scratch: ${persistedIds -- base}")
   }
 
+  test("the registry is per session: a graph query in a second session " +
+    "leaves the first session's registered scratch in place") {
+    primeMemo("memo_copurchase_edges", sf)
+    GraphOps.releaseScratch(spark)
+    val base = persistedIds
+    run("gr2_triangles")
+    val first = persistedIds -- base
+    assert(first.nonEmpty, "gr2 should leave registered scratch resident")
+    val other = spark.newSession()
+    try {
+      // gr2 registers the second session's own scratch, gr4's entry
+      // releases it: neither touches the first session's blocks
+      for (q <- Seq("gr2_triangles", "gr4_assortativity")) {
+        SparkEntry.queries(q)(other, sf).queryExecution.toRdd.count()
+        assert(first.subsetOf(persistedIds),
+          s"$q in a second session released the first session's scratch: " +
+            s"${first -- persistedIds}")
+      }
+    } finally GraphOps.releaseScratch(other)
+    assert(first.subsetOf(persistedIds))
+    GraphOps.releaseScratch(spark)
+    assert((persistedIds & first).isEmpty,
+      s"releasing the first session left its scratch: ${persistedIds & first}")
+  }
+
   test("self-releasing queries (gr5/gr7/gr8) leave the catalog clean " +
     "modulo gr5's own materialized result") {
     primeMemo("memo_copurchase_edges", sf)
-    GraphOps.releaseScratch()
+    GraphOps.releaseScratch(spark)
     val base = persistedIds
     for (q <- Seq("gr7_kcore", "gr8_hop_histogram")) {
       run(q)

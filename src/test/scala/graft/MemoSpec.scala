@@ -11,25 +11,26 @@ class MemoSpec extends SparkSpec {
 
   test("a degraded (0) version stamp evicts nothing: the current " +
     "entry's checkpoint blocks stay persisted and it is still served") {
-    val dir = java.nio.file.Files.createTempDirectory("memo").toString
-    spark.range(5).write.parquet(s"$dir/documents.parquet")
-    val memo = Memo[DataFrame]("documents")
-    val first = memo.get(spark, dir)(spark.range(3).toDF().localCheckpoint(true))
-    val ids = first.queryExecution.optimizedPlan.collect {
-      case r: LogicalRDD => r.rdd.id
+    withTempDir("memo") { dir =>
+      spark.range(5).write.parquet(s"$dir/documents.parquet")
+      val memo = Memo[DataFrame]("documents")
+      val first = memo.get(spark, dir)(spark.range(3).toDF().localCheckpoint(true))
+      val ids = first.queryExecution.optimizedPlan.collect {
+        case r: LogicalRDD => r.rdd.id
+      }
+      assert(ids.nonEmpty && ids.forall(spark.sparkContext.getPersistentRDDs.contains))
+      // a vanished path takes the same 0 fallback as a filesystem error
+      val table = new java.io.File(s"$dir/documents.parquet")
+      val moved = new java.io.File(s"$dir/moved")
+      assert(table.renameTo(moved))
+      memo.get(spark, dir)(spark.range(1).toDF().localCheckpoint(true))
+      assert(ids.forall(spark.sparkContext.getPersistentRDDs.contains),
+        "a degraded stamp unpersisted the current entry's blocks")
+      assert(moved.renameTo(table)) // file set unchanged: the real stamp again
+      assert(memo.get(spark, dir)(fail("current entry was evicted")) eq first)
+      Memo.clearAll()
+      assert(memo.entries.isEmpty, "clearAll missed a declared memo")
     }
-    assert(ids.nonEmpty && ids.forall(spark.sparkContext.getPersistentRDDs.contains))
-    // a vanished path takes the same 0 fallback as a filesystem error
-    val table = new java.io.File(s"$dir/documents.parquet")
-    val moved = new java.io.File(s"$dir/moved")
-    assert(table.renameTo(moved))
-    memo.get(spark, dir)(spark.range(1).toDF().localCheckpoint(true))
-    assert(ids.forall(spark.sparkContext.getPersistentRDDs.contains),
-      "a degraded stamp unpersisted the current entry's blocks")
-    assert(moved.renameTo(table)) // file set unchanged: the real stamp again
-    assert(memo.get(spark, dir)(fail("current entry was evicted")) eq first)
-    Memo.clearAll()
-    assert(memo.entries.isEmpty, "clearAll missed a declared memo")
   }
 
   test("the memo-line runner awaits every concurrent step when an " +

@@ -68,22 +68,23 @@ class PipeKernelLawSpec extends SparkSpec {
       (4L, "a  a", 4L)                    // empty token between spaces
     ).toDF("doc_id", "text", "n_chars")
     val t = docs.withColumn("src", lit("s")).withColumn("lang", lit("en"))
-    val dir = java.nio.file.Files.createTempDirectory("pipe5law").toString
-    t.select(col("doc_id"), col("text"), col("lang"),
-      col("src").as("source"), col("n_chars"))
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = PipelineOps.computePipe5PerDoc(spark, dir)
-      .orderBy("doc_id").collect()
-    assert(out.length == 4)
-    val r1 = out(0)
-    assert(r1.getLong(1) == 6L)              // words
-    assert(r1.getBoolean(2))                  // f1: words < 50
-    assert(!r1.getBoolean(4))                 // f3: n_stop 5 >= 2
-    assert(r1.getBoolean(5))                  // f4: 1000*4/6 = 666 > 120
-    val r2 = out(1)
-    assert(r2.getLong(1) == 1L)               // single token, no throw
-    val r4 = out(3)
-    assert(r4.getLong(1) == 3L)               // "a","","a" — empties kept
-    assert(!r4.getBoolean(4))                 // n_stop 2 — not < 2
+    withTempDir("pipe5law") { dir =>
+      t.select(col("doc_id"), col("text"), col("lang"),
+        col("src").as("source"), col("n_chars"))
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val out = PipelineOps.computePipe5PerDoc(spark, dir)
+        .orderBy("doc_id").collect()
+      assert(out.length == 4)
+      val r1 = out(0)
+      assert(r1.getLong(1) == 6L)              // words
+      assert(r1.getBoolean(2))                  // f1: words < 50
+      assert(!r1.getBoolean(4))                 // f3: n_stop 5 >= 2
+      assert(r1.getBoolean(5))                  // f4: 1000*4/6 = 666 > 120
+      val r2 = out(1)
+      assert(r2.getLong(1) == 1L)               // single token, no throw
+      val r4 = out(3)
+      assert(r4.getLong(1) == 3L)               // "a","","a" — empties kept
+      assert(!r4.getBoolean(4))                 // n_stop 2 — not < 2
+    }
   }
 }

@@ -19,19 +19,20 @@ class Round11OpsSpec extends SparkSpec {
     val st = Tables.versionStamp(sf, "documents")
     assert(st != 0L, "existing local table must get a real stamp")
     // rewrite at a temp path → different stamp (the staleness signal)
-    val dir = java.nio.file.Files.createTempDirectory("stamp").toString
-    val docs = Tables.documents(spark, sf).limit(5)
-    docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val s1 = Tables.versionStamp(dir, "documents")
-    assert(s1 != 0L)
-    Thread.sleep(1100) // mtime granularity can be 1 s
-    docs.limit(3).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val s2 = Tables.versionStamp(dir, "documents")
-    assert(s1 != s2, "rewrite must produce a different stamp")
-    // missing path → 0, unresolvable scheme → 0 via the logged
-    // fallback; both must be silent non-throws
-    assert(Tables.versionStamp(dir, "nope") == 0L)
-    assert(Tables.versionStamp("bogus-scheme://x/y", "t") == 0L)
+    withTempDir("stamp") { dir =>
+      val docs = Tables.documents(spark, sf).limit(5)
+      docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val s1 = Tables.versionStamp(dir, "documents")
+      assert(s1 != 0L)
+      Thread.sleep(1100) // mtime granularity can be 1 s
+      docs.limit(3).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val s2 = Tables.versionStamp(dir, "documents")
+      assert(s1 != s2, "rewrite must produce a different stamp")
+      // missing path → 0, unresolvable scheme → 0 via the logged
+      // fallback; both must be silent non-throws
+      assert(Tables.versionStamp(dir, "nope") == 0L)
+      assert(Tables.versionStamp("bogus-scheme://x/y", "t") == 0L)
+    }
   }
 
   // ---- Memo eviction ----------------------------------------------

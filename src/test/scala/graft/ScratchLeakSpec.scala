@@ -10,7 +10,7 @@ import graft.operators.GraphOps
   * whole surface, ~2-3 min — the price of a total ratchet):
   *
   *  1. **Every per-query scratch block is clearable catalog state.**
-  *     After `releaseScratch()` + `catalog.clearCache()`, no
+  *     After `releaseScratch(spark)` + `catalog.clearCache()`, no
   *     non-checkpoint persisted RDD survives — i.e. no query persists
   *     through the raw RDD API where the SQL cache (and therefore
   *     Bench's per-query clear, and any caller's clearCache) cannot
@@ -74,13 +74,13 @@ class ScratchLeakSpec extends SparkSpec {
     // memo state up front so its checkpoint blocks join the baseline
     Seq("memo_copurchase_edges", "memo_pipeline_perdoc", "memo_dedup_sigs")
       .foreach(primeMemo(_, sf))
-    GraphOps.releaseScratch()
+    GraphOps.releaseScratch(spark)
     spark.catalog.clearCache()
     var base = sc.getPersistentRDDs.keySet.toSet
     val leakers = scala.collection.mutable.SortedSet.empty[String]
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
       fn(spark, sf).queryExecution.toRdd.count()
-      GraphOps.releaseScratch() // the registry owner for graph scratch
+      GraphOps.releaseScratch(spark) // the registry owner for graph scratch
       val leaked = sc.getPersistentRDDs.filter { case (id, r) =>
         !base(id) && !r.isCheckpointed }
       if (leaked.nonEmpty) leakers += name

@@ -127,17 +127,27 @@ class SourceInvariantSpec extends AnyFunSuite {
       s"parquet reads outside Tables.scala: ${readers - "Tables.scala"}")
   }
 
-  test("a Catalyst Expression subclass is declared only in DotProduct.scala — " +
-    "every other JVM kernel reaches Catalyst through the one Kernel " +
-    "(StaticInvoke) binding, so a hand-written expression class fails here by name") {
+  test("no Catalyst Expression, Aggregate, Generator or CodegenFallback " +
+    "subclass is declared in src/main — every JVM kernel reaches Catalyst " +
+    "through the one Kernel (StaticInvoke) binding, so a hand-written " +
+    "expression class fails here by name") {
     assert(mainRoot.isDirectory, s"source root not found at ${mainRoot.getAbsolutePath}")
     val expression =
       """\b(extends|with)\s+(\w+\.)*\w*(Expression|Aggregate|AggregateFunction|Generator|CodegenFallback)\b""".r
     val declaring = scalaSources(mainRoot)
       .filter(f => expression.findFirstIn(code(f)).isDefined)
       .map(_.getName).toSet
-    assert(declaring == Set("DotProduct.scala"),
-      s"Expression subclasses outside DotProduct: ${declaring - "DotProduct.scala"}")
+    assert(declaring.isEmpty, s"Catalyst expression subclasses in src/main: $declaring")
+  }
+
+  test("StaticInvoke is constructed only in Kernel.scala — the one " +
+    "kernel binding cannot fork into a second hand-rolled one") {
+    assert(mainRoot.isDirectory, s"source root not found at ${mainRoot.getAbsolutePath}")
+    val construct = """\bStaticInvoke\s*(\.\s*apply\s*)?[(\[]""".r
+    val sites = scalaSources(mainRoot)
+      .filter(f => construct.findFirstIn(code(f)).isDefined)
+      .map(_.getName).toSet
+    assert(sites == Set("Kernel.scala"), s"StaticInvoke constructed in: $sites")
   }
 
   test("the OSM XML is read one way: Spark's per-rowTag XML source " +

@@ -60,14 +60,6 @@ class FnsSpec extends SparkSpec {
     } finally java.util.Locale.setDefault(prev)
   }
 
-  test("dotN equals sequential HOF dot bit-for-bit") {
-    val a = Seq((Array(1.0, 2.5, -3.25, 0.125), Array(4.0, -1.5, 2.0, 8.0)))
-    val df = a.toDF("x", "y")
-    val h = df.select(dot(col("x"), col("y"))).as[Double].head()
-    val u = df.select(dotN(col("x"), col("y"), 4)).as[Double].head()
-    assert(java.lang.Double.doubleToLongBits(h) == java.lang.Double.doubleToLongBits(u))
-  }
-
   test("kernel tokenizers stay in lockstep with the expression tier " +
     "(bigramShinglesLocal == bigramShingles; bigramsLocal count law)") {
     val inputs = Seq("a b c a b", "x", "", "a  b", "data data data", "α β γ")

@@ -54,53 +54,56 @@ class OsmShapeGoldenSpec extends SparkSpec {
 
   test("shaped Extended-JSON lines of the generated extract (scale " +
     "0.01) match the recorded count and hash per document type") {
-    val dir = Files.createTempDirectory("osmgold").toString
-    OsmEtlBench.generate(s"$dir/g.osm", 0.01)
-    val got = golden(s"$dir/g.osm")
-    val expected = Map(
-      "node" -> ((3550L, "c8d4d93b70fd21e6df3b5990db3ec8bbbfc93a9c630048e12fc89fcee330c3c7")),
-      "way" -> ((301L, "3978fff2d2a87d6abb2a036eb41be6247c4c79c8dd156bb454a2c098cab94ab6")),
-      "relation" -> ((5L, "5491a8bca4914cc26f87699da0212d8a35e9e775d5b074983a20a323a6310b32")))
-    assert(got == expected, s"golden drift: $got")
-    val all = collectionGolden(s"$dir/g.osm")
-    assert(all == ((3856L, "624ff4e636e5c8692413056a74a5619768e200ab4ae18e527b851e54e12b6e35", collectionSchema)), s"collection drift: $all")
+    withTempDir("osmgold") { dir =>
+      OsmEtlBench.generate(s"$dir/g.osm", 0.01)
+      val got = golden(s"$dir/g.osm")
+      val expected = Map(
+        "node" -> ((3550L, "c8d4d93b70fd21e6df3b5990db3ec8bbbfc93a9c630048e12fc89fcee330c3c7")),
+        "way" -> ((301L, "3978fff2d2a87d6abb2a036eb41be6247c4c79c8dd156bb454a2c098cab94ab6")),
+        "relation" -> ((5L, "5491a8bca4914cc26f87699da0212d8a35e9e775d5b074983a20a323a6310b32")))
+      assert(got == expected, s"golden drift: $got")
+      val all = collectionGolden(s"$dir/g.osm")
+      assert(all == ((3856L, "624ff4e636e5c8692413056a74a5619768e200ab4ae18e527b851e54e12b6e35", collectionSchema)), s"collection drift: $all")
+    }
   }
 
   test("shaped Extended-JSON lines of a routing-edge fixture match the " +
     "recorded count and hash per document type — every tag family, " +
     "including the branches neither extract above reaches") {
-    val xml = Files.createTempFile("osmedge", ".osm")
-    val attrs = """version="1" changeset="1" timestamp="2015-01-01T00:00:00Z" user="u" uid="1""""
-    def tags(kvs: (String, String)*): String =
-      kvs.map { case (k, v) => s"""    <tag k="$k" v="$v"/>\n""" }.mkString
-    def node(id: Int, kvs: (String, String)*): String =
-      s"""  <node id="$id" lat="48.7" lon="-122.4" $attrs>\n${tags(kvs: _*)}  </node>\n"""
-    val body =
-      node(1, "fuel" -> "yes", "addr:street:name" -> "dropped 3-part",
-        "addr:city" -> "Bellingham", "cost:fee" -> "5",
-        "fuel:octane_95" -> "YES", "service:bicycle:repair" -> "no") +
-      node(2, "payment" -> "No", "tiger:county" -> "Whatcom, WA",
-        "gnis:ST_alph" -> "53", "gnis:County_num" -> "73",
-        "is_in:state" -> "anything", "is_in" -> "Bellingham") +
-      node(3, "fuel" -> "Maybe", "lanes" -> "2.0", "maxheight" -> "12'6&quot;",
-        "building:levels" -> "3s", "level" -> "abc", "roof:levels" -> "2") +
-      node(4, "name_1" -> "Foo", "name" -> "Bar; Baz",
-        "contact:phone" -> "3605550101", "image" -> "foo.jpg",
-        "bad key" -> "dropped", "maxspeed:type" -> "sign",
-        "addr:unit" -> "Suite 4", "addr:street" -> "Ellis St") +
-      s"""  <way id="10" $attrs>\n    <nd ref="2"/>\n    <nd ref="1"/>\n""" +
-      tags("highway" -> "residential", "cuisine" -> "thai;pizza",
-        "payment:cash" -> "maybe") + "  </way>\n" +
-      s"""  <relation id="20" $attrs>\n    <member type="way" ref="10" role="outer"/>\n""" +
-      tags("type" -> "multipolygon", "population" -> "x12") + "  </relation>\n"
-    Files.write(xml, ("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n" +
-      "<osm version=\"0.6\">\n" + body + "</osm>\n").getBytes("UTF-8"))
-    val got = golden(xml.toString)
-    val expected = Map(
-      "node" -> ((4L, "b9f7c000a00048d9e5dbfa69a5e380ef941034bb610254bd1dce06ab1923607f")),
-      "way" -> ((1L, "9e5e9d21f90061458478c00064276b13b5ea15eb71a4ccd95dc917ca2ac036a1")),
-      "relation" -> ((1L, "d2b349ff8f61f19a3de0475ceada559f96243900bee0f404ddf543d52f032d5f")))
-    assert(got == expected, s"golden drift: $got")
+    withTempDir("osmedge") { dir =>
+      val xml = java.nio.file.Paths.get(dir, "osmedge.osm")
+      val attrs = """version="1" changeset="1" timestamp="2015-01-01T00:00:00Z" user="u" uid="1""""
+      def tags(kvs: (String, String)*): String =
+        kvs.map { case (k, v) => s"""    <tag k="$k" v="$v"/>\n""" }.mkString
+      def node(id: Int, kvs: (String, String)*): String =
+        s"""  <node id="$id" lat="48.7" lon="-122.4" $attrs>\n${tags(kvs: _*)}  </node>\n"""
+      val body =
+        node(1, "fuel" -> "yes", "addr:street:name" -> "dropped 3-part",
+          "addr:city" -> "Bellingham", "cost:fee" -> "5",
+          "fuel:octane_95" -> "YES", "service:bicycle:repair" -> "no") +
+        node(2, "payment" -> "No", "tiger:county" -> "Whatcom, WA",
+          "gnis:ST_alph" -> "53", "gnis:County_num" -> "73",
+          "is_in:state" -> "anything", "is_in" -> "Bellingham") +
+        node(3, "fuel" -> "Maybe", "lanes" -> "2.0", "maxheight" -> "12'6&quot;",
+          "building:levels" -> "3s", "level" -> "abc", "roof:levels" -> "2") +
+        node(4, "name_1" -> "Foo", "name" -> "Bar; Baz",
+          "contact:phone" -> "3605550101", "image" -> "foo.jpg",
+          "bad key" -> "dropped", "maxspeed:type" -> "sign",
+          "addr:unit" -> "Suite 4", "addr:street" -> "Ellis St") +
+        s"""  <way id="10" $attrs>\n    <nd ref="2"/>\n    <nd ref="1"/>\n""" +
+        tags("highway" -> "residential", "cuisine" -> "thai;pizza",
+          "payment:cash" -> "maybe") + "  </way>\n" +
+        s"""  <relation id="20" $attrs>\n    <member type="way" ref="10" role="outer"/>\n""" +
+        tags("type" -> "multipolygon", "population" -> "x12") + "  </relation>\n"
+      Files.write(xml, ("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n" +
+        "<osm version=\"0.6\">\n" + body + "</osm>\n").getBytes("UTF-8"))
+      val got = golden(xml.toString)
+      val expected = Map(
+        "node" -> ((4L, "b9f7c000a00048d9e5dbfa69a5e380ef941034bb610254bd1dce06ab1923607f")),
+        "way" -> ((1L, "9e5e9d21f90061458478c00064276b13b5ea15eb71a4ccd95dc917ca2ac036a1")),
+        "relation" -> ((1L, "d2b349ff8f61f19a3de0475ceada559f96243900bee0f404ddf543d52f032d5f")))
+      assert(got == expected, s"golden drift: $got")
+    }
   }
 
   test("shaped Extended-JSON lines of mini.osm match the recorded " +
@@ -149,30 +152,34 @@ class OsmShapeGoldenSpec extends SparkSpec {
 
   test("shaped Extended-JSON lines of a lexical-corner fixture match the " +
     "recorded count and hash per document type and for the collection") {
-    val xml = Files.createTempFile("osmlex", ".osm")
-    Files.write(xml, lexicalFixture.getBytes("UTF-8"))
-    val got = golden(xml.toString)
-    val expected = Map(
-      "node" -> ((6L, "18d71c9d273adb828209a296ef76de840a4f54d7f0d53aec36dfc6b0827bf86b")),
-      "way" -> ((2L, "e8e774b3c0078d8e1c189c1cec4ac25a67d38287b4ea61a80fccac39680e1a43")),
-      "relation" -> ((2L, "85b731d588bf982addb04134495c469c6a7b242b852ecfb3307aa66f29163a57")))
-    assert(got == expected, s"golden drift: $got")
-    val all = collectionGolden(xml.toString)
-    assert(all == ((10L, "4497c7e3b206acd5d89caa52677372ed3b34a77b45a53e69f58e1f2a9503849e", collectionSchema)), s"collection drift: $all")
+    withTempDir("osmlex") { dir =>
+      val xml = java.nio.file.Paths.get(dir, "osmlex.osm")
+      Files.write(xml, lexicalFixture.getBytes("UTF-8"))
+      val got = golden(xml.toString)
+      val expected = Map(
+        "node" -> ((6L, "18d71c9d273adb828209a296ef76de840a4f54d7f0d53aec36dfc6b0827bf86b")),
+        "way" -> ((2L, "e8e774b3c0078d8e1c189c1cec4ac25a67d38287b4ea61a80fccac39680e1a43")),
+        "relation" -> ((2L, "85b731d588bf982addb04134495c469c6a7b242b852ecfb3307aa66f29163a57")))
+      assert(got == expected, s"golden drift: $got")
+      val all = collectionGolden(xml.toString)
+      assert(all == ((10L, "4497c7e3b206acd5d89caa52677372ed3b34a77b45a53e69f58e1f2a9503849e", collectionSchema)), s"collection drift: $all")
+    }
   }
 
   test("a node whose lat is empty or not a number fails the read, naming " +
     "the number") {
     for (bad <- Seq("", "abc")) {
-      val xml = Files.createTempFile("osmbadlat", ".osm")
-      Files.write(xml, ("<osm version=\"0.6\">\n" +
-        s"""  <node id="1" lat="$bad" lon="2"/>\n</osm>\n""").getBytes("UTF-8"))
-      val e = intercept[Exception](
-        OsmXmlSource.collection(spark, xml.toString).collect())
-      val messages = Iterator.iterate[Throwable](e)(_.getCause)
-        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toList
-      assert(messages.exists(_.contains(s"""Unparseable number: "$bad"""")),
-        messages.mkString(" / "))
+      withTempDir("osmbadlat") { dir =>
+        val xml = java.nio.file.Paths.get(dir, "osmbadlat.osm")
+        Files.write(xml, ("<osm version=\"0.6\">\n" +
+          s"""  <node id="1" lat="$bad" lon="2"/>\n</osm>\n""").getBytes("UTF-8"))
+        val e = intercept[Exception](
+          OsmXmlSource.collection(spark, xml.toString).collect())
+        val messages = Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toList
+        assert(messages.exists(_.contains(s"""Unparseable number: "$bad"""")),
+          messages.mkString(" / "))
+      }
     }
   }
 }

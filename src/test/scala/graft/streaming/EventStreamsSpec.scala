@@ -92,29 +92,31 @@ class EventStreamsSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val batchDf = graft.Tables.events(spark, dir)
     // file streams read directories; stage the table file into one
-    val staged = java.nio.file.Files.createTempDirectory("graft-stream")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      staged.resolve("events.parquet"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(s"$dir/events.parquet").schema)
-      .parquet(staged.toString)
-    // same schema-gated ts normalization as the batch reader, so the
-    // streaming and batch paths cannot diverge on the driver's layout
-    val normalized = graft.Tables.normalizeEventTs(stream)
-    val q = tumblingCounts(normalized)
-      .writeStream.format("memory").queryName("file_stream")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
-    // append mode only emits watermark-closed windows; every emitted
-    // row must match the batch result exactly
-    val streamed = spark.table("file_stream").collect()
-      .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3)))
-      .toSet
-    val batch = tumblingCounts(batchDf).collect()
-      .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3)))
-      .toSet
-    assert(streamed.subsetOf(batch))
+    withTempDir("graft-stream") { stagedDir =>
+      val staged = java.nio.file.Paths.get(stagedDir)
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$dir/events.parquet"),
+        staged.resolve("events.parquet"))
+      val stream = spark.readStream
+        .schema(spark.read.parquet(s"$dir/events.parquet").schema)
+        .parquet(staged.toString)
+      // same schema-gated ts normalization as the batch reader, so the
+      // streaming and batch paths cannot diverge on the driver's layout
+      val normalized = graft.Tables.normalizeEventTs(stream)
+      val q = tumblingCounts(normalized)
+        .writeStream.format("memory").queryName("file_stream")
+        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination(120000)
+      // append mode only emits watermark-closed windows; every emitted
+      // row must match the batch result exactly
+      val streamed = spark.table("file_stream").collect()
+        .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3)))
+        .toSet
+      val batch = tumblingCounts(batchDf).collect()
+        .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3)))
+        .toSet
+      assert(streamed.subsetOf(batch))
+    }
   }
 
   test("flatMapGroupsWithState sessionizer matches session_window (w3 " +
@@ -387,35 +389,38 @@ class EventStreamsSpec extends SparkSpec {
   test("foreachBatch streams micro-batches through the mongoimport " +
     "sink — streaming and batch faces of S3 produce the same dump") {
     val mem = MemoryStream[Event]
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-sink")
-    val out = tmp.resolve("dump").toString
-    mem.addData(rows: _*) // available-now: data staged before start
-    val q = sinkTo(mem.toDF(), graft.sinks.MongoImportSink, out,
-      tmp.resolve("ckpt").toString)
-    q.awaitTermination(120000)
-    val back = spark.read.json(out)
-    assert(back.count() == rows.length)
-    // the canonical wrappers survive the streaming path: int64 ids
-    // never travel as bare JSON numbers
-    assert(back.select(col("event_id.$numberLong")).collect()
-      .map(_.getString(0)).sorted.toSeq == Seq("1", "2", "3", "4", "5"))
-    assert(spark.read.text(out)
-      .filter(col("value").contains(""""event_id":1""")).count() == 0)
+    withTempDir("graft-stream-sink") { tmpDir =>
+      val tmp = java.nio.file.Paths.get(tmpDir)
+      val out = tmp.resolve("dump").toString
+      mem.addData(rows: _*) // available-now: data staged before start
+      val q = sinkTo(mem.toDF(), graft.sinks.MongoImportSink, out,
+        tmp.resolve("ckpt").toString)
+      q.awaitTermination(120000)
+      val back = spark.read.json(out)
+      assert(back.count() == rows.length)
+      // the canonical wrappers survive the streaming path: int64 ids
+      // never travel as bare JSON numbers
+      assert(back.select(col("event_id.$numberLong")).collect()
+        .map(_.getString(0)).sorted.toSeq == Seq("1", "2", "3", "4", "5"))
+      assert(spark.read.text(out)
+        .filter(col("value").contains(""""event_id":1""")).count() == 0)
+    }
   }
 
   test("micro-batch replay is idempotent — re-delivering the same " +
     "batch id overwrites its batch-scoped subpath instead of " +
     "appending duplicates (at-least-once foreachBatch contract)") {
     import spark.implicits._
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-replay").resolve("dump").toString
-    val batch = rows.toDF()
-    EventStreams.writeBatch(graft.sinks.MongoImportSink, batch, out, 0L)
-    // the failure/restart replay: same batch id, delivered again
-    EventStreams.writeBatch(graft.sinks.MongoImportSink, batch, out, 0L)
-    EventStreams.writeBatch(graft.sinks.MongoImportSink, batch, out, 1L)
-    assert(spark.read.json(out).count() == rows.length * 2)
-    assert(spark.read.json(s"$out/batch=0").count() == rows.length)
+    withTempDir("graft-replay") { tmp =>
+      val out = s"$tmp/dump"
+      val batch = rows.toDF()
+      EventStreams.writeBatch(graft.sinks.MongoImportSink, batch, out, 0L)
+      // the failure/restart replay: same batch id, delivered again
+      EventStreams.writeBatch(graft.sinks.MongoImportSink, batch, out, 0L)
+      EventStreams.writeBatch(graft.sinks.MongoImportSink, batch, out, 1L)
+      assert(spark.read.json(out).count() == rows.length * 2)
+      assert(spark.read.json(s"$out/batch=0").count() == rows.length)
+    }
   }
 }
 
