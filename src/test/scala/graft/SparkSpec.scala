@@ -36,13 +36,19 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * compile failure throws instead of falling back). `body` must build
     * its Dataset itself: a Dataset keeps the physical plan it first made,
     * so one planned on the interpreted path would run that plan again. */
-  def onBothPaths[T](body: => T): (T, T) = {
-    def under(conf: (String, String)*): T = {
-      conf.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body finally conf.foreach { case (k, _) => spark.conf.unset(k) }
-    }
-    (under("spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"),
-      under("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY", "spark.sql.codegen.fallback" -> "false"))
+  def onBothPaths[T](body: => T): (T, T) = (onInterpretedPath(body), onGeneratedPath(body))
+
+  /** `body` run on the interpreted path only; see [[onBothPaths]]. */
+  def onInterpretedPath[T](body: => T): T =
+    under("spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(body)
+
+  /** `body` run on the generated path only; see [[onBothPaths]]. */
+  def onGeneratedPath[T](body: => T): T =
+    under("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY", "spark.sql.codegen.fallback" -> "false")(body)
+
+  private def under[T](conf: (String, String)*)(body: => T): T = {
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally conf.foreach { case (k, _) => spark.conf.unset(k) }
   }
 
   override def afterAll(): Unit = {

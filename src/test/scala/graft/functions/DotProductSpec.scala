@@ -25,14 +25,24 @@ class DotProductSpec extends SparkSpec {
 
   private def bits(d: Double): Long = java.lang.Double.doubleToLongBits(d)
 
-  test("native == HOF bit-for-bit on the interpreted and the generated path") {
-    val (interpreted, generated) = onBothPaths {
-      rows.toDF("x", "y").select(
-        dotNative(col("x"), col("y")).as("n"),
-        dot(col("x"), col("y")).as("h")).as[(Double, Double)].collect().toSeq
-    }
+  /** (native, HOF) for every row, with the Dataset built under the
+    * caller's path. */
+  private def nativeAndHof(): Seq[(Double, Double)] =
+    rows.toDF("x", "y").select(
+      dotNative(col("x"), col("y")).as("n"),
+      dot(col("x"), col("y")).as("h")).as[(Double, Double)].collect().toSeq
+
+  test("native == HOF bit-for-bit (codegen path)") {
+    val generated = onGeneratedPath(nativeAndHof())
+    assert(generated.length == rows.length)
+    generated.foreach { case (n, h) => assert(bits(n) == bits(h)) }
+  }
+
+  test("native == HOF bit-for-bit (interpreted / no-codegen path)") {
+    val (interpreted, generated) = onBothPaths(nativeAndHof())
     assert(interpreted.length == rows.length)
-    (interpreted ++ generated).foreach { case (n, h) => assert(bits(n) == bits(h)) }
+    interpreted.foreach { case (n, h) => assert(bits(n) == bits(h)) }
+    // and the native kernel gives the same bits on either path
     assert(interpreted.map(r => bits(r._1)) == generated.map(r => bits(r._1)))
   }
 
