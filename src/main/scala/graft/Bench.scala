@@ -276,11 +276,18 @@ object Bench {
         }
       }
       catch { case _: Throwable => () } // read-only cwd must not fail the bench
-    else
+    else {
       // partial run: per-query (and per-memo) times for local
       // iteration and the gate's isolated retrial (never the
-      // official record, so length doesn't matter here)
+      // official record, so length doesn't matter here), on stderr
+      // and as the same record in BENCH_PARTIAL.json, so a per-query
+      // A/B reads a file instead of scraping stderr
       lines.foreach { case (k, v) => System.err.println(f"[graft]   $k%-28s $v%.3f s") }
+      try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_PARTIAL.json"),
+        (fullLine + "\n").getBytes("UTF-8"))
+      catch { case e: java.io.IOException =>
+        System.err.println(s"[graft] could not write BENCH_PARTIAL.json: $e") }
+    }
     println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.size},"sf":"$sfDir"}""")
     if (lines.exists(_._2 < 0)) {
       System.err.println("[graft] bench FAILED queries: " +

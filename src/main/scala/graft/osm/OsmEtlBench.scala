@@ -265,6 +265,9 @@ object OsmEtlBench {
     }
     val secs = runs.min
     val spread = runs.max - runs.min
+    // the median beside the min: the first timed run is still the
+    // slowest in every A/B, so the min alone hides a warming JIT
+    val median = runs.sorted.apply(runs.length / 2)
     // cell-36 parity: docs out per type == elements generated per
     // type; same pass totals the dump bytes (the baseline's 14.2 MB/s
     // is measured over the JSON being IMPORTED, so the output-side
@@ -284,7 +287,7 @@ object OsmEtlBench {
     val parity = counts == Map("node" -> nN, "way" -> nW, "relation" -> nR)
     val mb = bytes / 1e6
     val line =
-      f"""{"metric":"osm_etl","input_bytes":$bytes,"output_bytes":$outBytes,"docs":$docs,"secs":$secs%.2f,"spread":$spread%.2f,""" +
+      f"""{"metric":"osm_etl","input_bytes":$bytes,"output_bytes":$outBytes,"docs":$docs,"secs":$secs%.2f,"median_secs":$median%.2f,"spread":$spread%.2f,""" +
         f""""input_mb_per_sec":${mb / secs}%.1f,"output_mb_per_sec":${outBytes / 1e6 / secs}%.1f,""" +
         f""""kdocs_per_sec":${docs / secs / 1000}%.1f,""" +
         s""""node":${counts.getOrElse("node", 0L)},"way":${counts.getOrElse("way", 0L)},""" +

@@ -1,17 +1,24 @@
 package graft.osm
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import graft.functions.TagShape
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.{Kernel, TagShape}
 
 /** The shaping stage (SURVEY.md §2, `shape_element`
   * clean_and_write.py:230-381): raw XML rows → the wide document
-  * schema, per row — no explode, no shuffle, one WholeStageCodegen
-  * pass over the scan at any scale. The fixed fields are built-in
-  * expressions; every tag goes through one kernel call
-  * ([[graft.functions.TagShape]]) that routes it once and builds the
-  * seven tag maps in one loop.
+  * schema, per row — no explode, no shuffle. The fixed fields are
+  * built-in expressions, `node_refs` is one kernel call
+  * ([[sortedRefs]]) and `members` a cast; every tag goes through one
+  * kernel call ([[graft.functions.TagShape]]) that routes it once and
+  * builds the seven tag maps in one loop. No field is a higher-order
+  * function, which Spark evaluates outside generated code, so the
+  * write (this shape and [[graft.sinks.MongoImportSink]]'s
+  * Extended-JSON encode) is one whole-stage generated stage over the
+  * reader's scan (`OsmShapePlanSpec`).
   *
   * Spark mapping of the reference's dynamic document (SURVEY.md §1.5):
   * fixed fields are real columns (`created` struct, `pos`
@@ -36,20 +43,29 @@ object OsmShape {
     when(col("_lat").isNotNull && col("_lon").isNotNull,
       array(col("_lat"), col("_lon"))).as("pos")
 
-  private val nodeRefs = {
-    val refs = array_sort(array_distinct(
-      transform(coalesce(col("nd"), array().cast("array<struct<_ref:string>>")),
-        n => n.getField("_ref"))))
-    when(size(refs) > 0, refs).as("node_refs")
+  /** A way's refs: distinct, in `array_sort`'s order (byte order, a
+    * missing ref last), null when there are none. */
+  private val nodeRefs =
+    ColumnBridge.column(Kernel(this, "sortedRefs", ArrayType(StringType),
+      Seq(ArrayType(StringType)), returnNullable = true)(
+      ColumnBridge.expression(col("nd").getField("_ref")))).as("node_refs")
+
+  /** A relation's members, renamed by a cast: the reader never emits a
+    * null member, so the raw array casts to the non-null one. */
+  private val members = {
+    val ms = col("member").cast(ArrayType(StructType(
+      Seq("type", "ref", "role").map(StructField(_, StringType))), containsNull = false))
+    when(size(ms) > 0, ms).as("members")
   }
 
-  private val members = {
-    val ms = transform(
-      coalesce(col("member"),
-        array().cast("array<struct<_type:string,_ref:string,_role:string>>")),
-      m => struct(m.getField("_type").as("type"),
-        m.getField("_ref").as("ref"), m.getField("_role").as("role")))
-    when(size(ms) > 0, ms).as("members")
+  /** The [[nodeRefs]] kernel: `array_sort(array_distinct(refs))`
+    * (byte order, one null last) and null for an empty array. */
+  def sortedRefs(refs: ArrayData): ArrayData = {
+    val all = (0 until refs.numElements()).map(i =>
+      if (refs.isNullAt(i)) null else refs.getUTF8String(i))
+    val present = all.filter(_ != null).distinct.sortWith(_.binaryCompare(_) < 0)
+    val sorted = if (all.contains(null)) present :+ null else present
+    if (sorted.isEmpty) null else new GenericArrayData(sorted.toArray[Any])
   }
 
   /** One element type's raw rows (an [[OsmXmlSource]] per-type read)

@@ -46,18 +46,20 @@ object OsmXmlSource {
 
   private def fields(names: Array[String]): Seq[StructField] =
     names.toSeq.map(n => StructField(s"_$n", StringType))
-  private def structs(names: Array[String]) = ArrayType(StructType(fields(names)))
+  private def structs(names: Array[String], containsNull: Boolean = true) =
+    ArrayType(StructType(fields(names)), containsNull)
   private[graft] val tagArr = structs(TagAttrs)
 
   /** One row per element: its type, its attributes, then every type's
     * own raw fields, each null where the element's type has no such
-    * field. */
+    * field. An `nd` or `member` array is null or holds only rows, so
+    * [[OsmShape]] renames members by a cast to its non-null array. */
   val rawSchema: StructType = StructType(
     StructField("doc_type", StringType, nullable = false) +: fields(attrNames) ++: Seq(
       StructField("_lat", DoubleType),
       StructField("_lon", DoubleType),
-      StructField("nd", structs(NdAttrs)),
-      StructField("member", structs(MemberAttrs)),
+      StructField("nd", structs(NdAttrs, containsNull = false)),
+      StructField("member", structs(MemberAttrs, containsNull = false)),
       StructField("tag", tagArr)))
 
   private val DocTypes = Array("node", "way", "relation")
@@ -85,14 +87,18 @@ object OsmXmlSource {
 
   /** One task per range of `path` ([[OsmChunk.ranges]] for `parts`):
     * the range opened as one StAX stream and handed to `read`, which
-    * reports failures against the range it is given. */
+    * reports failures against the range it is given. The Hadoop
+    * configuration goes out once per scan as a broadcast, as Spark's
+    * own file scans send it: captured in the task closure it was
+    * deserialized by every task (`Configuration.readFields`, which
+    * reloads `core-default.xml`). */
   private[osm] def scan[T: ClassTag](spark: SparkSession, path: String, parts: Int)(
       read: (XMLStreamReader, OsmChunk.Range) => Iterator[T]): RDD[T] = {
     val sc = spark.sparkContext
     val rs = OsmChunk.ranges(path, parts, sc.hadoopConfiguration)
-    val conf = new SerializableWritable(sc.hadoopConfiguration)
+    val conf = sc.broadcast(new SerializableWritable(sc.hadoopConfiguration))
     sc.parallelize(rs, math.max(rs.length, 1)).mapPartitions(_.flatMap { r =>
-      val in = OsmChunk.open(r, conf.value)
+      val in = OsmChunk.open(r, conf.value.value)
       val xml = factory.createXMLStreamReader(in)
       TaskContext.get().addTaskCompletionListener[Unit] { _ => xml.close(); in.close() }
       read(xml, r)

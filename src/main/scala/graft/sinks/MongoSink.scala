@@ -1,8 +1,14 @@
 package graft.sinks
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.Kernel
 
 /** S3 — the reference's MongoDB load, shippable without a live mongod.
   *
@@ -52,9 +58,16 @@ object MongoExtendedJson {
     * can't see data-dependent keys, so the guard rides the encode
     * expression itself and fails the write job naming the key.
     *
-    * A column whose type needs neither is returned as it is: an
-    * identity `transform`/`struct` rebuild would cost a
-    * CodegenFallback lambda per row and change nothing in the line. */
+    * The rule: no lambda on the OSM collection's types, so its encode
+    * runs inside the whole-stage stage. A column whose type needs no
+    * rewrite is returned as it is, and a string-keyed map with string,
+    * double, boolean, string-array or integral values is one
+    * [[guardKeys]]/[[numberLongs]]/[[numberInts]] kernel call. Types
+    * the collection never holds keep a higher-order function, which
+    * Spark evaluates outside generated code: arrays of integral,
+    * timestamp, date or rewritten struct/map elements (`transform`),
+    * and maps whose values are timestamps, dates or rewritten
+    * containers, or whose keys are not strings (`transform_values`). */
   private[sinks] def extend(c: Column, dt: DataType): Column = dt match {
     case _ if !rewrites(dt) => c
     case LongType =>
@@ -70,19 +83,63 @@ object MongoExtendedJson {
         struct((unix_date(c).cast(LongType) * 86400000L).cast(StringType)
           .as("$numberLong")).as("$date")))
     case ArrayType(et, _) => transform(c, x => extend(x, et))
+    case MapType(StringType, LongType, vn) => numbers("numberLongs", "$numberLong", LongType, vn, c)
+    case MapType(StringType, IntegerType | ShortType | ByteType, vn) =>
+      numbers("numberInts", "$numberInt", IntegerType, vn, c)
     case MapType(kt, vt, _) =>
-      val guarded = kt match {
-        case StringType => transform_keys(c, (k, _) =>
-          when(k.startsWith("$") || k.contains("."),
-            raise_error(concat(
-              lit("map key MongoDB rejects ('$'-prefix or dot): "), k)))
-            .otherwise(k))
-        case _ => c
-      }
+      val guarded = if (kt == StringType) call("guardKeys", dt, dt, c) else c
       if (rewrites(vt)) transform_values(guarded, (_, v) => extend(v, vt)) else guarded
     case st: StructType =>
       nullSafe(c, struct(st.fields.toSeq.map(f =>
         extend(c.getField(f.name), f.dataType).as(f.name)): _*))
+  }
+
+  private def call(fn: String, in: DataType, out: DataType, c: Column): Column =
+    ColumnBridge.column(Kernel(this, fn, out, Seq(in))(ColumnBridge.expression(c)))
+
+  /** A string-keyed integral map, its values read as `vt`, through
+    * the kernel `fn` that wraps each one in a `wrapper` struct. */
+  private def numbers(fn: String, wrapper: String, vt: DataType, vn: Boolean,
+      c: Column): Column = {
+    val in = MapType(StringType, vt, vn)
+    call(fn, in, MapType(StringType, StructType(Seq(StructField(wrapper, StringType)))),
+      c.cast(in))
+  }
+
+  private val Dollar = UTF8String.fromString("$")
+  private val Dot = UTF8String.fromString(".")
+
+  /** The map, after failing the write on the first key MongoDB
+    * rejects, with the message and error class of Spark's
+    * `raise_error`. */
+  def guardKeys(m: MapData): MapData = {
+    val keys = m.keyArray()
+    var i = 0
+    while (i < keys.numElements()) {
+      val k = keys.getUTF8String(i)
+      if (k.startsWith(Dollar) || k.contains(Dot))
+        throw ColumnBridge.userError(s"map key MongoDB rejects ('$$'-prefix or dot): $k")
+      i += 1
+    }
+    m
+  }
+
+  /** A guarded map with each long value as `{"$numberLong": "<v>"}`. */
+  def numberLongs(m: MapData): MapData = wrapped(guardKeys(m))(_.getLong(_).toString)
+
+  /** A guarded map with each int value as `{"$numberInt": "<v>"}`. */
+  def numberInts(m: MapData): MapData = wrapped(guardKeys(m))(_.getInt(_).toString)
+
+  /** The map's values as one-string structs; a null stays null. */
+  private def wrapped(m: MapData)(value: (ArrayData, Int) => String): MapData = {
+    val vs = m.valueArray()
+    val out = new Array[Any](vs.numElements())
+    var i = 0
+    while (i < out.length) {
+      if (!vs.isNullAt(i)) out(i) = InternalRow(UTF8String.fromString(value(vs, i)))
+      i += 1
+    }
+    new ArrayBasedMapData(m.keyArray(), new GenericArrayData(out))
   }
 
   /** Whether [[extend]] changes a value of this type: it holds an

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkRuntimeException
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -19,7 +20,9 @@ import org.apache.spark.sql.types.StructType
   * the standard extension-library pattern, no private APIs re-implemented.
   * The OSM reader ([[graft.osm.OsmXmlSource]]) builds catalyst rows
   * itself; `internalCreateDataFrame` wraps them without the external
-  * `Row` conversion `createDataFrame` would run per row.
+  * `Row` conversion `createDataFrame` would run per row. A kernel that
+  * fails a row raises `raise_error`'s exception ([[userError]]), whose
+  * class Spark keeps `private[spark]`.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -28,4 +31,9 @@ object ColumnBridge {
   def internalCreateDataFrame(spark: SparkSession, rows: RDD[InternalRow],
       schema: StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+
+  /** What `raise_error(message)` throws: error class
+    * USER_RAISED_EXCEPTION, the message as its text. */
+  def userError(message: String): RuntimeException =
+    new SparkRuntimeException("USER_RAISED_EXCEPTION", Map("errorMessage" -> message))
 }

@@ -166,6 +166,56 @@ class OsmShapeGoldenSpec extends SparkSpec {
     }
   }
 
+  /** Degenerate reference lists and promoted values: an `<nd/>` with no
+    * ref among duplicate refs, a way and a relation with no `nd` or
+    * `member` child, members missing their type or role, and int tags
+    * that promote and that do not. */
+  private val degenerateFixture: String = {
+    val a = """version="1" changeset="5" timestamp="2015-01-01T00:00:00Z" user="u" uid="1""""
+    "<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n<osm version=\"0.6\">\n" +
+      s"""  <way id="401" $a><nd ref="3"/><nd/><nd ref="1"/><nd ref="3"/><nd ref="10"/><nd ref="1"/>""" +
+      """<tag k="population" v="1200"/><tag k="seats" v="many"/><tag k="lanes" v="2"/></way>""" + "\n" +
+      s"""  <way id="402" $a></way>""" + "\n" +
+      s"""  <way id="403" $a><nd/><nd/></way>""" + "\n" +
+      s"""  <relation id="501" $a><tag k="type" v="route"/></relation>""" + "\n" +
+      s"""  <relation id="502" $a><member ref="401"/><member type="way" ref="402"/>""" +
+      """<member role="inner" ref="403"/><member type="node" ref="7" role="stop"/>""" +
+      """<tag k="ele" v="12.7"/></relation>""" + "\n" +
+      "</osm>\n"
+  }
+
+  test("shaped Extended-JSON lines of a degenerate-list fixture: refs " +
+    "sorted and distinct with a missing ref last, empty lists null, " +
+    "members keeping absent parts absent, int tags wrapped or null") {
+    withTempDir("osmdegen") { dir =>
+      val xml = java.nio.file.Paths.get(dir, "osmdegen.osm")
+      Files.write(xml, degenerateFixture.getBytes("UTF-8"))
+      val created = """"created":{"version":"1","changeset":"5",""" +
+        """"timestamp":"2015-01-01T00:00:00Z","user":"u","uid":"1"}"""
+      val expected = Seq(
+        s"""{"_id":"401","doc_type":"way",$created,"int_tags":{""" +
+          """"population":{"$numberLong":"1200"},"seats":null,"lanes":{"$numberLong":"2"}},""" +
+          """"node_refs":["1","10","3",null]}""",
+        s"""{"_id":"402","doc_type":"way",$created}""",
+        s"""{"_id":"403","doc_type":"way",$created,"node_refs":[null]}""",
+        s"""{"_id":"501","doc_type":"relation",$created,"tags":{"type":"route"}}""",
+        s"""{"_id":"502","doc_type":"relation",$created,""" +
+          """"int_tags":{"ele":{"$numberLong":"12"}},"members":[{"ref":"401"},""" +
+          """{"type":"way","ref":"402"},{"ref":"403","role":"inner"},""" +
+          """{"type":"node","ref":"7","role":"stop"}]}""")
+      val docs = OsmXmlSource.collection(spark, xml.toString)
+      val lines = docs.select(MongoExtendedJson.toExtendedJsonLine(docs).as("v"))
+        .collect().map(_.getString(0)).sorted.toSeq
+      assert(lines == expected, lines.mkString("\n"))
+      val perType = golden(xml.toString)
+      assert(perType == Map(
+        "node" -> ((0L, "f9ae04511a17483858975adb1e08cc5b0ade3f2c8edf3d197e826015c70c38c0")),
+        "way" -> ((3L, "871981b853656d8fbc7713c7de60b8a41ca3d1f6f4372e877144e1a5666a447a")),
+        "relation" -> ((2L, "91c0f2271872e34e796a386ec5fc181b0072580080e6787677717b5f235caa7b"))),
+        s"golden drift: $perType")
+    }
+  }
+
   test("a node whose lat is empty or not a number fails the read, naming " +
     "the number") {
     for (bad <- Seq("", "abc")) {

@@ -4,8 +4,11 @@ import graft.SparkSpec
 import graft.functions.TagShape
 import graft.sinks.MongoExtendedJson
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.expressions.{Expression, HigherOrderFunction}
+import org.apache.spark.sql.catalyst.expressions.json.StructsToJsonEvaluator
+import org.apache.spark.sql.catalyst.expressions.objects.{Invoke, StaticInvoke}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.functions.{col, to_json}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -21,10 +24,12 @@ import org.apache.spark.sql.types._
   * (string arrays and structs, string map values) as they are to
   * 229 / 300 / 254. Since the XML is read in one pass, a per-type read
   * is a type filter over the reader's wide relation, which adds the
-  * filter and the extra output attributes: 235 / 307 / 261, the bound
-  * now. The collection the ETL writes is one Project over that one
-  * relation, 355 nodes where its union of three per-type plans had
-  * over 783.
+  * filter and the extra output attributes: 235 / 307 / 261. The
+  * collection the ETL writes is one Project over that one relation,
+  * 355 nodes where its union of three per-type plans had over 783.
+  * With the way refs, the map-key guard and the integral-map wrap as
+  * kernel calls, and the members renamed by a cast, no lambda is left:
+  * 84 / 77 / 82 and 97 for the collection, the bounds now.
   */
 class OsmShapePlanSpec extends SparkSpec {
 
@@ -38,7 +43,7 @@ class OsmShapePlanSpec extends SparkSpec {
   test("shape + Extended-JSON encode optimizes to at most a tenth of the " +
     "expression-chain form's nodes per document type, with one kernel call") {
     val path = getClass.getResource("/mini.osm").getPath
-    val measured = Map("node" -> 235, "way" -> 307, "relation" -> 261, "collection" -> 355)
+    val measured = Map("node" -> 84, "way" -> 77, "relation" -> 82, "collection" -> 97)
     val plans = Seq("node" -> OsmXmlSource.nodes _, "way" -> OsmXmlSource.ways _,
         "relation" -> OsmXmlSource.relations _).map { case (t, read) =>
       val shaped = OsmShape.shape(read(spark, path), t)
@@ -54,6 +59,40 @@ class OsmShapePlanSpec extends SparkSpec {
       assert(got(t) <= measured(t), s"$t: ${got(t)} expression nodes ($got)")
       assert(kernelCalls(plan) == 1, s"$t: the kernel is planned more than once\n$plan")
     }
+  }
+
+  /** The operators one whole-stage stage compiles: down from its child
+    * to the adapters that feed it. */
+  private def stageOperators(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case _: InputAdapter | _: WholeStageCodegenExec => Nil
+    case _ => p.children.flatMap(stageOperators)
+  })
+
+  private def exprs(ps: Seq[SparkPlan]): Seq[Expression] =
+    ps.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+
+  test("the collection's Extended-JSON projection runs as one generated " +
+    "stage: no higher-order function, the encode beside the tag kernel") {
+    val path = getClass.getResource("/mini.osm").getPath
+    val plan = onGeneratedPath {
+      val docs = OsmXmlSource.collection(spark, path)
+      val lines = docs.select(MongoExtendedJson.toExtendedJsonLine(docs).as("v"))
+      assert(lines.collect().length == 8)
+      lines.queryExecution.executedPlan
+    }
+    val lambdas = exprs(plan.collect { case p => p }).collect { case h: HigherOrderFunction => h }
+    assert(lambdas.isEmpty, s"higher-order functions in the write:\n${lambdas.mkString("\n")}")
+    val stages = plan.collect { case w: WholeStageCodegenExec => stageOperators(w.child) }
+    def encodes(e: Expression) = e match {
+      case i: Invoke => i.targetObject.dataType == ObjectType(classOf[StructsToJsonEvaluator])
+      case _ => false
+    }
+    def shapes(e: Expression) = e match {
+      case s: StaticInvoke => s.staticObject == TagShape.getClass
+      case _ => false
+    }
+    val fused = stages.filter(ops => exprs(ops).exists(encodes) && exprs(ops).exists(shapes))
+    assert(fused.length == 1, s"encode and tag kernel are not one generated stage:\n$plan")
   }
 
   test("the kernel's interpreted and generated paths build the same maps") {

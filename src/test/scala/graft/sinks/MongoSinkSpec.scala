@@ -2,6 +2,7 @@ package graft.sinks
 
 import graft.SparkSpec
 import graft.osm.OsmXmlSource
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -71,6 +72,31 @@ class MongoSinkSpec extends SparkSpec {
     val line = ok.select(MongoExtendedJson.toExtendedJsonLine(ok).as("v"))
       .collect().head.getString(0)
     assert(line == """{"m":{"k":{"$numberLong":"1"}}}""", line)
+  }
+
+  test("a '$'-prefixed or dotted key fails the encode naming the key in " +
+    "every map family of the OSM collection, on both evaluation paths") {
+    val families = Seq(
+      "tags" -> lit("v"),
+      "list_tags" -> array(lit("a"), lit("b")),
+      "int_tags" -> lit(7L),
+      "float_tags" -> lit(1.5),
+      "bool_tags" -> lit(true))
+    val keys = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq(Row("ok", "$where"), Row("ok", "addr.street")), 2),
+      StructType(Seq(StructField("ok", StringType), StructField("bad", StringType))))
+    for ((family, v) <- families; bad <- Seq("$where", "addr.street")) {
+      def encode(): Unit = {
+        val df = keys.where(col("bad") === bad)
+          .select(map(col("ok"), v, col("bad"), v).as(family))
+        df.select(MongoExtendedJson.toExtendedJsonLine(df).as("v")).collect()
+      }
+      val (interpreted, generated) =
+        onBothPaths(intercept[Exception](encode()).getMessage)
+      for (m <- Seq(interpreted, generated))
+        assert(m.contains(s"map key MongoDB rejects ('$$'-prefix or dot): $bad"),
+          s"$family/$bad: $m")
+    }
   }
 
   test("nulls stay nulls — a null long/struct must not become " +
