@@ -239,11 +239,10 @@ object WindowOps {
     * ratio (single division, portable floor rounding).
     *
     * Scale shape: first-activity rides a user-partitioned WINDOW min
-    * over the one events exchange — the r11 ×10-gate fix: the
-    * previous agg-then-self-join form paid the user shuffle twice
-    * plus a join (8.95× at ×10, over even the volume-linear ceiling;
-    * the window form is the same answer off exactly ONE exchange of
-    * events, re-measured 4.9×). The
+    * over the one events exchange. An agg-then-self-join form pays
+    * the user shuffle twice plus a join and measured 8.95× at ×10
+    * data, over even the volume-linear ceiling; the window form is
+    * the same answer off exactly ONE exchange of events (4.9×). The
     * distinct collapses to (cohort, offset, user) BEFORE counting, so
     * the count shuffle carries at most users·active-days narrow rows;
     * cohort day-0 sizes are a calendar-bounded dimension (≤ days in
@@ -607,6 +606,55 @@ object WindowOps {
                        * 1000000 + 0.5) / 1000000 END""").as("r"))
   }
 
+  /** The dense daily calendar of `events`: (day, event count) for
+    * every integer µs-day from the first active day to the last,
+    * ascending, with gap days as real zero observations — the oracle's
+    * `generate_series(d0, d1)` grid LEFT JOINed to the daily counts.
+    * An empty table gives an empty calendar, as the oracle's
+    * (NULL, NULL) span gives an empty grid; an event with a NULL `ts`
+    * has no day and drops out, as it drops out of the oracle's join.
+    *
+    * Bound: ONE pruned scan reduces to (day, count) on the executors,
+    * and what comes back is bounded by ELAPSED DAYS, never by data
+    * volume — ~365 rows a year, ~3.7k a decade at any corpus size. So
+    * it is collected and densified on the driver, and its eight
+    * consumers either fold it there (ts3, ts4, ts6, w13, w15) or run
+    * their set-oriented part on it as a local relation (ts5, w14,
+    * w16). */
+  private def dailyCalendar(s: SparkSession, d: String): IndexedSeq[(Long, Long)] = {
+    val counts = Tables.events(s, d)
+      .select(expr(s"unix_micros(ts) div $W10_DAY_US").as("day"))
+      .groupBy(col("day")).agg(count(lit(1)).as("x"))
+      .collect().filterNot(_.isNullAt(0))
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    if (counts.isEmpty) IndexedSeq.empty
+    else (counts.keys.min to counts.keys.max)
+      .map(day => day -> counts.getOrElse(day, 0L))
+  }
+
+  /** Integer EWMA at α = 1/4 (ts3's smoother, ts6's trend):
+    * s₁ = x₁, s_d = (3·s_{d-1} + x_d) div 4. Counts are non-negative,
+    * so the state is too, floor- and truncate-division agree, and the
+    * oracle's recursive CTE replays it bit-for-bit. */
+  private def ewma(xs: IndexedSeq[Long]): IndexedSeq[Long] =
+    if (xs.isEmpty) xs
+    else xs.tail.scanLeft(xs.head)((e, x) => (3L * e + x) / 4L)
+
+  /** Integer Holt (level, trend) at α = β = 1/4 (w15's state, ts4's
+    * model): l₁ = x₁, b₁ = 0, then l_d = (x_d + 3·(l+b)) div 4 and
+    * b_d = ((l_d − l) + 3·b) div 4. The trend goes negative, and both
+    * divisions must truncate toward zero: Scala's Long `/` and
+    * DuckDB's `//` both give -7 // 4 = -1 (measured). A floor-division
+    * fold diverges on ts4's train prefix (l, b = 25, −2 against the
+    * truncating 31, 0 at the sf0.001 cutoff), so this is the one
+    * convention the oracle replays, not a free choice. */
+  private def holt(xs: IndexedSeq[Long]): IndexedSeq[(Long, Long)] =
+    if (xs.isEmpty) IndexedSeq.empty
+    else xs.tail.scanLeft((xs.head, 0L)) { case ((l, b), x) =>
+      val lNew = (x + 3L * (l + b)) / 4L
+      (lNew, ((lNew - l) + 3L * b) / 4L)
+    }
+
   /** ts5's lag range: 1..7 days — one calendar week, so the lag-7
     * row IS the weekly-seasonality strength the w12/w14 operators
     * assume exists. */
@@ -623,24 +671,13 @@ object WindowOps {
     * exact integer moments, same single pinned float expression per
     * lag with the DOUBLE-before-product overflow rule.
     *
-    * Scale shape: ONE pruned scan reduces to (day, count) — calendar-
-    * sized at any corpus volume; the lag pairing is a self-join of
-    * that calendar-bounded series against a broadcast 7-row lag
-    * dimension, and each lag's moments partial-aggregate to one row.
-    * Nothing downstream of the first agg depends on data volume. */
+    * Scale shape: the [[dailyCalendar]] as a local relation (bounded
+    * by elapsed days, see there); the lag pairing self-joins it
+    * against a broadcast 7-row lag dimension, and each lag's moments
+    * aggregate to one row. */
   private def ts5(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     import s.implicits._
-    val byDay = Tables.events(s, d)
-      .select(expr(s"unix_micros(ts) div $W10_DAY_US").as("day"))
-      .groupBy(col("day")).agg(count(lit(1)).as("n"))
-      .persist(StorageLevel.MEMORY_AND_DISK) // span agg + grid join
-    val series = byDay
-      .agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
-      .select(explode(expr("sequence(d0, d1)")).as("day"))
-      .join(byDay.select(col("day"), col("n").as("x")), Seq("day"), "left")
-      .na.fill(0L, Seq("x"))
-      .persist(StorageLevel.MEMORY_AND_DISK) // both sides of the lag join
+    val series = dailyCalendar(s, d).toDF("day", "x")
     series
       .crossJoin(broadcast((1L to TS5_MAX_LAG).toList.toDF("lag")))
       .join(series.select(col("day").as("dy"), col("x").as("y")),
@@ -670,12 +707,12 @@ object WindowOps {
   }
 
   /** ts6 — variance decomposition of the daily volume into trend /
-    * weekly-seasonal / remainder: trend = ts3's integer EWMA
-    * (recurrence verbatim), seasonal = per-weekday truncate-div mean
-    * of the DETRENDED series (w12's (day+4) mod 7 weekday), remainder
-    * = what's left; each component reported as its integer sum of
-    * squares about the calendar mean (trend), about zero (seasonal /
-    * remainder), with shares of the total variation. This is the
+    * weekly-seasonal / remainder: trend = ts3's integer [[ewma]],
+    * seasonal = per-weekday truncate-div mean of the DETRENDED series
+    * (w12's (day+4) mod 7 weekday), remainder = what's left; each
+    * component reported as its integer sum of squares about the
+    * calendar mean (trend), about zero (seasonal / remainder), with
+    * shares of the total variation. This is the
     * "where does the variance live" answer that picks which machinery
     * matters: a trend-dominant series needs w15/ts4, a
     * seasonal-dominant one needs w12/w14, a remainder-dominant one is
@@ -683,48 +720,39 @@ object WindowOps {
     * the components are not orthogonal, so they need not sum to 10⁶).
     *
     * Exactness: all integer — counts, the EWMA, truncate-div means
-    * (negative-sum division truncates toward zero identically on
-    * both engines, the measured r10 convention), squares, and
+    * (a negative detrended sum divides toward zero in both engines:
+    * Scala's Long `/` and DuckDB's `//` agree, measured), squares, and
     * floor-div shares. Domain: each square stays in BIGINT while
     * |daily deviation| < 3·10⁹ events/day (the pipe7 domain-note
-    * convention).
+    * convention). On an empty calendar every sum of squares is SQL's
+    * empty SUM, NULL, so the four rows carry NULL ss and share.
     *
-    * Scale shape: ONE pruned scan reduces to (day, count); the
-    * decomposition folds over the dense calendar driver-side (the
-    * w13/ts3/ts4 bounded-state discipline — ~3.7k rows per decade at
-    * ANY corpus volume) and returns a 4-row literal relation. */
+    * Scale shape: folds the [[dailyCalendar]] driver-side (bounded by
+    * elapsed days, see there) and returns a 4-row literal relation. */
   private def ts6(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val daily = Tables.events(s, d)
-      .select(expr(s"unix_micros(ts) div $W10_DAY_US").as("day"))
-      .groupBy(col("day")).agg(count(lit(1)).as("x"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val days = (daily.keys.min to daily.keys.max).toArray
-    val x = days.map(daily.getOrElse(_, 0L))
-    val mu = x.sum / x.length
-    val t = new Array[Long](x.length)
-    var ema = 0L
-    for (i <- x.indices) {
-      ema = if (i == 0) x(i) else (3L * ema + x(i)) / 4L
-      t(i) = ema
-    }
+    val cal = dailyCalendar(s, d)
+    val x = cal.map(_._2)
+    val t = ewma(x)
     val r = x.indices.map(i => x(i) - t(i))
-    val dow = days.map(dd => ((dd + 4) % 7).toInt)
+    val dow = cal.map { case (day, _) => ((day + 4) % 7).toInt }
     val sDow = r.indices.groupBy(dow(_)).map { case (w, idx) =>
       w -> idx.map(r).sum / idx.length
     }
-    val e = x.indices.map(i => r(i) - sDow(dow(i)))
+    val mu = if (x.isEmpty) 0L else x.sum / x.length
     def sq(v: Long) = v * v
-    val ssTot = x.map(v => sq(v - mu)).sum
-    val rows = Seq(
-      ("trend", t.map(v => sq(v - mu)).sum),
-      ("seasonal", x.indices.map(i => sq(sDow(dow(i)))).sum),
-      ("remainder", e.map(sq).sum),
-      ("total", ssTot))
-    rows.toDF("component", "ss")
+    def ss(vs: IndexedSeq[Long]): Option[Long] =
+      if (vs.isEmpty) None else Some(vs.map(sq).sum)
+    val ssTot = ss(x.map(_ - mu))
+    Seq(
+      ("trend", ss(t.map(_ - mu)), ssTot),
+      ("seasonal", ss(dow.map(sDow)), ssTot),
+      ("remainder", ss(x.indices.map(i => r(i) - sDow(dow(i)))), ssTot),
+      ("total", ssTot, ssTot))
+      .toDF("component", "ss", "ss_total")
       .select(col("component"), col("ss"),
-        expr(s"CASE WHEN $ssTot = 0 THEN NULL " +
-          s"ELSE (1000000 * ss) div $ssTot END").as("share_ppm"))
+        expr("CASE WHEN ss_total = 0 THEN NULL " +
+          "ELSE (1000000 * ss) div ss_total END").as("share_ppm"))
   }
 
   /** w17 — inter-arrival time histogram: per-user consecutive-event
@@ -774,24 +802,13 @@ object WindowOps {
     * Exactness: all integer — counts, the floor-div mean, day
     * arithmetic; runs are a bijection of the (side, day − rank) key.
     *
-    * Scale shape: one pruned scan → (day, count) agg (calendar-sized
-    * forever after); the island window partitions the ≤|days| grid
-    * in two and the two aggs collapse to 2 rows. The w12/w13
-    * calendar-bounded discipline end to end. */
+    * Scale shape: the [[dailyCalendar]] as a local relation (bounded
+    * by elapsed days, see there); the island window partitions it in
+    * two and the two aggs collapse to 2 rows. */
   private def w16(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.storage.StorageLevel
-    val byDay = Tables.events(s, d)
-      .select(expr(s"unix_micros(ts) div $W10_DAY_US").as("day"))
-      .groupBy(col("day")).agg(count(lit(1)).as("n"))
-      .persist(StorageLevel.MEMORY_AND_DISK) // span agg + grid join
-    val grid = byDay
-      .agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
-      .select(explode(expr("sequence(d0, d1)")).as("day"))
-      .join(byDay.select(col("day"), col("n").as("x")), Seq("day"), "left")
-      .na.fill(0L, Seq("x"))
+    import s.implicits._
     val bySide = Window.partitionBy(col("above")).orderBy(col("day"))
-    grid
+    dailyCalendar(s, d).toDF("day", "x")
       .withColumn("mu", expr("sum(x) over () div count(1) over ()"))
       .select(col("day"), (col("x") > col("mu")).as("above"))
       .withColumn("isl", col("day") - row_number().over(bySide))
@@ -815,28 +832,17 @@ object WindowOps {
     * from the data, and the recurrence itself — so the oracle
     * replays it as a recursive CTE bit-for-bit.
     *
-    * Scale shape: ONE pruned scan reduces to (day, count) — the
-    * ts1/ts2 grid discipline; the recurrence is inherently
-    * sequential, but its state is the DENSE CALENDAR (bounded by
-    * elapsed days, ~365 rows/year at ANY corpus size — a decade of
-    * 100 TB crawls is ~3,650 rows), so it folds driver-side under
-    * the km1/PQ bounded-model discipline and returns as a literal
-    * relation. */
+    * Scale shape: the recurrence is inherently sequential, so it
+    * folds the [[dailyCalendar]] driver-side (bounded by elapsed days,
+    * see there) and returns as a literal relation. */
   private def w13(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val daily = Tables.events(s, d)
-      .select(expr(s"unix_micros(ts) div $W10_DAY_US").as("day"))
-      .groupBy(col("day")).agg(count(lit(1)).as("x"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val d0 = daily.keys.min
-    val d1 = daily.keys.max
-    val xs = (d0 to d1).map(day => day -> daily.getOrElse(day, 0L))
-    val n = xs.length.toLong
-    val mu = xs.map(_._2).sum / n
+    val cal = dailyCalendar(s, d)
+    val mu = if (cal.isEmpty) 0L else cal.map(_._2).sum / cal.length
     val k = math.max(1L, mu / 20L)
     val h = 5L * k
     var sAcc = 0L
-    val rows = xs.map { case (day, x) =>
+    val rows = cal.map { case (day, x) =>
       sAcc = math.max(0L, sAcc + x - mu - k)
       (day, x, sAcc, sAcc > h)
     }
@@ -882,25 +888,15 @@ object WindowOps {
     * truncate-div agree and the oracle's recursive CTE replays it
     * bit-for-bit — no float, no div-convention hazard.
     *
-    * Scale shape: the w13 discipline exactly — ONE scan reduces to
-    * (day, count); the sequential fold runs driver-side over the
-    * DENSE CALENDAR (bounded by elapsed days at ANY corpus size) and
+    * Scale shape: the [[ewma]] fold runs driver-side over the
+    * [[dailyCalendar]] (bounded by elapsed days, see there) and
     * returns as a literal relation. */
   private def ts3(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val daily = Tables.events(s, d)
-      .select(expr(s"unix_micros(ts) div $W10_DAY_US").as("day"))
-      .groupBy(col("day")).agg(count(lit(1)).as("x"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val d0 = daily.keys.min
-    val d1 = daily.keys.max
-    var ema = 0L
-    val rows = (d0 to d1).map { day =>
-      val x = daily.getOrElse(day, 0L)
-      ema = if (day == d0) x else (3L * ema + x) / 4L
-      (day, x, ema)
-    }
-    rows.toDF("day", "x", "ewma")
+    val cal = dailyCalendar(s, d)
+    cal.zip(ewma(cal.map(_._2)))
+      .map { case ((day, x), e) => (day, x, e) }
+      .toDF("day", "x", "ewma")
   }
 
   /** w14 — day-of-week-adjusted volume anomaly: each dense-calendar
@@ -918,21 +914,13 @@ object WindowOps {
     * comparison is bit-deterministic). Zero-variance weekdays flag
     * any deviation and pass equality — no guard needed.
     *
-    * Scale shape: daily counts (one scan), dense grid via the ts1/ts2
-    * calendar explode, ≤7-row moment table broadcast back. */
+    * Scale shape: the [[dailyCalendar]] as a local relation (bounded
+    * by elapsed days, see there), its ≤7-row moment table broadcast
+    * back. */
   private def w14(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val byDay = Tables.events(s, d)
-      .select(expr(s"unix_micros(ts) div $W10_DAY_US").as("day"))
-      .groupBy(col("day")).agg(count(lit(1)).as("n"))
-      .persist(StorageLevel.MEMORY_AND_DISK) // span + grid join
-    val grid = byDay
-      .agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
-      .select(explode(expr("sequence(d0, d1)")).as("day"))
-      .join(byDay, Seq("day"), "left")
-      .na.fill(0L, Seq("n"))
+    import s.implicits._
+    val grid = dailyCalendar(s, d).toDF("day", "n")
       .withColumn("dow", expr("(day + 4) % 7"))
-      .persist(StorageLevel.MEMORY_AND_DISK) // moments + flags
     val moments = grid.groupBy(col("dow"))
       .agg(count(lit(1)).as("cnt"), sum(col("n")).as("sx"),
         sum(col("n") * col("n")).as("sxx"))
@@ -953,35 +941,19 @@ object WindowOps {
     * b_d = ((l_d − l) + 3·b) div 4 — ts3's EWMA tracks a LEVEL and
     * lags any sustained ramp by construction; Holt's trend term is
     * what closes that gap (the capacity-forecast primitive:
-    * forecast_next = l + b). The trend can go NEGATIVE, and both
-    * integer divisions TRUNCATE toward zero identically (JVM Long `/`
-    * == DuckDB `//`, the measured cls5 convention), so the recurrence
-    * replays bit-for-bit.
+    * forecast_next = l + b). The trend can go NEGATIVE; [[holt]]
+    * says why its truncating divisions replay bit-for-bit.
     *
-    * Scale shape: the w13/ts3 discipline — one scan to (day, count),
-    * driver fold over the calendar-bounded state, literal relation
-    * out; the oracle replays it as a recursive CTE. */
+    * Scale shape: the [[holt]] fold runs driver-side over the
+    * [[dailyCalendar]] (bounded by elapsed days, see there) and
+    * returns as a literal relation; the oracle replays it as a
+    * recursive CTE. */
   private def w15(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val daily = Tables.events(s, d)
-      .select(expr(s"unix_micros(ts) div $W10_DAY_US").as("day"))
-      .groupBy(col("day")).agg(count(lit(1)).as("x"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val d0 = daily.keys.min
-    val d1 = daily.keys.max
-    var l = 0L
-    var b = 0L
-    val rows = (d0 to d1).map { day =>
-      val x = daily.getOrElse(day, 0L)
-      if (day == d0) { l = x; b = 0L }
-      else {
-        val lNew = (x + 3L * (l + b)) / 4L
-        b = ((lNew - l) + 3L * b) / 4L
-        l = lNew
-      }
-      (day, x, l, b, l + b)
-    }
-    rows.toDF("day", "x", "level", "trend", "forecast_next")
+    val cal = dailyCalendar(s, d)
+    cal.zip(holt(cal.map(_._2)))
+      .map { case ((day, x), (l, b)) => (day, x, l, b, l + b) }
+      .toDF("day", "x", "level", "trend", "forecast_next")
   }
 
   /** ts4's holdout length (days) and seasonal lag. */
@@ -1001,57 +973,38 @@ object WindowOps {
     * definition; w15 alone reports state, never skill.
     *
     * Exactness: counts, Holt state, forecasts, and absolute-error
-    * sums are ALL integers (w15's recurrence verbatim on the train
-    * prefix); only the final MASE ratio is a double — one fixed-order
-    * expression, 6-dp pinned (NULL when the train-naive denominator
-    * is zero).
+    * sums are ALL integers ([[holt]] on the train prefix); only the
+    * final MASE ratio is a double — one fixed-order expression, 6-dp
+    * pinned (NULL when the train-naive denominator is zero or NULL).
+    * The error sums follow SQL: a day is scored only when its
+    * seasonal lag is a calendar day and a train prefix exists, and a
+    * SUM over no scored day is NULL, so an empty table gives two rows
+    * with n_hold 0 and NULL sums.
     *
-    * Scale shape: ONE pruned scan reduces to (day, count) — the
-    * w13/w15 adjudication; everything after folds over the dense
-    * calendar (~30 rows here, ~3.7k for a decade at ANY corpus size)
-    * driver-side and returns as a 2-row literal relation. */
+    * Scale shape: folds the [[dailyCalendar]] driver-side (bounded by
+    * elapsed days, see there) and returns a 2-row literal relation. */
   private def ts4(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val daily = Tables.events(s, d)
-      .select(expr(s"unix_micros(ts) div $W10_DAY_US").as("day"))
-      .groupBy(col("day")).agg(count(lit(1)).as("x"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val d0 = daily.keys.min
-    val d1 = daily.keys.max
-    val cutoff = d1 - TS4_HOLDOUT
-    def x(day: Long): Long = daily.getOrElse(day, 0L)
-    // w15's recurrence verbatim, train prefix only. Scala `/`
-    // truncates toward zero and so does DuckDB's `//` (measured:
-    // -7//4 = -1 — the division-semantics adjudication), so the
-    // pairing holds even where the trend increment goes negative —
-    // which it DOES on this prefix: a floor-division fold diverges
-    // (l,b = 25,−2 vs the truncating 31,0 at the gate cutoff), so
-    // this is the one convention, not a free choice.
-    var l = 0L
-    var b = 0L
-    (d0 to cutoff).foreach { day =>
-      if (day == d0) { l = x(day); b = 0L }
-      else {
-        val lNew = (x(day) + 3L * (l + b)) / 4L
-        b = ((lNew - l) + 3L * b) / 4L
-        l = lNew
-      }
-    }
-    val hold = ((cutoff + 1) to d1).zipWithIndex
-    val saeHolt = hold.map { case (day, i) =>
-      math.abs(x(day) - (l + (i + 1) * b)) }.sum
-    val saeNaive = hold.map { case (day, _) =>
-      math.abs(x(day) - x(day - TS4_SEASON)) }.sum
-    val trainDays = (d0 + TS4_SEASON) to cutoff
-    val saeTrain = trainDays.map(day =>
-      math.abs(x(day) - x(day - TS4_SEASON))).sum
+    val x = dailyCalendar(s, d).map(_._2)
+    // calendar index i is day d0 + i; the train prefix ends at the
+    // cutoff d1 − TS4_HOLDOUT, and holdout day i is h = i − nTrain0 + 1
+    // days past it
+    val nTrain0 = x.length - TS4_HOLDOUT
+    val (l, b) = holt(x.take(nTrain0)).lastOption.getOrElse((0L, 0L))
+    val hold = if (nTrain0 <= 0) Nil
+      else (nTrain0 until x.length).filter(_ >= TS4_SEASON)
+    val train = TS4_SEASON until nTrain0
+    def naive(i: Int) = math.abs(x(i) - x(i - TS4_SEASON))
+    def total(errs: Seq[Long]) = if (errs.isEmpty) None else Some(errs.sum)
+    val saeHolt = total(hold.map(i =>
+      math.abs(x(i) - (l + (i - nTrain0 + 1) * b))))
+    val saeNaive = total(hold.map(naive))
+    val saeTrain = total(train.map(naive))
     val nHold = hold.length.toLong
-    val nTrain = trainDays.length.toLong
-    def mase(sae: Long): Option[Double] =
-      if (saeTrain == 0L || nTrain == 0L) None
-      else Some(math.floor(
-        (sae.toDouble / nHold) / (saeTrain.toDouble / nTrain)
-          * 1000000 + 0.5) / 1000000)
+    val nTrain = train.length.toLong
+    def mase(sae: Option[Long]): Option[Double] =
+      for (e <- sae; t <- saeTrain if t > 0L) yield math.floor(
+        (e.toDouble / nHold) / (t.toDouble / nTrain) * 1000000 + 0.5) / 1000000
     Seq(("holt", nHold, saeHolt, saeTrain, nTrain, mase(saeHolt)),
       ("naive", nHold, saeNaive, saeTrain, nTrain, mase(saeNaive)))
       .toDF("method", "n_hold", "sum_abs_err", "train_naive_sae",

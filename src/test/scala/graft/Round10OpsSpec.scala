@@ -3,11 +3,11 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.functions.Fns
 
-/** Semantic checks for the round-10 wave (Markov transitions, integer
-  * EWMA, weekday-adjusted anomaly, JL random projection, Rocchio
-  * centroids, proximity retrieval, Burrows' Delta, local-DP frequency
-  * estimation, completeness census) — plain-Scala replays plus the
-  * conservation laws the DuckDB oracle can't state directly.
+/** Semantic checks for the round-10 wave (Markov transitions, JL
+  * random projection, Rocchio centroids, proximity retrieval, Burrows'
+  * Delta, local-DP frequency estimation, completeness census) —
+  * plain-Scala replays plus the conservation laws the DuckDB oracle
+  * can't state directly.
   */
 class Round10OpsSpec extends SparkSpec {
 
@@ -24,14 +24,6 @@ class Round10OpsSpec extends SparkSpec {
         col("event_type"), col("user_id"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))
-
-  /** Dense-calendar daily counts (gap days as real zeros). */
-  private lazy val dailyDense: Seq[(Long, Long)] = {
-    val byDay = events.groupBy(_._2 / dayUs)
-      .map { case (d, xs) => d -> xs.length.toLong }
-    (byDay.keys.min to byDay.keys.max)
-      .map(d => d -> byDay.getOrElse(d, 0L))
-  }
 
   /** Embeddings as (vec_id, label, integer-thousandths coords). */
   private lazy val vecsQ: Array[(Long, Long, Array[Long])] =
@@ -62,54 +54,6 @@ class Round10OpsSpec extends SparkSpec {
     assert(got === expected)
     assert(got.values.map(_._1).sum ==
       seqs.map(s => (s.length - 1).toLong).sum)
-  }
-
-  // ---- ts3 --------------------------------------------------------
-
-  test("ts3: the integer EWMA recurrence replays exactly over the " +
-    "dense calendar, starts at x1, and stays within the running " +
-    "[min, max] envelope of the series so far") {
-    var ema = 0L
-    var lo = Long.MaxValue
-    var hi = Long.MinValue
-    val expected = dailyDense.zipWithIndex.map { case ((day, x), i) =>
-      ema = if (i == 0) x else (3L * ema + x) / 4L
-      lo = math.min(lo, x); hi = math.max(hi, x)
-      // floor-div undershoot: the EWMA can sit at most 1 below the
-      // exact convex combination, never above the running max
-      assert(ema >= math.max(0L, lo - 1) && ema <= hi,
-        s"day $day ewma $ema outside [$lo-1, $hi]")
-      (day, x, ema)
-    }
-    val got = q("ts3_ewma").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1).toSeq
-    assert(got === expected)
-    assert(got.head._3 == got.head._2) // s1 = x1
-  }
-
-  // ---- w14 --------------------------------------------------------
-
-  test("w14: weekday-adjusted anomaly flags replay exactly from the " +
-    "multiplied-out 2-sigma rule over dense-calendar dow populations") {
-    val withDow = dailyDense.map { case (day, n) => (day, n, (day + 4) % 7) }
-    val moms = withDow.groupBy(_._3).map { case (dow, xs) =>
-      dow -> ((xs.size.toLong, xs.map(_._2).sum,
-        xs.map(x => x._2 * x._2).sum))
-    }
-    val expected = withDow.map { case (day, n, dow) =>
-      val (cnt, sx, sxx) = moms(dow)
-      val dev = n.toDouble * cnt.toDouble - sx.toDouble
-      val v = cnt.toDouble * sxx.toDouble - sx.toDouble * sx.toDouble
-      (day, n, dow, dev * dev > 4.0 * v)
-    }.toSet
-    val got = q("w14_dow_anomaly").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getBoolean(3))).toSet
-    assert(got === expected)
-    assert(got.size == dailyDense.size) // one row per calendar day
-    // a 2-sigma rule over any population flags a strict minority
-    assert(got.count(_._4) * 4 < got.size)
   }
 
   // ---- emb6 -------------------------------------------------------
@@ -278,31 +222,6 @@ class Round10OpsSpec extends SparkSpec {
     assert(got === expected)
     assert(got.values.map(_._1).sum == n) // true counts conserve
     assert(got.values.map(_._2).sum == n) // reports conserve too
-  }
-
-  // ---- w15 --------------------------------------------------------
-
-  test("w15: the Holt level+trend recurrence replays exactly " +
-    "(truncating integer divisions), forecast = level + trend, and " +
-    "day 1 is (x1, 0)") {
-    var l = 0L
-    var b = 0L
-    val expected = dailyDense.zipWithIndex.map { case ((day, x), i) =>
-      if (i == 0) { l = x; b = 0L }
-      else {
-        val lNew = (x + 3L * (l + b)) / 4L
-        b = ((lNew - l) + 3L * b) / 4L
-        l = lNew
-      }
-      (day, x, l, b, l + b)
-    }
-    val got = q("w15_holt").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4)))
-      .sortBy(_._1).toSeq
-    assert(got === expected)
-    assert(got.head._3 == got.head._2 && got.head._4 == 0L)
-    got.foreach { case (_, _, lv, tr, fc) => assert(fc == lv + tr) }
   }
 
   // ---- gr6 --------------------------------------------------------

@@ -61,9 +61,9 @@ class ScratchLeakSpec extends SparkSpec {
     "od1_outliers", "pipe4_domain_tilt", "pipe9_funnel",
     "ppl1_lm_bucket", "qr1_batch_bm25", "qr2_prf_expand", "qr3_mrr",
     "qr4_ndcg", "qr5_champion_recall", "rrf1_hybrid_fuse",
-    "s6_ann_recall", "ts1_gapfill", "ts2_xcorr", "ts5_acf",
-    "voc3_coverage_curve", "w10_retention", "w14_dow_anomaly",
-    "w16_streaks", "x10_tfidf", "x11_bm25", "x12_bigram_lm",
+    "s6_ann_recall", "ts1_gapfill", "ts2_xcorr",
+    "voc3_coverage_curve", "w10_retention",
+    "x10_tfidf", "x11_bm25", "x12_bigram_lm",
     "x13_source_overlap", "x16_winnow", "x19_collocation_lift",
     "x20_burrows_delta", "x21_dup_ngrams")
 
