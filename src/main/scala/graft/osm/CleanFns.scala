@@ -45,11 +45,22 @@ object CleanFns {
 
   private def useICU: Boolean = SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
 
-  /** SQL `lower` (UTF8_BINARY collation). */
+  /** SQL `lower` (UTF8_BINARY collation). On ASCII both of Spark's
+    * case mappings change 'A'..'Z' and nothing else, so ASCII maps
+    * here without Spark's path: its ICU branch initializes
+    * `CollationAwareUTF8String` (1.2-1.3 s once per JVM, single
+    * threaded) and every call reads the ICU flag through a fresh
+    * executor `SQLConf`. Not `String.toLowerCase`, which follows the
+    * JVM locale ([[graft.functions.Fns.lowerTrimLocal]]). */
   private def lower(s: String): String =
     if (s == null) null
+    else if (s.forall(_ < 0x80)) asciiLower(s)
     else CollationSupport.Lower.exec(UTF8String.fromString(s),
       CollationFactory.UTF8_BINARY_COLLATION_ID, useICU).toString
+
+  private def asciiLower(s: String): String =
+    if (!s.exists(c => c >= 'A' && c <= 'Z')) s
+    else s.map(c => if (c >= 'A' && c <= 'Z') (c + 32).toChar else c)
 
   /** SQL `initcap` (UTF8_BINARY collation). */
   private def initcap(s: String): String =

@@ -1,6 +1,6 @@
 package graft.osm
 
-import java.text.NumberFormat
+import java.text.{NumberFormat, ParseException}
 import java.util.Locale
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
 
@@ -30,11 +30,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * Values follow Spark's XML source, which this reader replaced (the
   * `OsmShapeGoldenSpec` constants were recorded on it): attribute
   * values are trimmed, ids and refs stay strings (the reference keeps
-  * OSM ids as strings), lat/lon parse leniently to double (F11), and a
-  * node whose lat or lon is no number at all fails the read, naming the
-  * number and the range. Unknown attributes, unknown children and text
-  * content are ignored. Malformed XML fails the read with the parser's
-  * message and the range.
+  * OSM ids as strings), and lat/lon parse leniently to double (F11). A
+  * lat or lon that is no number at all ("" or "abc") reads as null, so
+  * the node's `pos` is null and [[OsmAudit.violations]] flags it: one
+  * bad attribute does not fail the whole read, where Spark's XML
+  * source and the reference's `float()` raised. Unknown attributes,
+  * unknown children and text content are ignored. Malformed XML fails
+  * the read with the parser's message and the range.
   */
 object OsmXmlSource {
 
@@ -131,9 +133,9 @@ object OsmXmlSource {
 
   /** A lat/lon value as Spark's XML source parsed it: trimmed, sign
     * split off, then `toDouble`, falling back to the locale's lenient
-    * `NumberFormat` ("12abc" is 12.0, "1,234.5" is 1234.5) — which
-    * throws on a value holding no number. */
-  private def double(v: String): Double = {
+    * `NumberFormat` ("12abc" is 12.0, "1,234.5" is 1234.5); null for a
+    * value holding no number, where that parse throws. */
+  private def double(v: String): Any = {
     def parse(s: String): Double =
       try s.toDouble
       catch {
@@ -141,9 +143,11 @@ object OsmXmlSource {
           NumberFormat.getInstance(Locale.getDefault).parse(s).doubleValue()
       }
     val t = v.trim
-    if (t.startsWith("+")) parse(t.substring(1))
-    else if (t.startsWith("-")) -parse(t.substring(1))
-    else parse(t)
+    try {
+      if (t.startsWith("+")) parse(t.substring(1))
+      else if (t.startsWith("-")) -parse(t.substring(1))
+      else parse(t)
+    } catch { case _: ParseException => null }
   }
 
   /** The element the stream is at, read through its end tag: its

@@ -167,6 +167,50 @@ class SourceInvariantSpec extends AnyFunSuite {
     assert(sites == Seq("OsmXmlSource.scala"), s"XMLInputFactory constructions: $sites")
   }
 
+  /** A text write: `.write` then any mode/option calls (arguments
+    * nested up to three parentheses deep), ending in `.text(` or
+    * `.format("text")`, across line breaks. */
+  private val textWrite =
+    """\.write(\s*\.(?!text\b|format\b)\w+\((?:[^()]|\((?:[^()]|\([^()]*\))*\))*\))*\s*\.(text\(|format\(\s*"text"\s*\))""".r
+
+  test("the text-write pattern sees every write form and no read") {
+    val writes = Seq("df.write.text(p)", "df.write.mode(mode(overwrite)).text(path)",
+      "df.select(v)\n  .write.mode(\"append\").option(\"compression\", \"gzip\").text(p)",
+      "df.write.format(\"text\").save(p)")
+    writes.foreach(w => assert(textWrite.findFirstIn(w).isDefined, s"missed: $w"))
+    val others = Seq("spark.read.text(p)", "df.write.mode(\"overwrite\").json(p)",
+      "df.write.parquet(p)", "LineWriter.write(lines, path, overwrite)")
+    others.foreach(o => assert(textWrite.findFirstIn(o).isEmpty, s"false hit: $o"))
+  }
+
+  test("text is written through the one line writer: no DataFrameWriter " +
+    "text write in src/main, and both text sinks call LineWriter.write") {
+    assert(mainRoot.isDirectory, s"source root not found at ${mainRoot.getAbsolutePath}")
+    val writers = scalaSources(mainRoot)
+      .filter(f => textWrite.findFirstIn(code(f)).isDefined).map(_.getName)
+    assert(writers.isEmpty, s"DataFrameWriter text writes in src/main: $writers")
+    val callers = scalaSources(mainRoot)
+      .filter(code(_).contains("LineWriter.write(")).map(_.getName).toSet
+    assert(callers == Set("MongoSink.scala", "DocumentSinks.scala"),
+      s"LineWriter.write callers: $callers")
+  }
+
+  test("a Hadoop configuration is wrapped for shipping only as the " +
+    "argument of sparkContext.broadcast, so no task closure carries one " +
+    "(every task deserialized its own copy, 5-7 ms each)") {
+    assert(mainRoot.isDirectory, s"source root not found at ${mainRoot.getAbsolutePath}")
+    val wrap = """new\s+(SerializableConfiguration|SerializableWritable)\b""".r
+    val sites = scalaSources(mainRoot).flatMap { f =>
+      val c = code(f)
+      wrap.findAllMatchIn(c).map(m => f.getName -> c.substring(0, m.start).trim.endsWith(".broadcast("))
+    }
+    assert(sites.nonEmpty, "no wrapped configuration found: the pattern is stale")
+    val loose = sites.collect { case (f, false) => f }
+    assert(loose.isEmpty, s"configuration wrapped outside sparkContext.broadcast in: $loose")
+    assert(sites.map(_._1).toSet == Set("OsmXmlSource.scala", "LineWriter.scala"),
+      s"broadcast configurations in: $sites")
+  }
+
   /** Every Scala source of the engine, its specs and the benchmark
     * harness: a session built anywhere in one of them can be the one
     * that sizes the JVM-global codegen cache. */

@@ -90,6 +90,29 @@ class CleanFnsSpec extends SparkSpec {
       (None, Some("maybe"))))
   }
 
+  test("boolValue / boolResidual lowercase exactly as Spark SQL lower() " +
+    "under both ICU case-mapping settings, ASCII and non-ASCII alike") {
+    import org.apache.spark.sql.functions.lower
+    val in = Seq("yes", "YES", "No", "MiXeD Case 42 !?", "", "Ｙｅｓ", "İ", "ſ",
+      "\u212AEY", "ÀB", null).toDF("v")
+    for (icu <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.icu.caseMappings.enabled", icu)
+      try {
+        val got = in.select(col("v"), lower(col("v")),
+            CleanFns.boolValue(col("v")), CleanFns.boolResidual(col("v")))
+          .as[(String, String, Option[Boolean], Option[String])].collect().toSeq
+        for ((v, low, b, r) <- got) {
+          val want = low match {
+            case "yes" => (Some(true), None)
+            case "no" => (Some(false), None)
+            case _ => (None, Option(low))
+          }
+          assert((b, r) == want, s"icu=$icu, v=$v: lower() is $low")
+        }
+      } finally spark.conf.unset("spark.sql.icu.caseMappings.enabled")
+    }
+  }
+
   test("miscValEdits: the reference's one-off value rules (incl. the " +
     "deliberate kerb typo)") {
     def m(k: String, v: String): String =

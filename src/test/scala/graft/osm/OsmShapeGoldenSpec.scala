@@ -216,21 +216,22 @@ class OsmShapeGoldenSpec extends SparkSpec {
     }
   }
 
-  test("a node whose lat is empty or not a number fails the read, naming " +
-    "the number") {
+  test("a node whose lat is empty or not a number reads with a null pos, " +
+    "and the audit's violations flag it, not the read") {
     for (bad <- Seq("", "abc")) {
       withTempDir("osmbadlat") { dir =>
         val xml = java.nio.file.Paths.get(dir, "osmbadlat.osm")
         Files.write(xml, ("<osm version=\"0.6\">\n" +
-          s"""  <node id="1" lat="$bad" lon="2"/>\n</osm>\n""").getBytes("UTF-8"))
-        val e = intercept[Exception](
-          OsmXmlSource.collection(spark, xml.toString).collect())
-        val messages = Iterator.iterate[Throwable](e)(_.getCause)
-          .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toList
-        assert(messages.exists(_.contains(s"""Unparseable number: "$bad"""")),
-          messages.mkString(" / "))
+          s"""  <node id="1" lat="$bad" lon="2"/>\n""" +
+          "  <node id=\"2\" lat=\"1.5\" lon=\"2\"/>\n</osm>\n").getBytes("UTF-8"))
+        val docs = OsmXmlSource.collection(spark, xml.toString)
+        val pos = docs.select("_id", "pos").collect()
+          .map(r => r.getString(0) -> Option(r.getSeq[Double](1))).toMap
+        assert(pos == Map("1" -> None, "2" -> Some(Seq(1.5, 2.0))), s"lat=\"$bad\": $pos")
+        val flagged = OsmAudit.violations(docs).collect()
+          .map(r => (r.getString(0), r.getString(1))).toSeq
+        assert(flagged == Seq(("1", "node")), s"lat=\"$bad\": $flagged")
       }
     }
   }
 }
-
