@@ -48,9 +48,9 @@ object GraphOps {
   private val edgeMemo = Memo[EdgeArtifacts]("lineitem")
 
   /** The once-per-corpus-version graph artifacts every co-purchase
-    * query shares (VERDICT r13 #1: gr2 paid a `count()` + a bloom
-    * `head()` over its persisted directed relation EVERY run, and
-    * gr2/gr3/gr4/gr6/gr7 each rebuilt the same degree table):
+    * query shares, so no query pays a `count()` or a bloom `head()`
+    * over its own relation per run, and no query rebuilds the degree
+    * table:
     *   - `edges`   — the distinct (pa < pb) edge list, checkpointed
     *   - `nEdges`  — its count, taken once over the checkpoint
     *   - `degrees` — the (p, deg) node-degree table, checkpointed
@@ -65,57 +65,6 @@ object GraphOps {
     * discipline — and all are edge-/node-sized, never corpus-sized. */
   private[graft] case class EdgeArtifacts(edges: DataFrame, nEdges: Long,
       degrees: DataFrame, bloom: Array[Byte], symEdges: DataFrame)
-
-  /** Per-query scratch-cache registry (VERDICT r15 #3/#4). Several
-    * graph queries persist transient edge-/node-sized frames that the
-    * returned LAZY plan consumes at the caller's materialization, so
-    * the block cannot release inside the query body without forcing
-    * an extra materialization of a node-sized result. Instead of a
-    * comment-documented leak, every such persist now has a REGISTERED
-    * OWNER: each graph query's entry first releases whatever the
-    * previous one left behind in the same session, so at most one
-    * query's scratch is resident per session, and a long-lived driver
-    * can release eagerly via [[releaseScratch]]. The registry is keyed
-    * by session: a graph query in one session never unpersists
-    * another session's scratch. Bench's per-query clearCache subsumes
-    * this; the registry covers every other caller. Queries whose results
-    * materialize eagerly inside the body (gr5/gr7/gr8) release their
-    * own scratch and never register.
-    *
-    * USAGE CONTRACT (ADVICE r16): because release happens at the NEXT
-    * graph query's plan-BUILD time, [[queries]] assumes the
-    * build-then-materialize, one-query-at-a-time discipline every
-    * in-repo caller follows (Verify, Bench, the specs): materialize
-    * (or abandon) one graph query's result before BUILDING the next,
-    * from one thread per session. A caller that interleaves builds —
-    * build gr1's plan, build gr6's plan, then materialize gr1 — stays
-    * CORRECT (an unpersisted block recomputes via lineage from the
-    * checkpointed memo artifacts) but re-pays the multi-consumer
-    * derivation the persist existed to amortize; a caller that
-    * materializes two graph queries concurrently on one session can
-    * additionally race a release against a running scan, again
-    * recompute-correct but unamortized. Concurrent drivers should
-    * serialize graph queries or call [[releaseScratch]] themselves at
-    * known-quiet points. */
-  private val scratch = scala.collection.mutable.Map
-    .empty[SparkSession, scala.collection.mutable.ArrayBuffer[DataFrame]]
-
-  private def registerScratch(df: DataFrame): DataFrame = scratch.synchronized {
-    scratch.getOrElseUpdate(df.sparkSession, scala.collection.mutable.ArrayBuffer.empty) += df
-    df
-  }
-
-  /** Release every scratch block the last graph query of `s` registered. */
-  private[graft] def releaseScratch(s: SparkSession): Unit = scratch.synchronized {
-    scratch.remove(s).foreach(_.foreach(_.unpersist(false)))
-  }
-
-  /** Entry wrapper: every registered graph query releases its
-    * predecessor's scratch in the same session before building its
-    * own plan. */
-  private def owned(f: (SparkSession, String) => DataFrame)
-      : (SparkSession, String) => DataFrame =
-    (s, d) => { releaseScratch(s); f(s, d) }
 
   /** The shared co-purchase artifacts — see [[edgeMemo]]. Bench primes
     * them as the `memo_copurchase_edges` line so their one-time cost
@@ -172,7 +121,7 @@ object GraphOps {
       }
       // the census count is one in-memory pass over the fresh
       // checkpoint; it then sizes the bloom, so neither consumers nor
-      // the sketch ever re-count the relation (VERDICT r13 #1)
+      // the sketch ever re-count the relation
       val n = Memo.timed("memo_copurchase", "count")(e.count())
       System.err.println(
         s"[graft]   memo_copurchase/edges.n          $n " +
@@ -194,9 +143,9 @@ object GraphOps {
       }
       // the sketch build is one distributed aggregation (no key
       // collect), via stat.bloomFilter so bits are sized optimally
-      // from (n, fpp). CAUTION, measured by the r14 ×100 probe: every
-      // bloom build in Spark 4 (stat.bloomFilter delegates to
-      // bloom_filter_agg) silently CLAMPS its sketch at
+      // from (n, fpp). CAUTION, measured at ×100: every bloom build in
+      // Spark 4 (stat.bloomFilter delegates to bloom_filter_agg)
+      // silently CLAMPS its sketch at
       // spark.sql.optimizer.runtime.bloomFilter.maxNumItems/maxNumBits
       // — at the 64M-bit default a 120M-edge filter saturates to
       // fpp ≈ 1 and prunes NOTHING (gr2's closing join ate all 4.1B
@@ -205,23 +154,28 @@ object GraphOps {
       // wrong answers — the exact join decides), which is the
       // documented 10¹²-edge posture in SCALE.md.
       val bf = Memo.timed("memo_copurchase", "bloom") {
-        // cap the PARTIAL-sketch count (r15, measured by the per-step
-        // profile at ×100): every scan task materializes its own
-        // full-size partial sketch — optimalNumOfBits(n, 0.03)/8
-        // bytes, ~110 MB at 120M edges — so 32 tasks allocated,
-        // serialized, shuffled and OR-merged 3.5 GB for ONE final
-        // 110 MB filter (48.9 s, ≈ the whole edge build). The
-        // checkpointed blocks coalesce WITHOUT a shuffle; one task
-        // per ~16M keys keeps the putLong scan parallel (~50 ns/key
-        // ⇒ ≤ ~1 s/task) while merge volume stops growing with the
-        // partition count. At sf ladders this collapses to one task —
-        // correct, the sketch is ~1 MB there.
-        val nParts = math.max(1L, math.min(
-          s.sparkContext.defaultParallelism.toLong,
-          (math.max(n, 1L) + (16L << 20) - 1) / (16L << 20))).toInt
-        val bfFilter = e.coalesce(nParts)
-          .select(xxhash64(col("pa"), col("pb")).as("k"))
-          .stat.bloomFilter("k", math.max(n, 1L), 0.03)
+        // bloom_filter_agg over zero rows returns NULL, not an empty
+        // sketch, so an empty edge list gets its (empty) filter here
+        val bfFilter =
+          if (n == 0L) org.apache.spark.util.sketch.BloomFilter.create(1L, 0.03)
+          else {
+            // cap the PARTIAL-sketch count, measured at ×100: every scan
+            // task materializes its own full-size partial sketch —
+            // optimalNumOfBits(n, 0.03)/8 bytes, ~110 MB at 120M edges —
+            // so 32 tasks allocated, serialized, shuffled and OR-merged
+            // 3.5 GB for ONE final 110 MB filter (48.9 s, ≈ the whole
+            // edge build). The checkpointed blocks coalesce WITHOUT a
+            // shuffle; one task per ~16M keys keeps the putLong scan
+            // parallel (~50 ns/key ⇒ ≤ ~1 s/task) while merge volume
+            // stops growing with the partition count. At sf ladders
+            // this collapses to one task — the sketch is ~1 MB there.
+            val nParts = math.max(1L, math.min(
+              s.sparkContext.defaultParallelism.toLong,
+              (n + (16L << 20) - 1) / (16L << 20))).toInt
+            e.coalesce(nParts)
+              .select(xxhash64(col("pa"), col("pb")).as("k"))
+              .stat.bloomFilter("k", n, 0.03)
+          }
         val bos = new java.io.ByteArrayOutputStream()
         bfFilter.writeTo(bos)
         bos.toByteArray
@@ -247,17 +201,17 @@ object GraphOps {
     artifacts(s, d).edges
 
   /** Distinct bipartite edges with both endpoint degrees attached —
-    * built once per query, reused by every push round. */
+    * built once per query, reused by every push round. Both rounds
+    * read it inside the caller's one materialization, so it persists
+    * and the caller's `spark.catalog.clearCache()` releases it. */
   private def edges(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // NO-GO (r16, measured): attaching degrees via partial-agged
-    // count + join instead of the two windows reads better on paper
-    // (no full-relation sorts) but needs the base relation persisted
-    // for its three consumers, and that extra materialization pass
-    // cost more than both window sorts at every tested shape
-    // (standalone honest-cold 2.90 → 4.47 s at sf0.1). The window
-    // form streams one materialization through two exchanges.
-    registerScratch(Tables.orders(s, d)
+    // NO-GO, measured: attaching degrees by a partial-agged count +
+    // join needs the base relation persisted for three consumers, and
+    // that extra pass cost more than both window sorts (2.90 → 4.47 s
+    // at sf0.1). The window form streams one materialization through
+    // two exchanges.
+    Tables.orders(s, d)
       .select(col("o_orderkey"), col("o_custkey").as("c"))
       .join(Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_suppkey").as("sup")),
@@ -266,7 +220,7 @@ object GraphOps {
       .distinct()
       .withColumn("dc", count(lit(1)).over(Window.partitionBy(col("c"))))
       .withColumn("ds", count(lit(1)).over(Window.partitionBy(col("sup"))))
-      .persist(StorageLevel.MEMORY_AND_DISK))
+      .persist(StorageLevel.MEMORY_AND_DISK)
   }
 
   /** gr1 — two integer-PageRank push rounds (cust→supp→cust), final
@@ -319,11 +273,13 @@ object GraphOps {
       .join(deg.select(col("p").as("pb"), col("deg").as("db")), Seq("pb"))
     val aFirst = col("da") < col("db") ||
       (col("da") === col("db") && col("pa") < col("pb"))
-    val dir = registerScratch(withDeg.select(
+    // two consumers (the wedge kernel and the closing join) in one
+    // materialization; the caller's clearCache releases it
+    val dir = withDeg.select(
         when(aFirst, col("pa")).otherwise(col("pb")).as("u"),
         when(aFirst, col("pb")).otherwise(col("pa")).as("v"),
         when(aFirst, col("db")).otherwise(col("da")).as("dv"))
-      .persist(StorageLevel.MEMORY_AND_DISK)) // wedge kernel + closing join
+      .persist(StorageLevel.MEMORY_AND_DISK)
     // The wedge stream dwarfs the edge list (sf0.1: 41M oriented
     // wedges vs 1.2M edges, ~4.6% closing into triangles), so
     // shuffling every wedge to the exact closing join is the
@@ -580,14 +536,13 @@ object GraphOps {
     val nonEdges =
       if (bcastAnti) cn.join(broadcast(edgesAC), Seq("a", "c"), "left_anti")
       else {
-        // persist the counted candidates BEFORE the bloom split (r15,
-        // the gr3 regression bisect): the definite and settled
-        // branches are both downstream of this aggregate, and nothing
-        // guaranteed the two branches shared its exchange — the
-        // formatted plan showed the entire wedge stream enumerated
-        // once per branch. One materialization, both filters read it
-        // memory-locally.
-        val cnP = registerScratch(cn.persist(StorageLevel.MEMORY_AND_DISK))
+        // persist the counted candidates BEFORE the bloom split: both
+        // branches read this aggregate, nothing makes them share its
+        // exchange, and a regression bisect found the formatted plan
+        // enumerating the whole wedge stream once per branch. One
+        // materialization, both filters read it memory-locally, and
+        // the caller's clearCache releases it.
+        val cnP = cn.persist(StorageLevel.MEMORY_AND_DISK)
         val isMaybeEdge = call_function("might_contain", lit(art.bloom),
           xxhash64(col("a"), col("c")))
         cnP.filter(!isMaybeEdge)
@@ -803,20 +758,19 @@ object GraphOps {
     *
     * Plan at 100 TB: degrees are one partial+final agg over the
     * memoized edge list (narrow id/long rows); the bucket agg
-    * collapses to ≤64 rows which persist for the share attachment —
-    * nothing downstream of the degree agg depends on graph size. */
-  private def gr6(s: SparkSession, d: String): DataFrame = {
-    val b = registerScratch(artifacts(s, d).degrees // memoized degrees
+    * collapses to ≤64 rows and the share's total is a window over
+    * them (the w12/w17 idiom) — nothing downstream of the degree agg
+    * depends on graph size, and nothing persists. */
+  private def gr6(s: SparkSession, d: String): DataFrame =
+    artifacts(s, d).degrees // memoized degrees
       .select(expr("CAST(length(bin(deg)) - 1 AS BIGINT)").as("bucket"),
         col("deg"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_nodes"), sum(col("deg")).as("deg_mass"))
-      .persist(StorageLevel.MEMORY_AND_DISK)) // ≤64 rows: total + share
-    val tot = b.agg(sum(col("n_nodes")).as("tot"))
-    b.crossJoin(broadcast(tot))
+      .withColumn("tot", sum(col("n_nodes"))
+        .over(org.apache.spark.sql.expressions.Window.partitionBy()))
       .select(col("bucket"), col("n_nodes"), col("deg_mass"),
         expr("(1000000 * n_nodes) div tot").as("share_ppm"))
-  }
 
   /** gr7's peel threshold quantile and round budget. */
   private val GR7_Q = 0.25
@@ -992,14 +946,14 @@ object GraphOps {
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "gr8_hop_histogram" -> owned(gr8 _),
-    "gr7_kcore" -> owned(gr7 _),
-    "gr6_degree_hist" -> owned(gr6 _),
-    "gr3_link_predict" -> owned(gr3 _),
-    "gr1_pagerank" -> owned(gr1 _),
-    "gr2_triangles" -> owned(gr2 _),
-    "gr4_assortativity" -> owned(gr4 _),
-    "gr5_communities" -> owned(gr5 _)
+    "gr8_hop_histogram" -> gr8 _,
+    "gr7_kcore" -> gr7 _,
+    "gr6_degree_hist" -> gr6 _,
+    "gr3_link_predict" -> gr3 _,
+    "gr1_pagerank" -> gr1 _,
+    "gr2_triangles" -> gr2 _,
+    "gr4_assortativity" -> gr4 _,
+    "gr5_communities" -> gr5 _
   )
 
   /** gr7's oracle: the same peel unrolled as [[GR7_ROUNDS]] generated

@@ -552,31 +552,16 @@ object WindowOps {
     * before the 6-dp round. Zero-variance series degenerate to NULL
     * identically on both sides.
     *
-    * Scale shape: one pruned type-filtered scan aggregates to
-    * (type, day) immediately — the fn1/fn2 adjudication; everything
-    * after (calendar explode, ±3 lag replication, per-lag moments)
-    * runs on days-sized data. */
+    * Scale shape: the two-series [[dailyCalendar]] as a local relation
+    * (bounded by elapsed days, see there); the lag pairing self-joins
+    * it against a broadcast 7-row lag dimension — ts5's shape. */
   private def ts2(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     import s.implicits._
-    val byDay = Tables.events(s, d)
-      .filter(col("event_type").isin("view", "purchase"))
-      .select(col("event_type"),
-        expr(s"unix_micros(ts) div $W10_DAY_US").as("day"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(count(lit(1)).as("n"))
-      .persist(StorageLevel.MEMORY_AND_DISK) // span + both series
-    val cal = byDay.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
-      .select(explode(expr("sequence(d0, d1)")).as("day"))
-    def series(t: String, as: String) = cal
-      .join(byDay.filter(col("event_type") === t)
-        .select(col("day"), col("n").as(as)), Seq("day"), "left")
-      .na.fill(0L, Seq(as))
-    val lags = (-TS2_MAX_LAG to TS2_MAX_LAG).toList
-    series("view", "x")
-      .crossJoin(broadcast(lags.toDF("lag")))
-      .join(series("purchase", "y")
-          .select(col("day").as("dy"), col("y")),
+    val series = dailyCalendar(s, d, Seq("view", "purchase"))
+      .map { case (day, n) => (day, n(0), n(1)) }.toDF("day", "x", "y")
+    series.select(col("day"), col("x"))
+      .crossJoin(broadcast((-TS2_MAX_LAG to TS2_MAX_LAG).toList.toDF("lag")))
+      .join(series.select(col("day").as("dy"), col("y")),
         col("dy") === col("day") + col("lag"))
       .groupBy(col("lag"))
       .agg(count(lit(1)).as("n_days"),
@@ -617,19 +602,35 @@ object WindowOps {
     * Bound: ONE pruned scan reduces to (day, count) on the executors,
     * and what comes back is bounded by ELAPSED DAYS, never by data
     * volume — ~365 rows a year, ~3.7k a decade at any corpus size. So
-    * it is collected and densified on the driver, and its eight
+    * it is collected and densified on the driver, and its nine
     * consumers either fold it there (ts3, ts4, ts6, w13, w15) or run
-    * their set-oriented part on it as a local relation (ts5, w14,
+    * their set-oriented part on it as a local relation (ts2, ts5, w14,
     * w16). */
-  private def dailyCalendar(s: SparkSession, d: String): IndexedSeq[(Long, Long)] = {
-    val counts = Tables.events(s, d)
-      .select(expr(s"unix_micros(ts) div $W10_DAY_US").as("day"))
-      .groupBy(col("day")).agg(count(lit(1)).as("x"))
+  private def dailyCalendar(s: SparkSession, d: String): IndexedSeq[(Long, Long)] =
+    dailyCalendar(s, d, Nil).map { case (day, n) => day -> n(0) }
+
+  /** [[dailyCalendar]] with one count per event type in `types`, in
+    * that order, over the span of those types' rows only (ts2's view
+    * and purchase series); an empty `types` counts every event into
+    * one series. */
+  private def dailyCalendar(s: SparkSession, d: String,
+      types: Seq[String]): IndexedSeq[(Long, IndexedSeq[Long])] = {
+    val events = Tables.events(s, d)
+    val (rows, counts) =
+      if (types.isEmpty) (events, Seq(count(lit(1))))
+      else (events.filter(col("event_type").isin(types: _*)),
+        types.map(t => count(when(col("event_type") === t, lit(1)))))
+    val byDay = rows
+      .groupBy(expr(s"unix_micros(ts) div $W10_DAY_US").as("day"))
+      .agg(counts.head, counts.tail: _*)
       .collect().filterNot(_.isNullAt(0))
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    if (counts.isEmpty) IndexedSeq.empty
-    else (counts.keys.min to counts.keys.max)
-      .map(day => day -> counts.getOrElse(day, 0L))
+      .map(r => r.getLong(0) -> counts.indices.map(i => r.getLong(i + 1))).toMap
+    if (byDay.isEmpty) IndexedSeq.empty
+    else {
+      val none = IndexedSeq.fill(counts.size)(0L)
+      (byDay.keys.min to byDay.keys.max)
+        .map(day => day -> byDay.getOrElse(day, none))
+    }
   }
 
   /** Integer EWMA at α = 1/4 (ts3's smoother, ts6's trend):

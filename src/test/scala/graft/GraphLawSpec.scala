@@ -132,8 +132,15 @@ class GraphLawSpec extends SparkSpec {
     assert(split.nonEmpty)
     assert(rows(bcast = true) == split,
       "gr3 broadcast-anti diverges from the bloom-split form")
-    GraphOps.releaseScratch(spark) // the split path registered its cn persist
-    spark.catalog.clearCache()
+    spark.catalog.clearCache() // the split path persisted its cn
+  }
+
+  test("a graph query's formatted plan explains on the engine's " +
+    "session: gr3's split path shows the bloom probe it filters by") {
+    val plan = GraphOps.gr3TopK(spark, sf, bcastAnti = false).queryExecution
+      .explainString(org.apache.spark.sql.execution.FormattedMode)
+    spark.catalog.clearCache() // building the split path persisted its cn
+    assert(plan.contains("might_contain"), plan)
   }
 
   test("gr3's broadcast gate prices an edge at the hash-relation cost, " +
@@ -141,17 +148,17 @@ class GraphLawSpec extends SparkSpec {
     "the bloom-split path") {
     val nEdges = GraphOps.artifacts(spark, sf).nEdges
     assert(nEdges > 0 && GraphOps.GR3_BCAST_BYTES_PER_EDGE > 32L)
-    GraphOps.releaseScratch(spark)
+    spark.catalog.clearCache()
     val persisted = () => spark.sparkContext.getPersistentRDDs.keySet.toSet
     val base = persisted()
-    // only the split path persists (and registers) its pair counts
+    // only the split path persists its pair counts
     val split = under(
       "spark.sql.autoBroadcastJoinThreshold" -> (32L * nEdges).toString) {
       SparkEntry.queries("gr3_link_predict")(spark, sf)
         .queryExecution.toRdd.count()
       (persisted() -- base).nonEmpty
     }
-    GraphOps.releaseScratch(spark)
+    spark.catalog.clearCache()
     assert(split, "gr3 broadcast an edge list priced over the threshold")
   }
 

@@ -1,23 +1,21 @@
 package graft
 
-import graft.operators.GraphOps
-
-/** The graph scratch-cache protocol (VERDICT r15 #3/#4): several
-  * graph queries persist transient edge-/node-sized frames that
-  * their returned lazy plans consume at the caller's
-  * materialization. The protocol replaces the r15 comment-documented
-  * leak: every such persist is REGISTERED, the next graph query's
-  * entry releases its predecessor's blocks, and a long-lived driver
-  * can release eagerly via [[GraphOps.releaseScratch]]. Queries that
-  * materialize their result inside the body (gr5/gr7/gr8) release
-  * their own scratch and leave nothing registered.
+/** Who releases the graph family's per-query scratch. gr1, gr2 and
+  * gr3's bloom-split path persist an edge-/node-sized frame that the
+  * returned LAZY plan reads more than once at the caller's
+  * materialization; like every other persisting query they leave it
+  * for the caller's `spark.catalog.clearCache()` (ScratchLeakSpec pins
+  * the list). Building a graph query never touches another query's
+  * blocks, so graph queries may be built, interleaved and materialized
+  * concurrently on one session. Queries that materialize their result
+  * inside the body (gr5/gr7/gr8) release their own scratch.
   *
   * Observation point: `sc.getPersistentRDDs` — unpersist(false)
   * removes the entry from the map synchronously (only block deletion
   * is async), so the assertions are race-free. The memoized edge
   * artifacts (checkpointed edges/degrees) are corpus-version state
-  * with a registered owner of their own (the edge memo) and form the
-  * BASELINE the deltas are measured against.
+  * owned by the edge memo and form the BASELINE the deltas are
+  * measured against.
   */
 class GraphScratchSpec extends SparkSpec {
 
@@ -30,82 +28,53 @@ class GraphScratchSpec extends SparkSpec {
   private def persistedIds: Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 
-  test("lazy graph queries register their scratch persists and " +
-    "releaseScratch returns the storage catalog to baseline") {
+  test("building other graph queries leaves a materialized graph " +
+    "query's scratch resident; the caller's clearCache releases it") {
     primeMemo("memo_copurchase_edges", sf)
-    GraphOps.releaseScratch(spark)
+    spark.catalog.clearCache()
     val base = persistedIds
-    // every lazy-plan query that persists scratch: after a standalone
-    // run the blocks exist (registered, resident), after release the
-    // catalog is byte-for-byte back to the memo baseline
-    for (q <- Seq("gr1_pagerank", "gr2_triangles", "gr6_degree_hist")) {
-      run(q)
-      assert((persistedIds -- base).nonEmpty,
-        s"$q should have registered scratch persists while resident")
-      GraphOps.releaseScratch(spark)
-      assert((persistedIds -- base).isEmpty,
-        s"$q leaked persists past releaseScratch: ${persistedIds -- base}")
+    run("gr2_triangles")
+    val gr2 = persistedIds -- base
+    assert(gr2.nonEmpty, "gr2 should leave its oriented edges persisted")
+    // gr1 persists its own edges while building; gr6 persists nothing
+    for (q <- Seq("gr1_pagerank", "gr6_degree_hist")) {
+      SparkEntry.queries(q)(spark, sf)
+      assert(gr2.subsetOf(persistedIds),
+        s"building $q released gr2's scratch: ${gr2 -- persistedIds}")
     }
-    // gr3 (r18): the broadcast-anti path consumes its pair counts
-    // exactly once and persists NOTHING — the cn persist exists only
-    // on the bloom-split path (edges past the broadcast threshold),
-    // where it is registered and released like the rest
-    run("gr3_link_predict")
+    spark.catalog.clearCache()
     assert((persistedIds -- base).isEmpty,
-      s"gr3's bcast-anti path should persist nothing: ${persistedIds -- base}")
-    GraphOps.gr3TopK(spark, sf, bcastAnti = false)
-      .queryExecution.toRdd.count()
-    assert((persistedIds -- base).nonEmpty,
-      "gr3's split path should register its cn persist while resident")
-    GraphOps.releaseScratch(spark)
-    assert((persistedIds -- base).isEmpty,
-      s"gr3 split path leaked past releaseScratch: ${persistedIds -- base}")
+      s"graph scratch is not clearCache-reachable: ${persistedIds -- base}")
   }
 
-  test("the next graph query's entry releases its predecessor's " +
-    "scratch (the owned-entry handshake)") {
+  test("gr1 and gr2 materialized from two threads on one session give " +
+    "their single-thread answers") {
     primeMemo("memo_copurchase_edges", sf)
-    GraphOps.releaseScratch(spark)
-    val base = persistedIds
-    run("gr2_triangles")
-    assert((persistedIds -- base).nonEmpty,
-      "gr2 should leave registered scratch resident")
-    // gr4 persists nothing itself, so the only storage-catalog effect
-    // of entering it is the release of gr2's registered blocks
-    run("gr4_assortativity")
-    assert((persistedIds -- base).isEmpty,
-      s"gr4's entry did not release gr2's scratch: ${persistedIds -- base}")
-  }
-
-  test("the registry is per session: a graph query in a second session " +
-    "leaves the first session's registered scratch in place") {
-    primeMemo("memo_copurchase_edges", sf)
-    GraphOps.releaseScratch(spark)
-    val base = persistedIds
-    run("gr2_triangles")
-    val first = persistedIds -- base
-    assert(first.nonEmpty, "gr2 should leave registered scratch resident")
-    val other = spark.newSession()
-    try {
-      // gr2 registers the second session's own scratch, gr4's entry
-      // releases it: neither touches the first session's blocks
-      for (q <- Seq("gr2_triangles", "gr4_assortativity")) {
-        SparkEntry.queries(q)(other, sf).queryExecution.toRdd.count()
-        assert(first.subsetOf(persistedIds),
-          s"$q in a second session released the first session's scratch: " +
-            s"${first -- persistedIds}")
-      }
-    } finally GraphOps.releaseScratch(other)
-    assert(first.subsetOf(persistedIds))
-    GraphOps.releaseScratch(spark)
-    assert((persistedIds & first).isEmpty,
-      s"releasing the first session left its scratch: ${persistedIds & first}")
+    def answer(q: String): Seq[String] =
+      SparkEntry.queries(q)(spark, sf).collect().map(_.toString).toSeq.sorted
+    val qs = Seq("gr1_pagerank", "gr2_triangles")
+    val alone = qs.map(q => q -> answer(q)).toMap
+    spark.catalog.clearCache()
+    val got = new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
+    val failed = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = qs.map { q =>
+      new Thread(() =>
+        try got.put(q, answer(q)) catch { case t: Throwable => failed.add(t) })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    spark.catalog.clearCache()
+    assert(failed.isEmpty, s"a concurrent graph query failed: ${failed.peek()}")
+    for (q <- qs) {
+      assert(alone(q).nonEmpty)
+      assert(got.get(q) == alone(q), s"$q differs when run beside the other")
+    }
   }
 
   test("self-releasing queries (gr5/gr7/gr8) leave the catalog clean " +
     "modulo gr5's own materialized result") {
     primeMemo("memo_copurchase_edges", sf)
-    GraphOps.releaseScratch(spark)
+    spark.catalog.clearCache()
     val base = persistedIds
     for (q <- Seq("gr7_kcore", "gr8_hop_histogram")) {
       run(q)
@@ -114,11 +83,11 @@ class GraphScratchSpec extends SparkSpec {
     }
     // gr5 returns an eagerly PERSISTED histogram: exactly ONE net
     // block — the result the caller holds — and no scratch. It must
-    // be a CacheManager persist, not a localCheckpoint (ADVICE r16:
-    // checkpoint blocks are invisible to spark.catalog.clearCache(),
-    // so Bench's three interleaved passes accumulated three
-    // unreleasable histogram RDDs per round) — so clearCache() must
-    // return the catalog to baseline.
+    // be a CacheManager persist, not a localCheckpoint: checkpoint
+    // blocks are invisible to spark.catalog.clearCache(), so Bench's
+    // interleaved passes would accumulate one unreleasable histogram
+    // RDD per pass — so clearCache() must return the catalog to
+    // baseline.
     run("gr5_communities")
     val net = persistedIds -- base
     assert(net.size <= 1, s"gr5 left scratch beyond its result: $net")

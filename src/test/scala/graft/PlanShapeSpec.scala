@@ -897,6 +897,8 @@ class PlanShapeSpec extends SparkSpec {
       "cluster sizes| histogram: k distinct sizes need k(k+1)/2 ≤ " +
       "Σ sizes = |docs in clusters| members, so k = O(√docs) narrow rows"),
     "dq4_benford" -> "total window over the 9-row digit relation",
+    "gr6_degree_hist" -> ("share total over the ≤64-row log2 degree " +
+      "bucket aggregate"),
     "gr3_link_predict" -> ("wedge-budget cap cumsum over the DEGREE " +
       "HISTOGRAM: k distinct degrees satisfy k(k+1)/2 ≤ Σdeg = 2m, " +
       "so ≤2√m two-long rows (~2·10⁶ at 10¹² edges)"),

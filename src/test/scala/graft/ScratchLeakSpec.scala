@@ -1,21 +1,19 @@
 package graft
 
-import graft.operators.GraphOps
-
-/** Repo-wide scratch-cache ratchet (the VERDICT r15 #3/#4 protocol,
-  * extended from the graph family to every registered query).
+/** Repo-wide scratch-cache ratchet: every registered query's per-query
+  * scratch has one owner, the caller's `spark.catalog.clearCache()`.
   *
   * Two invariants, checked by actually RUNNING all 227 queries
   * standalone at sf0.001 (this is the one suite that materializes the
   * whole surface, ~2-3 min — the price of a total ratchet):
   *
   *  1. **Every per-query scratch block is clearable catalog state.**
-  *     After `releaseScratch(spark)` + `catalog.clearCache()`, no
-  *     non-checkpoint persisted RDD survives — i.e. no query persists
-  *     through the raw RDD API where the SQL cache (and therefore
-  *     Bench's per-query clear, and any caller's clearCache) cannot
-  *     reach it. Checkpointed blocks are exempt: they are either
-  *     corpus-version memo state with an owner ([[graft.Memo]]) or a query's own eagerly-materialized
+  *     After `catalog.clearCache()`, no non-checkpoint persisted RDD
+  *     survives — i.e. no query persists through the raw RDD API
+  *     where the SQL cache (and therefore Bench's per-query clear, and
+  *     any caller's clearCache) cannot reach it. Checkpointed blocks
+  *     are exempt: they are either corpus-version memo state with an
+  *     owner ([[graft.Memo]]) or a query's own eagerly-materialized
   *     result, and lineage truncation makes unpersisting them unsafe
   *     by construction.
   *
@@ -27,31 +25,29 @@ import graft.operators.GraphOps
   *     persisted so the plan computes it once). Each is bounded
   *     well below corpus size by its query's own SCALE.md note. A
   *     NEW query that persists must either self-release (the
-  *     gr5/gr7/gr8 eager posture), register in the graph scratch
-  *     registry, or join this list consciously; a query that stops
-  *     persisting must leave it, so the list can only shrink by
-  *     being earned.
+  *     gr5/gr7/gr8 eager posture) or join this list consciously; a
+  *     query that stops persisting must leave it, so the list can
+  *     only shrink by being earned.
   */
 class ScratchLeakSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
   /** Queries whose lazy plans leave (clearable, bounded) scratch
-    * persists at the caller — discovered by exhaustive audit at r16
-    * and pinned exactly. The graph family's INTERNAL scratch is
-    * absent because it has a registered owner (released before this
-    * spec counts); gr7/gr8/pipe6-class queries are absent because
-    * they materialize eagerly and release in-query. gr5 is PRESENT
-    * as of r17: its eagerly-materialized result rides a persist
-    * (ADVICE r16 — a localCheckpoint here was invisible to
-    * clearCache and leaked per bench pass), and unlike gr7/gr8's
-    * constant-bounded outputs the community histogram is
-    * |labels|-sized (node-bounded, too big to collect on principle),
-    * so the block stays for the caller's clearCache — exactly what
-    * this list exists to pin. */
+    * persists at the caller — discovered by exhaustive audit and
+    * pinned exactly. gr1 and gr2 persist the edge relation their
+    * lazy plan reads twice; gr3 persists only past the broadcast
+    * gate, so it is absent at this scale. gr7/gr8/pipe6-class queries
+    * are absent because they materialize eagerly and release
+    * in-query. gr5 is present: its eagerly-materialized result rides
+    * a persist (a localCheckpoint is invisible to clearCache and
+    * leaked per bench pass), and unlike gr7/gr8's constant-bounded
+    * outputs the community histogram is |labels|-sized (node-bounded,
+    * too big to collect on principle), so the block stays for the
+    * caller's clearCache — exactly what this list exists to pin. */
   private val scratchQueries: Set[String] = Set(
     "an1_kanon", "an3_tcloseness", "an4_ldp_freq", "att2_linear_credit",
-    "gr5_communities",
+    "gr1_pagerank", "gr2_triangles", "gr5_communities",
     "cls4_calibrated_filter", "cur1_curriculum", "d11_line_dedup",
     "dq1_fk_orphans", "dq3_drift", "dsir1_importance",
     "emb4_top_direction", "emb5_detop", "er1_fuzzy_block",
@@ -61,7 +57,7 @@ class ScratchLeakSpec extends SparkSpec {
     "od1_outliers", "pipe4_domain_tilt", "pipe9_funnel",
     "ppl1_lm_bucket", "qr1_batch_bm25", "qr2_prf_expand", "qr3_mrr",
     "qr4_ndcg", "qr5_champion_recall", "rrf1_hybrid_fuse",
-    "s6_ann_recall", "ts1_gapfill", "ts2_xcorr",
+    "s6_ann_recall", "ts1_gapfill",
     "voc3_coverage_curve", "w10_retention",
     "x10_tfidf", "x11_bm25", "x12_bigram_lm",
     "x13_source_overlap", "x16_winnow", "x19_collocation_lift",
@@ -74,13 +70,11 @@ class ScratchLeakSpec extends SparkSpec {
     // memo state up front so its checkpoint blocks join the baseline
     Seq("memo_copurchase_edges", "memo_pipeline_perdoc", "memo_dedup_sigs")
       .foreach(primeMemo(_, sf))
-    GraphOps.releaseScratch(spark)
     spark.catalog.clearCache()
     var base = sc.getPersistentRDDs.keySet.toSet
     val leakers = scala.collection.mutable.SortedSet.empty[String]
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
       fn(spark, sf).queryExecution.toRdd.count()
-      GraphOps.releaseScratch(spark) // the registry owner for graph scratch
       val leaked = sc.getPersistentRDDs.filter { case (id, r) =>
         !base(id) && !r.isCheckpointed }
       if (leaked.nonEmpty) leakers += name
@@ -98,7 +92,7 @@ class ScratchLeakSpec extends SparkSpec {
     val unexpected = leakers.toSet -- scratchQueries
     val retired = scratchQueries -- leakers
     assert(unexpected.isEmpty,
-      s"NEW scratch-leaving queries (self-release, register, or join " +
+      s"NEW scratch-leaving queries (self-release, or join " +
         s"the pinned list with a bound): ${unexpected.mkString(", ")}")
     assert(retired.isEmpty,
       s"queries no longer leave scratch — shrink the pinned list: " +

@@ -99,6 +99,39 @@ class SourceInvariantSpec extends AnyFunSuite {
       s"Future/ExecutionContext outside the step runner: ${users - "Memo.scala"}")
   }
 
+  /** A mutable map keyed on a `SparkSession` (alone or first in a
+    * tuple key): the shape of a hand-rolled per-session registry. */
+  private val sessionMap =
+    """\b(mutable\.\w*Map|concurrent\.\w*Map|TrieMap|\w*HashMap)(\s*\.\s*empty)?\s*\[\s*\(?\s*(\w+\.)*SparkSession\b""".r
+
+  test("the session-map pattern sees every mutable session-keyed map " +
+    "and no other map") {
+    val maps = Seq(
+      "scala.collection.mutable.Map\n    .empty[SparkSession, ArrayBuffer[DataFrame]]",
+      "mutable.HashMap.empty[SparkSession, Long]",
+      "new java.util.WeakHashMap[SparkSession, String]()",
+      "new ConcurrentHashMap[org.apache.spark.sql.SparkSession, V]",
+      "TrieMap.empty[(SparkSession, String, Long), V]",
+      "mutable.Map[(SparkSession, String), DataFrame]()")
+    maps.foreach(m => assert(sessionMap.findFirstIn(m).isDefined, s"missed: $m"))
+    val others = Seq("val queries: Map[String, (SparkSession, String) => DataFrame]",
+      "mutable.HashMap.empty[String, Long]", "TrieMap.empty[(String, Long), SparkSession]",
+      "def get(s: SparkSession, d: String)", "Map.empty[SparkSession, Long]")
+    others.foreach(o => assert(sessionMap.findFirstIn(o).isEmpty, s"false hit: $o"))
+  }
+
+  test("a SparkSession-keyed mutable map is declared only in Memo.scala — " +
+    "session-scoped state goes through the one memo registry, and " +
+    "per-query scratch is released by the caller's clearCache, so a " +
+    "second hand-rolled session registry fails here by name") {
+    assert(mainRoot.isDirectory, s"source root not found at ${mainRoot.getAbsolutePath}")
+    val users = scalaSources(mainRoot)
+      .filter(f => sessionMap.findFirstIn(code(f)).isDefined)
+      .map(_.getName).toSet
+    assert(users == Set("Memo.scala"),
+      s"session-keyed mutable maps outside the memo registry: ${users - "Memo.scala"}")
+  }
+
   /** A parquet read: `.read` then any option/schema calls (arguments
     * nested up to three parentheses deep), ending in `.parquet(` or
     * `.format("parquet")`, across line breaks. */
